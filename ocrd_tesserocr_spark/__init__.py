@@ -14,7 +14,7 @@ same query semantics over HTML payloads instead of images:
                           parquet snapshot dirs in this sandbox)
 
 Design stance (SURVEY.md section 7): one DataFrame pipeline, one Arrow-batched
-extraction kernel inside ``mapInPandas``, relational operators for everything
+extraction kernel inside ``mapInArrow``, relational operators for everything
 above the per-document loop.  No per-row Python at the Spark API surface.
 """
 

@@ -1,4 +1,4 @@
-"""Arrow-batched extraction kernel for ``mapInPandas``.
+"""Arrow-batched extraction kernel for ``mapInArrow``.
 
 The reference holds its entire recognition loop inside one C++ call per
 segment (``Recognize()``, /root/reference/ocrd_tesserocr/recognize.py:486);
@@ -15,21 +15,7 @@ long-lived Python worker processes Spark keeps per executor.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
-
-from .oracle import DEFAULT_PARAMS, ExtractParams, extract_document
-
-_COLUMNS = [
-    "url",
-    "text",
-    "conf",
-    "blocks",
-    "features",
-    "failed",
-    "partition_id",
-]
+from .oracle import ExtractParams, extract_document
 
 
 def _partition_id() -> int:
@@ -42,132 +28,32 @@ def _partition_id() -> int:
         return -1
 
 
-def extract_batches(
-    it: Iterator[pd.DataFrame], params: ExtractParams = DEFAULT_PARAMS
-) -> Iterator[pd.DataFrame]:
-    """pages batches -> extracted batches (EXTRACTED_SCHEMA).
-
-    One output row per input row; malformed payloads become failure rows
-    (failed=True), never exceptions — failure accounting feeds lineage.
-    """
-    pid = _partition_id()
-    for pdf in it:
-        out = {c: [] for c in _COLUMNS}
-        htmls = pdf["html"].tolist()
-        urls = pdf["url"].tolist()
-        for url, html in zip(urls, htmls):
-            rec = extract_document(html, params)
-            out["url"].append(url)
-            out["text"].append(rec["text"])
-            out["conf"].append(rec["conf"])
-            out["blocks"].append(
-                [_block_tuple(b) for b in rec["blocks"]]
-            )
-            out["features"].append(rec["features"])
-            out["failed"].append(rec["failed"])
-            out["partition_id"].append(pid)
-        yield pd.DataFrame(out, columns=_COLUMNS)
-
-
-def _block_tuple(b: dict) -> tuple:
-    """dict -> positional tuple matching BLOCK_STRUCT field order (Arrow
-    struct conversion from pandas is positional-safe with tuples)."""
-    return (
-        b["block_id"],
-        b["kind"],
-        b["order_idx"],
-        b["char_start"],
-        b["char_end"],
-        b["text"],
-        b["conf"],
-        b["text_density"],
-        b["link_density"],
-        b["is_main"],
-        b["model"],
-        [
-            (
-                ln["line_id"],
-                ln["char_start"],
-                ln["char_end"],
-                ln["text"],
-                ln["conf"],
-                [
-                    (
-                        w["word_id"],
-                        w["char_start"],
-                        w["char_end"],
-                        w["text"],
-                        w["conf"],
-                        (
-                            w["style"]["bold"],
-                            w["style"]["italic"],
-                            w["style"]["monospace"],
-                        ),
-                        [
-                            (
-                                g["glyph_id"],
-                                g["char_start"],
-                                g["char_end"],
-                                g["text"],
-                                g["conf"],
-                                [(c["text"], c["conf"]) for c in g["choices"]],
-                            )
-                            for g in w["glyphs"]
-                        ],
-                    )
-                    for w in ln["words"]
-                ],
-            )
-            for ln in b["lines"]
-        ],
-    )
-
-
-def make_extract_fn(params: ExtractParams):
-    """Bind params into a mapInPandas function (facade pattern: the
-    reference's processor subclasses are parameter presets over one core,
-    /root/reference/ocrd_tesserocr/segment.py:17-24).
-
-    Config validation happens HERE, on the driver, before any job
-    launches: a malformed ``extra`` value or rule predicate raises at plan
-    time instead of failing executor tasks (the analogue of the
-    reference's JSON-Schema parameter validation at processor init)."""
-    _validate(params)
-
-    def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        return extract_batches(it, params)
-
-    return fn
-
-
-def _coerce_check(pairs) -> None:
-    from .oracle import _coerce_overrides
-
-    _coerce_overrides(pairs)
-
-
 def _validate(params: ExtractParams) -> None:
-    from .oracle import compile_predicate, resolve_params
+    from .oracle import _coerce_overrides, compile_predicate, resolve_params
 
     resolve_params(params)
     for expr, pairs in params.block_rules:
         compile_predicate(expr)
-        _coerce_check(pairs)
+        _coerce_overrides(pairs)
     for expr, _model in params.model_rules:
         compile_predicate(expr)
 
 
 def make_extract_arrow_fn(params: ExtractParams):
-    """mapInArrow variant: build the output RecordBatch directly with
-    declared Arrow types instead of routing nested structs through pandas
-    object columns.
+    """Bind params into the mapInArrow function (facade pattern: the
+    reference's processor subclasses are parameter presets over one core,
+    ocrd_tesserocr/segment.py:17-24).
 
-    The pandas path's per-row type inference over the nested
-    blocks->lines->words(->glyphs) tree costs ~10x the block-level payload
-    (measured: 13s block vs 147s word on 40k pages); constructing
-    ``pa.array(..., type=...)`` from the oracle's plain dicts keeps the
-    whole conversion in Arrow's C++ builders.  Semantics are identical —
-    both paths serialize the same extract_document output."""
+    Each output RecordBatch is built directly with declared Arrow types
+    (``pa.array(..., type=...)`` from the oracle's plain dicts), so the
+    nested blocks->lines->words(->glyphs) conversion stays in Arrow's C++
+    builders; routing it through pandas object columns cost ~10x on the
+    word level (measured: 13s block vs 147s word on 40k pages).
+
+    Config validation happens HERE, on the driver, before any job
+    launches: a malformed ``extra`` value or rule predicate raises at plan
+    time instead of failing executor tasks (the analogue of the
+    reference's JSON-Schema parameter validation at processor init)."""
     import pyarrow as pa
 
     from pyspark.sql.pandas.types import to_arrow_schema

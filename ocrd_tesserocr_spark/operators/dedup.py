@@ -26,6 +26,7 @@ from ..functions import (
     sql_md5_long,
     sql_md5_mod,
 )
+from ..sources import read_documents, resplit
 
 N_HASHES = 16
 BAND_SIZE = 4
@@ -35,18 +36,6 @@ _A = [((2 * i + 1) * 1103515245) % HASH_P for i in range(N_HASHES)]
 _B = [(i * 12345 + 6789) % HASH_P for i in range(N_HASHES)]
 
 SIMHASH_BITS = 16
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents scan, re-split for CPU-heavy hashing.
-
-    The sandbox parquet is a single row group -> one task; the explicit
-    repartition buys full parallelism for the md5-heavy map.  At
-    production scale the scan already has thousands of splits and this
-    exchange carries only (doc_id, text, lang) — negligible next to the
-    hash work it parallelizes."""
-    df = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return df.repartition(spark.sparkContext.defaultParallelism)
 
 
 # ---------------------------------------------------------------------------
@@ -110,7 +99,7 @@ list_transform(
 # D1 — exact dedup: hash-groupBy on content (keeper = min doc_id)
 # ---------------------------------------------------------------------------
 def q_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = resplit(read_documents(spark, sf_dir))
     return (
         docs.select(hash_long(F.col("text")).alias("content_hash"), "doc_id")
         .groupBy("content_hash")
@@ -132,7 +121,9 @@ FROM documents GROUP BY 1
 # D2 — MinHash signatures (shingle -> minhash; band-join candidates below)
 # ---------------------------------------------------------------------------
 def q_minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir).where(F.size(F.split(F.col("text"), " ")) >= 3)
+    docs = resplit(read_documents(spark, sf_dir)).where(
+        F.size(F.split(F.col("text"), " ")) >= 3
+    )
     with_h = _staged_hs(docs).select("doc_id", "hs")
     sigged = with_h.select("doc_id", *_sig_cols())
     sig_str = F.concat_ws("-", *[F.col(f"s{i}").cast("string") for i in range(N_HASHES)])
@@ -236,7 +227,7 @@ def lsh_candidate_pairs(docs: DataFrame, hs_df: DataFrame | None = None) -> Data
 
 
 def q_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return lsh_candidate_pairs(_docs(spark, sf_dir))
+    return lsh_candidate_pairs(resplit(read_documents(spark, sf_dir)))
 
 
 def _sql_band_selects() -> str:
@@ -277,7 +268,7 @@ def _vote_fn(b: int):
 
 
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = resplit(read_documents(spark, sf_dir))
     words = F.split(F.col("text"), " ")
     hs = F.transform(words, lambda w: hash_mod(w, HASH_P))
     with_h = docs.select("doc_id", hs.alias("hs"))
@@ -327,7 +318,7 @@ SHINGLE_DF_CAP = 64
 
 
 def q_ngram_jaccard_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = resplit(read_documents(spark, sf_dir))
     exploded = _staged_hs(docs).select(
         "doc_id", "lang", F.explode(F.array_distinct("hs")).alias("h")
     )
@@ -437,7 +428,9 @@ JACCARD_THRESHOLD = 0.6
 
 
 def q_near_dedup_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir).where(F.size(F.split(F.col("text"), " ")) >= 3)
+    docs = resplit(read_documents(spark, sf_dir)).where(
+        F.size(F.split(F.col("text"), " ")) >= 3
+    )
     # materialize the shingle table once: it feeds the LSH signature branch
     # AND both verification sides.  localCheckpoint (not persist): blocks
     # are released by the ContextCleaner as soon as the query's DataFrame
@@ -563,7 +556,7 @@ def connected_components(nodes: DataFrame, edges: DataFrame, max_iter: int = 200
 
 
 def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = resplit(read_documents(spark, sf_dir))
     nodes = docs.select("doc_id")
     edges = q_lsh_pairs(spark, sf_dir)
     return connected_components(nodes, edges)
@@ -618,7 +611,7 @@ def q_dup_span_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     # map-side-combined groupBy(doc_id).  explode_outer keeps shingle-less
     # docs as (h = null) rows, which the left join carries through with
     # df null, so count("df") gives them n_dup = 0 — same rows as before.
-    docs = _docs(spark, sf_dir)
+    docs = resplit(read_documents(spark, sf_dir))
     ds = _staged_hs(docs).select("doc_id", F.array_distinct("hs").alias("ds"))
     e = ds.select(
         "doc_id",
@@ -690,7 +683,7 @@ _PARA_W = 8  # words per pseudo-paragraph segment
 
 
 def q_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = resplit(read_documents(spark, sf_dir))
     w = _PARA_W
     # the word array is STAGED as a named column (ADVICE r5: the inline
     # split re-ran once per segment inside the slice lambda — O(n_words x
@@ -788,7 +781,7 @@ _WINNOW_W = 4
 
 
 def q_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = resplit(read_documents(spark, sf_dir))
     w = _WINNOW_W
     # staged projections: `hs` (the md5-heavy shingle map) is a NAMED
     # column referenced W+1 times above, so CollapseProject keeps it in

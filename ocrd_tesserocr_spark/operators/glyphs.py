@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..oracle import CHOICE_THRESHOLD_NUM, GLYPH_CONFUSIONS
+from ..sources import read_documents, resplit
 
 # the oracle.py _ALNUM_RE char class, shared verbatim by both engines
 _ALNUM_CLASS = "[0-9A-Za-zÀ-ɏ֐-ۿ一-鿿]"
@@ -33,17 +34,12 @@ def _alts_col():
 
 
 def q_glyph_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_documents(spark, sf_dir)
     w = F.element_at(F.split(F.col("text"), " "), 1)
-    # project to (doc_id, first word) BEFORE the re-split exchange: the
-    # sandbox documents parquet is a single row group (1-2 scan tasks), so
-    # the rlike/explode stack below otherwise runs near-single-threaded
-    # (text._pdocs rationale, round 6); the shuffle carries ~20 B/row
-    d = (
-        docs.select("doc_id", w.alias("w"))
-        .where(F.length("w") >= 1)
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    # project to (doc_id, first word) BEFORE the re-split exchange that
+    # parallelizes the rlike/explode stack below: the shuffle carries
+    # ~20 B/row
+    d = resplit(docs.select("doc_id", w.alias("w")).where(F.length("w") >= 1))
     chars = d.select(
         "doc_id",
         "w",

@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..sources import read_documents
+
 MEDIA_META_SCHEMA = T.StructType(
     [
         T.StructField("url", T.StringType(), False),
@@ -236,7 +238,7 @@ def embed_media(pages: DataFrame) -> DataFrame:
 # --- driver-facing query (binary metadata over documents.text bytes has an
 # exact SQL oracle; the pages-payload variant is rows-only) ---------------
 def q_binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_documents(spark, sf_dir)
     return docs.select(
         "doc_id",
         F.octet_length("text").alias("n_bytes"),

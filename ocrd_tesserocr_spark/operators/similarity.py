@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources import resplit
+
 N_QUERIES = 50  # query set: vec_id < 50
 TOP_K = 5
 BUCKET_DIMS = 4  # sign bits of the first 4 dims -> 16 buckets
@@ -55,10 +57,8 @@ def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # norms materialize in projections BELOW the join: O(n) norm folds,
     # not O(n*q) — the interpreted higher-order fold is the expensive part
-    emb = (
-        _emb(spark, sf_dir)
-        .repartition(spark.sparkContext.defaultParallelism)
-        .select("vec_id", "embedding", _norm(F.col("embedding")).alias("nrm"))
+    emb = resplit(_emb(spark, sf_dir)).select(
+        "vec_id", "embedding", _norm(F.col("embedding")).alias("nrm")
     )
     q = emb.where(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
@@ -117,15 +117,11 @@ def _bucket(col, dims: int = BUCKET_DIMS) -> F.Column:
 def q_ann_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    emb = (
-        _emb(spark, sf_dir)
-        .repartition(spark.sparkContext.defaultParallelism)
-        .select(
-            "vec_id",
-            "embedding",
-            _bucket(F.col("embedding")).alias("bucket"),
-            _norm(F.col("embedding")).alias("nrm"),
-        )
+    emb = resplit(_emb(spark, sf_dir)).select(
+        "vec_id",
+        "embedding",
+        _bucket(F.col("embedding")).alias("bucket"),
+        _norm(F.col("embedding")).alias("nrm"),
     )
     q = emb.where(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
@@ -239,7 +235,7 @@ def embedding_near_dup(
 
 
 def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _emb(spark, sf_dir).repartition(spark.sparkContext.defaultParallelism)
+    emb = resplit(_emb(spark, sf_dir))
     return embedding_near_dup(emb)
 
 
@@ -340,10 +336,8 @@ def _kmeans_centroids(emb: DataFrame) -> DataFrame:
 def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    emb = (
-        _emb(spark, sf_dir)
-        .repartition(spark.sparkContext.defaultParallelism)
-        .select("vec_id", "embedding", _norm(F.col("embedding")).alias("nrm"))
+    emb = resplit(_emb(spark, sf_dir)).select(
+        "vec_id", "embedding", _norm(F.col("embedding")).alias("nrm")
     )
     # the fit reuses the SAME projected source (no second parquet listing):
     # the vec_id < sample filters push through the repartition to the scan

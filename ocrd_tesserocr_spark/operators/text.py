@@ -15,23 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import POLY_P, hash_mod, sql_md5_mod
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def _pdocs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents scan re-split for CPU-heavy per-row maps (round 6; the
-    dedup._docs rationale): the sandbox parquet is a single row group, so
-    a bare scan caps every downstream narrow map at 1-2 tasks regardless
-    of core count — char_stats/fingerprint/lm_score ran effectively
-    single-threaded.  The exchange carries only the scan columns; at
-    production scale the scan has thousands of splits and this is
-    droppable."""
-    return _docs(spark, sf_dir).repartition(
-        spark.sparkContext.defaultParallelism
-    )
+from ..sources import read_documents, resplit
 
 
 _STOPWORDS = ("the", "a", "of", "and", "to")
@@ -41,7 +25,7 @@ _STOPWORDS = ("the", "a", "of", "and", "to")
 # T1 — language-ID heuristic (script detection analogue, deskew.py:146-195)
 # ---------------------------------------------------------------------------
 def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = read_documents(spark, sf_dir)
     words = F.split(F.col("text"), " ")
     n = F.size(words)
     stop = F.size(F.filter(words, lambda w: w.isin(*_STOPWORDS)))
@@ -77,7 +61,7 @@ FROM w
 def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     # staged word array + re-split scan (round 6): the inline form
     # re-ran the split once per referencing expression on a 1-task scan
-    staged = _pdocs(spark, sf_dir).select(
+    staged = resplit(read_documents(spark, sf_dir)).select(
         "doc_id", "n_chars", F.split(F.col("text"), " ").alias("__w")
     )
     words = F.col("__w")
@@ -112,7 +96,7 @@ FROM r
 # T3 — token counting: whitespace + BPE-ish regex pieces
 # ---------------------------------------------------------------------------
 def q_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = read_documents(spark, sf_dir)
     ws = F.size(F.split(F.col("text"), " "))
     bpe = F.size(F.regexp_extract_all(F.col("text"), F.lit(r"[a-z]{1,4}"), 0))
     return docs.select("doc_id", ws.alias("ws_tokens"), bpe.alias("bpe_tokens"))
@@ -131,7 +115,7 @@ FROM documents
 # (the scalable analogue of per-page checksumming; md5-parity fold)
 # ---------------------------------------------------------------------------
 def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _pdocs(spark, sf_dir)
+    docs = resplit(read_documents(spark, sf_dir))
     words = F.split(F.col("text"), " ")
     hashes = F.transform(words, lambda w: hash_mod(w, POLY_P))
     fp = F.aggregate(
@@ -165,7 +149,7 @@ def q_curation_verdict(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..functions import hash_long
 
-    docs = _docs(spark, sf_dir)
+    docs = read_documents(spark, sf_dir)
     words = F.split(F.col("text"), " ")
     n = F.greatest(F.size(words), F.lit(1))
     stop_ratio = F.size(F.filter(words, lambda w: w.isin(*_STOPWORDS))) / n
@@ -219,7 +203,7 @@ FROM q
 # ~10^8 rows.
 # ---------------------------------------------------------------------------
 def q_host_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = read_documents(spark, sf_dir)
     host = F.when(
         F.col("doc_id") % 10 < 3, F.lit("big.example.com")
     ).otherwise(
@@ -312,7 +296,7 @@ def _planted_pii_text() -> F.Column:
 
 
 def q_pii_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _pdocs(spark, sf_dir)
+    docs = resplit(read_documents(spark, sf_dir))
     t = _planted_pii_text()
     n_emails = F.size(F.regexp_extract_all(t, F.lit(_PII_EMAIL), 0)).cast("long")
     n_ipv4 = F.size(F.regexp_extract_all(t, F.lit(_PII_IPV4), 0)).cast("long")
@@ -368,14 +352,11 @@ FROM c
 # v1 exploded every bigram into a corpus-wide groupBy+window — a shuffle
 # of O(total words) rows that was the suite's heaviest stage; this shape
 # is a narrow projection over the scan.  The one exchange below carries
-# only (doc_id, text) to re-split the sandbox's single-row-group parquet
-# for the CPU-heavy fold (same rationale as dedup._docs); at production
-# scale the scan has thousands of splits and it's droppable.
+# only (doc_id, text) to re-split the scan for the CPU-heavy fold
+# (sources.resplit).
 # ---------------------------------------------------------------------------
 def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir).select("doc_id", "text").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    docs = resplit(read_documents(spark, sf_dir).select("doc_id", "text"))
     # word array STAGED as a named column (round 6): the inline form
     # re-split the text per element reference inside the bigram/trigram
     # lambdas — see dedup._staged_hs for the mechanism and measurement
@@ -567,19 +548,13 @@ def _staged_decon_shingles(df: DataFrame) -> DataFrame:
 
 
 def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # re-split the sandbox's single-row-group parquet (same rationale as
-    # dedup._docs); droppable where the scan has real splits
-    docs = (
-        _docs(spark, sf_dir)
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    docs = resplit(read_documents(spark, sf_dir).select("doc_id", "text"))
     with_sh = _staged_decon_shingles(docs)
     # eval branch reads its own scan with the filter BELOW any exchange —
     # the 2% benchmark slice never rides the corpus repartition
     eval_sh = (
         _staged_decon_shingles(
-            _docs(spark, sf_dir)
+            read_documents(spark, sf_dir)
             .select("doc_id", "text")
             .where(F.col("doc_id") % _DECON_EVAL_MOD == 0)
         )
@@ -679,18 +654,18 @@ def q_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     #     plan evaluated the full explode->join->agg DAG TWICE (once under
     #     the cutoff branch, once under the final projection).  Scoring is
     #     per-doc deterministic, so slice-scoring gives identical cutoffs.
-    base = _docs(spark, sf_dir).select(
+    base = read_documents(spark, sf_dir).select(
         "doc_id", F.substring("text", 1, _LM_DOC_CAP).alias("s")
     )
-    n_par = spark.sparkContext.defaultParallelism
-    docs = base.repartition(n_par)
+    docs = resplit(base)
     # fit pass: own scan, slice filter applied at the scan, re-split for
     # the explode+groupBy
     fit_occ = (
-        _docs(spark, sf_dir)
-        .where(F.col("doc_id") % _LM_FIT_MOD == 0)
-        .select(F.substring("text", 1, _LM_DOC_CAP).alias("s"))
-        .repartition(n_par)
+        resplit(
+            read_documents(spark, sf_dir)
+            .where(F.col("doc_id") % _LM_FIT_MOD == 0)
+            .select(F.substring("text", 1, _LM_DOC_CAP).alias("s"))
+        )
         .select("s", F.explode(_lm_tri_idx(F.col("s"))).alias("i"))
         .select(F.col("s").substr(F.col("i"), F.lit(3)).alias("t"))
     )
@@ -744,7 +719,7 @@ def q_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     sample = (
-        _score(base.where(F.col("doc_id") % _LM_FIT_MOD == 0).repartition(n_par))
+        _score(resplit(base.where(F.col("doc_id") % _LM_FIT_MOD == 0)))
         .where(F.col("n_trigrams") > 0)
         .select("doc_id", F.col("avg_neg_logp").alias("s"))
     )
@@ -870,7 +845,7 @@ def q_mix_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    docs = _docs(spark, sf_dir)
+    docs = read_documents(spark, sf_dir)
     counts = docs.groupBy("lang").agg(F.count(F.lit(1)).alias("n_docs_lang"))
     # unpartitioned window is safe HERE ONLY: it runs on the post-agg
     # table, whose row count is the number of distinct languages
@@ -944,7 +919,7 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    docs = _docs(spark, sf_dir)
+    docs = read_documents(spark, sf_dir)
     tokens = F.size(F.split(F.col("text"), " ")).cast("long")
     bucket = hash_mod(
         F.concat(F.lit("pack|"), F.col("doc_id").cast("string")), _PACK_BUCKETS
@@ -1028,7 +1003,7 @@ def q_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ~10x (each rule re-ran it) and the char-sum fold 3x, all on a
     # 1-task scan; the word array and each heavy per-row reduction are
     # now named columns computed once, over a re-split scan
-    staged = _pdocs(spark, sf_dir).select(
+    staged = resplit(read_documents(spark, sf_dir)).select(
         "doc_id", F.split(F.col("text"), " ").alias("__w")
     )
     words = F.col("__w")
@@ -1123,7 +1098,7 @@ def q_char_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sorted array is a NAMED column referenced once by the fold, so the
     # expensive build is never duplicated (the inline O(n*d) per-uniq
     # count form measured 47 s on the bench corpus; this shape ~1 s).
-    docs = _pdocs(spark, sf_dir)
+    docs = resplit(read_documents(spark, sf_dir))
     text = F.col("text")
     n = F.length(text).cast("long")
     # split on the empty regex is a single JVM call producing the char
@@ -1242,7 +1217,7 @@ FROM s
 # cross-engine float parity is exact regardless of summation order.
 # ---------------------------------------------------------------------------
 def q_length_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
+    docs = read_documents(spark, sf_dir)
     n = F.col("n_chars")
     return (
         docs.groupBy("lang")

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources import read_documents, resplit
+
 #: query parameters stripped by canonicalization: attribution/tracking
 #: noise that never changes page content.  Prefix match for utm_*.
 TRACKING_PREFIXES = ("utm_", "fbclid", "gclid")
@@ -115,14 +117,8 @@ def _messy_url() -> Column:
 
 
 def q_url_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # narrow (doc_id, lang) re-split before the regex-heavy map: the
-    # single-row-group sandbox parquet otherwise caps the whole
-    # canonicalization at 1-2 tasks (round 6; dedup._docs rationale)
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id", "lang")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    # narrow (doc_id, lang) re-split before the regex-heavy map
+    docs = resplit(read_documents(spark, sf_dir).select("doc_id", "lang"))
     messy = docs.select("doc_id", "lang", _messy_url().alias("url"))
     return messy.select(
         "doc_id",

@@ -625,9 +625,6 @@ def _parse_blocks(html: str) -> list:
                 open_tags.append(tag)
                 if selfclose:
                     # <p/>: open + immediate close
-                    if open_tags and open_tags[-1] == "#implicit":
-                        open_tags.pop()
-                        stack.pop()
                     if dir_tags and dir_tags[-1] == tag:
                         dir_tags.pop()
                         dir_stack.pop()

@@ -6,7 +6,7 @@ Physical plan (SURVEY.md section 4)::
     Scan(pages)                               -- column/partition pruning
     -> Filter (resume anti-join, lang, ...)   -- predicate pushdown
     -> Exchange hashpartitioning(xxhash64(url, salt), N)   -- explicit salting
-    -> MapInPandas(extract_batch)             -- the whole inner loop
+    -> MapInArrow(extract)                    -- the whole inner loop
     -> AppendData(extracted, snapshot=K) + lineage rows    -- atomic-ish commit
 
 At production scale the sink is an Iceberg table and each stage commit is an
@@ -27,7 +27,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .kernel import make_extract_fn
+from .kernel import make_extract_arrow_fn
 from .oracle import DEFAULT_PARAMS, ExtractParams
 from .schemas import EXTRACTED_SCHEMA, EXTRACTED_USER_COLUMNS, LINEAGE_SCHEMA
 
@@ -49,24 +49,22 @@ def extract(
     params: ExtractParams = DEFAULT_PARAMS,
     num_partitions: int | None = None,
     salt: int = 0,
-    repartition: bool | None = None,
 ) -> DataFrame:
     """pages -> extracted (lazy; no action triggered).
 
-    The single ``mapInPandas`` runs the whole section-2.2 inner loop in one
+    The single ``mapInArrow`` runs the whole section-2.2 inner loop in one
     pass per document — operator fusion mirroring the reference's
     single-pass multi-level segmentation (recognize.py:486-492).
 
-    ``repartition=None`` (auto, round 6): the salted exchange exists for
-    LOAD BALANCE, but it moves the entire html payload through one
-    shuffle — the guide's section-8 anti-pattern — and extraction is
-    embarrassingly parallel.  When the input already provides at least
-    2x core-count partitions (parquet scan splits are size-uniform by
-    construction, better balanced than hash-of-url), the exchange buys
-    nothing and is skipped: measured 1.17x on the 160k-page bench corpus
-    at local[32].  Inputs with too few splits (tiny corpora, post-join
-    plans at the session's shuffle width) keep the skew-defeating
-    repartition exactly as before.
+    The salted exchange exists for LOAD BALANCE, but it moves the entire
+    html payload through one shuffle — the guide's section-8 anti-pattern —
+    and extraction is embarrassingly parallel.  When the input already
+    provides at least 2x core-count partitions (parquet scan splits are
+    size-uniform by construction, better balanced than hash-of-url), the
+    exchange buys nothing and is skipped: measured 1.17x on the 160k-page
+    bench corpus at local[32].  Inputs with too few splits (tiny corpora,
+    post-join plans at the session's shuffle width) keep the
+    skew-defeating salted repartition.
     """
     if num_partitions is None:
         num_partitions = spark.sparkContext.defaultParallelism
@@ -74,18 +72,8 @@ def extract(
     # see inside the Python map, so without this select the shuffle would
     # carry every pages column
     pages = pages.select("url", "html")
-    if repartition is None:
-        repartition = (
-            pages.rdd.getNumPartitions()
-            < 2 * spark.sparkContext.defaultParallelism
-        )
-    if repartition:
+    if pages.rdd.getNumPartitions() < 2 * spark.sparkContext.defaultParallelism:
         pages = salted_repartition(pages, num_partitions, salt)
-    # mapInArrow: the kernel builds RecordBatches with declared Arrow types
-    # directly — the pandas object-column path costs ~10x on the nested
-    # word/glyph hierarchy (see kernel.make_extract_arrow_fn)
-    from .kernel import make_extract_arrow_fn
-
     return pages.mapInArrow(make_extract_arrow_fn(params), schema=EXTRACTED_SCHEMA)
 
 

@@ -4,7 +4,7 @@ The reference validates processor parameters against JSON Schema
 (/root/reference/ocrd_tesserocr/ocrd-tool.json) and PAGE documents against the
 PAGE XSD — schemas are always explicit, never inferred
 (/root/reference/ocrd_tesserocr/segment.py:17-19).  We mirror that: every
-``mapInPandas`` declares its output StructType, every table is written with a
+Arrow kernel (``mapInArrow``/``mapInPandas``) declares its output StructType, every table is written with a
 fixed schema.
 
 The ``extracted`` schema is the Spark-native replacement for the PAGE-XML

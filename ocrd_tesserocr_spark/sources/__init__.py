@@ -1,11 +1,12 @@
-"""Sources: the pages-table scan (S1/S3 in SURVEY.md section 2.1).
+"""Sources: the pages- and documents-table scans (S1/S3 in SURVEY.md
+section 2.1).
 
 At production scale the corpus is an Iceberg table
 (``spark.read.table("warehouse.pages")``) and resume/incremental reads use
-snapshot ids.  This sandbox has parquet files; the reader below keeps one
-call site so the swap is a one-liner.  Feature filtering (the reference's
-``feature_filter`` on derived images, recognize.py:413-415) is a plain
-WHERE on the ``features`` tag array — pushed down by Catalyst.
+snapshot ids.  This sandbox has parquet files; the readers below keep one
+call site each so the swap is a one-liner.  Feature filtering (the
+reference's ``feature_filter`` on derived images, recognize.py:413-415) is
+a plain WHERE on the ``features`` tag array — pushed down by Catalyst.
 """
 
 from __future__ import annotations
@@ -33,6 +34,27 @@ def read_pages(
     if langs:
         df = df.where(F.col("lang").isin(langs))
     return df
+
+
+def read_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Scan the ``documents`` table: the one documents read every operator
+    query goes through."""
+    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+
+
+def resplit(df: DataFrame) -> DataFrame:
+    """Round-robin re-split to ``defaultParallelism`` partitions, ahead of a
+    CPU-heavy per-row map (hashing, regex, shingle/trigram explodes).
+
+    The sandbox ``documents``/``embeddings`` parquets are each one row group
+    under 1 MB, so a bare scan caps every downstream narrow map at 1-2 tasks
+    regardless of core count.  Callers project to the columns the map needs
+    BEFORE calling this, so the exchange carries only those.  At production
+    scale the scan already has thousands of splits and the exchange buys
+    nothing; it is kept unconditional here because deciding it from
+    ``rdd.getNumPartitions()`` would launch a job at query-build time
+    whenever the input contains a join."""
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
 
 def filter_features(extracted: DataFrame, exclude: list[str]) -> DataFrame:

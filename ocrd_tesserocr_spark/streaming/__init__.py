@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..kernel import make_extract_fn
+from ..kernel import make_extract_arrow_fn
 from ..oracle import DEFAULT_PARAMS, ExtractParams
 from ..schemas import EXTRACTED_SCHEMA, PAGES_SCHEMA
 
@@ -30,25 +30,9 @@ def pages_stream(spark: SparkSession, input_dir: str, max_files: int = 16) -> Da
 def extract_stream(
     pages: DataFrame, params: ExtractParams = DEFAULT_PARAMS
 ) -> DataFrame:
-    """Streaming extraction: identical kernel, streaming plan.
-
-    Uses the mapInArrow kernel — the same RecordBatch construction as the
-    batch path, skipping the nested-struct pandas conversion tax.  A
-    runtime lacking streaming mapInArrow support would fail at
-    ``.start()`` (plan construction here is lazy, so no fallback can be
-    taken at this point); on such a runtime, route through
-    ``extract_stream_pandas`` instead."""
-    from ..kernel import make_extract_arrow_fn
-
+    """Streaming extraction: identical kernel, streaming plan — the same
+    mapInArrow RecordBatch construction as the batch path."""
     return pages.mapInArrow(make_extract_arrow_fn(params), schema=EXTRACTED_SCHEMA)
-
-
-def extract_stream_pandas(
-    pages: DataFrame, params: ExtractParams = DEFAULT_PARAMS
-) -> DataFrame:
-    """mapInPandas variant of :func:`extract_stream` (same output, slower
-    nested-struct conversion) for runtimes without streaming mapInArrow."""
-    return pages.mapInPandas(make_extract_fn(params), schema=EXTRACTED_SCHEMA)
 
 
 def start_to_parquet(

@@ -104,21 +104,27 @@ def test_glyph_preset_round_trip(spark, pages_small):
     # full corpus is covered at word level above; glyph parity checks a
     # deterministic sample to keep the nested-struct comparison bounded
     recs = pages_records("/root/testdata/sf0.001")[:60]
-    import pandas as pd
+    import pyarrow as pa
 
-    from ocrd_tesserocr_spark.kernel import extract_batches
+    from ocrd_tesserocr_spark.kernel import make_extract_arrow_fn
 
-    pdf = pd.DataFrame(recs)
-    [got] = list(extract_batches(iter([pdf[["url", "html"]]]), GLYPH))
-    for _, row in got.iterrows():
-        exp = extract_document(
-            next(r["html"] for r in recs if r["url"] == row["url"]), GLYPH
-        )
+    rb = pa.RecordBatch.from_pydict(
+        {"url": [r["url"] for r in recs], "html": [r["html"] for r in recs]}
+    )
+    [got] = list(make_extract_arrow_fn(GLYPH)(iter([rb])))
+    html_by_url = {r["url"]: r["html"] for r in recs}
+    for row in got.to_pylist():
+        exp = extract_document(html_by_url[row["url"]], GLYPH)
         for gb, eb in zip(row["blocks"], exp["blocks"]):
-            for gl, el in zip(gb[11], eb["lines"]):
-                for gw, ew in zip(gl[5], el["words"]):
-                    assert [g[3] for g in gw[6]] == [g["text"] for g in ew["glyphs"]]
-                    assert [g[5] for g in gw[6]] == [
+            for gl, el in zip(gb["lines"], eb["lines"]):
+                for gw, ew in zip(gl["words"], el["words"]):
+                    assert [g["text"] for g in gw["glyphs"]] == [
+                        g["text"] for g in ew["glyphs"]
+                    ]
+                    assert [
+                        [(c["text"], c["conf"]) for c in g["choices"]]
+                        for g in gw["glyphs"]
+                    ] == [
                         [(c["text"], c["conf"]) for c in g["choices"]]
                         for g in ew["glyphs"]
                     ]

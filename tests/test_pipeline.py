@@ -197,7 +197,7 @@ def test_recompute_stage_lower_level(spark, pages_small, tmp_path):
 
 def test_malformed_config_fails_fast_on_driver(spark, pages_small):
     """A malformed extra value or rule predicate must raise at plan time
-    (make_extract_fn), never inside executor tasks."""
+    (make_extract_arrow_fn), never inside executor tasks."""
     import pytest
 
     from ocrd_tesserocr_spark.oracle import ExtractParams

@@ -4,11 +4,21 @@ a shuffle, loses a broadcast, or breaks scan pruning."""
 
 from __future__ import annotations
 
+import re
+
 from tests.conftest import SF_ORACLE
 
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _formatted(df) -> str:
+    """Full formatted explain: unlike executedPlan().toString() it never
+    truncates long expression lists, and lists each node's input columns."""
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
 
 
 def test_extraction_has_single_exchange(spark, pages_small):
@@ -69,7 +79,8 @@ def test_filter_degenerate_scans_needed_columns_only(spark):
 
 def test_no_python_eval_in_relational_queries(spark):
     """No row-at-a-time Python anywhere: every oracle-checked query except
-    the declared mapInPandas kernels plans pure JVM operators."""
+    the declared Arrow kernels (mapInArrow/mapInPandas) plans pure JVM
+    operators."""
     import __spark_entry__ as entry
 
     ARROW_KERNELS = {"media_meta", "extract_flagship", "extract_block_spans"}
@@ -150,12 +161,7 @@ def test_agg_concat_uses_codegen_sort(spark):
         q_agg_concat_reading_order,
     )
 
-    df = q_agg_concat_reading_order(spark, SF_ORACLE)
-    # executedPlan().toString() truncates long aggregate expression lists,
-    # so read the full formatted explain for the positive assertion
-    full = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
+    full = _formatted(q_agg_concat_reading_order(spark, SF_ORACLE))
     assert "sort_array" in full
     assert "lambdafunction" not in full
 
@@ -166,8 +172,16 @@ def test_similarity_fold_casts_whole_array(spark):
     lambda (the per-element cast was half the fold's cost)."""
     from ocrd_tesserocr_spark.operators.similarity import q_cosine_topk
 
-    plan = _plan(q_cosine_topk(spark, SF_ORACLE))
-    assert "array<double>" in plan
+    plan = _formatted(q_cosine_topk(spark, SF_ORACLE))
+    folds = re.findall(
+        r"zip_with\(cast\((\w+)#\d+ as array<double>\), "
+        r"cast\((\w+)#\d+ as array<double>\), lambdafunction\(",
+        plan,
+    )
+    # both fold inputs cast whole: the norm (embedding x embedding) and the
+    # query-neighbor dot (qv x embedding)
+    assert ("embedding", "embedding") in folds, folds
+    assert ("qv", "embedding") in folds, folds
     # no per-element cast inside any fold lambda
     assert "cast(lambda" not in plan
 
@@ -178,8 +192,15 @@ def test_glyph_topk_resplit_carries_projection(spark):
     (doc_id, first word) — never the full text column."""
     from ocrd_tesserocr_spark.operators.glyphs import q_glyph_topk
 
-    plan = _plan(q_glyph_topk(spark, SF_ORACLE))
-    assert "RoundRobinPartitioning" in plan
+    plan = _formatted(q_glyph_topk(spark, SF_ORACLE))
+    [exchange] = re.findall(
+        r"\(\d+\) Exchange\nInput \[\d+\]: \[([^\]]*)\]\n"
+        r"Arguments: RoundRobinPartitioning",
+        plan,
+    )
+    cols = [c.split("#")[0] for c in exchange.split(", ")]
+    assert "text" not in cols, cols
+    assert cols == ["doc_id", "w"], cols
 
 
 def test_lm_score_trigrams_not_lambda_built(spark):
