@@ -452,3 +452,41 @@ def materialize_extracted(sf_dir: str) -> tuple[str, str]:
         pq.write_table(tbl, tmp)
         os.replace(tmp, out)
     return flag_out, blk_out
+
+
+def hostile_pages() -> list:
+    """Hand-written edge-case pages as (url, html) records, in url order:
+    shapes the synthetic templates lack, for kernel-vs-oracle parity."""
+    styled = " ".join(
+        ("<b>w%d</b>" if i % 4 == 0 else "<i>w%d</i>" if i % 4 == 2 else "w%d") % i
+        for i in range(800)
+    )
+    pages = {
+        "style_dense": "<p>" + styled + "</p>",
+        "rtl": '<p dir="rtl">alpha <b>beta</b> gamma<br>delta epsilon zeta eta</p>'
+        '<div dir="rtl"><p>inherited right to left text</p></div>',
+        "btt": '<p data-line-order="btt">first line words here<br>'
+        "second line words here<br><i>third</i> line</p>",
+        "join": "<p>first main paragraph text here</p>"
+        '<p data-join="1">joined continuation paragraph text</p>'
+        "<h2>Head</h2><table><td>cell 0o1lI 5sS8B</td><td>cemnuv</td></table>",
+        "many_blocks": "".join(
+            "<p>paragraph number %d with enough text</p>" % i for i in range(1100)
+        ),
+        "long_line": "<p>" + " ".join("t%d" % i for i in range(10050)) + "</p>",
+        "mixed": "<nav><a href='/'>home</a></nav><h1>Title العربية</h1>"
+        "<p>emoji \U0001f600 and 中文 &amp; <code>x0x</code> text</p>"
+        "<hr><img src=a.png><pre>  spaced\n\n  out  </pre><p><br></p>"
+        "<p><a href=x>link link link link</a> tail</p><footer>foot</footer>",
+    }
+    recs = [
+        {"url": "hostile://" + name, "html": html.encode("utf-8")}
+        for name, html in pages.items()
+    ]
+    recs += [
+        {"url": "hostile://undecodable", "html": b"<p>\xff\xfe broken bytes</p>"},
+        {"url": "hostile://null", "html": None},
+        {"url": "hostile://whitespace", "html": b"  \n\t \r\n  "},
+        {"url": "hostile://empty", "html": b""},
+    ]
+    return sorted(recs, key=lambda r: r["url"])

@@ -43,6 +43,29 @@ def salted_repartition(df: DataFrame, num_partitions: int, salt: int = 0) -> Dat
     return df.repartition(num_partitions, F.xxhash64(F.col("url"), F.lit(salt)))
 
 
+def _has_exchange(plan) -> bool:
+    """Does this physical plan (a py4j ``SparkPlan``) hold an exchange?
+    AQE wraps every plan with one in ``AdaptiveSparkPlan``."""
+    name = plan.nodeName()
+    if name == "AdaptiveSparkPlan" or "Exchange" in name:
+        return True
+    children = plan.children()
+    return any(_has_exchange(children.apply(i)) for i in range(children.size()))
+
+
+def _exchange_free_splits(pages: DataFrame) -> int | None:
+    """Partition count of ``pages`` if its plan has no exchange, else None.
+
+    Counting partitions plans the query; for an exchange-free plan (a scan,
+    or a filter or projection of one) that runs no job.  With
+    an exchange it would: AQE materializes the query stages below it, e.g.
+    a join's broadcast, which the write then runs again.  Such inputs are
+    always salted."""
+    if _has_exchange(pages._jdf.queryExecution().executedPlan()):
+        return None
+    return pages.rdd.getNumPartitions()
+
+
 def extract(
     spark: SparkSession,
     pages: DataFrame,
@@ -63,8 +86,8 @@ def extract(
     size-uniform by construction, better balanced than hash-of-url), the
     exchange buys nothing and is skipped: measured 1.17x on the 160k-page
     bench corpus at local[32].  Inputs with too few splits (tiny corpora,
-    post-join plans at the session's shuffle width) keep the
-    skew-defeating salted repartition.
+    post-join plans) keep the skew-defeating salted repartition.  Building
+    the DataFrame runs no Spark job (see ``_exchange_free_splits``).
     """
     if num_partitions is None:
         num_partitions = spark.sparkContext.defaultParallelism
@@ -72,7 +95,8 @@ def extract(
     # see inside the Python map, so without this select the shuffle would
     # carry every pages column
     pages = pages.select("url", "html")
-    if pages.rdd.getNumPartitions() < 2 * spark.sparkContext.defaultParallelism:
+    splits = _exchange_free_splits(pages)
+    if splits is None or splits < 2 * spark.sparkContext.defaultParallelism:
         pages = salted_repartition(pages, num_partitions, salt)
     return pages.mapInArrow(make_extract_arrow_fn(params), schema=EXTRACTED_SCHEMA)
 

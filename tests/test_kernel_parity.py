@@ -6,7 +6,10 @@ from __future__ import annotations
 
 import pytest
 
+from ocrd_tesserocr_spark.oracle import ExtractParams
 from ocrd_tesserocr_spark.pipeline import extract
+from ocrd_tesserocr_spark.plans import PRESETS
+from tests.conftest import dict_path_batch, pages_batch
 
 
 @pytest.fixture(scope="module")
@@ -94,42 +97,6 @@ def test_parallelism_invariance(spark, pages_small, extracted_rows):
         assert extracted_rows[r["url"]]["text"] == r["text"]
 
 
-def test_glyph_preset_round_trip(spark, pages_small):
-    """textequiv_level='glyph' crosses the Arrow boundary byte-identically:
-    glyph ids/spans/choices match the pure-Python oracle per url."""
-    from ocrd_tesserocr_spark.corpus import pages_records
-    from ocrd_tesserocr_spark.oracle import extract_document
-    from ocrd_tesserocr_spark.plans import GLYPH
-
-    # full corpus is covered at word level above; glyph parity checks a
-    # deterministic sample to keep the nested-struct comparison bounded
-    recs = pages_records("/root/testdata/sf0.001")[:60]
-    import pyarrow as pa
-
-    from ocrd_tesserocr_spark.kernel import make_extract_arrow_fn
-
-    rb = pa.RecordBatch.from_pydict(
-        {"url": [r["url"] for r in recs], "html": [r["html"] for r in recs]}
-    )
-    [got] = list(make_extract_arrow_fn(GLYPH)(iter([rb])))
-    html_by_url = {r["url"]: r["html"] for r in recs}
-    for row in got.to_pylist():
-        exp = extract_document(html_by_url[row["url"]], GLYPH)
-        for gb, eb in zip(row["blocks"], exp["blocks"]):
-            for gl, el in zip(gb["lines"], eb["lines"]):
-                for gw, ew in zip(gl["words"], el["words"]):
-                    assert [g["text"] for g in gw["glyphs"]] == [
-                        g["text"] for g in ew["glyphs"]
-                    ]
-                    assert [
-                        [(c["text"], c["conf"]) for c in g["choices"]]
-                        for g in gw["glyphs"]
-                    ] == [
-                        [(c["text"], c["conf"]) for c in g["choices"]]
-                        for g in ew["glyphs"]
-                    ]
-
-
 def test_glyph_preset_spark_schema(spark, pages_small):
     from ocrd_tesserocr_spark.plans import GLYPH
 
@@ -144,3 +111,76 @@ def test_glyph_preset_spark_schema(spark, pages_small):
     assert set(g.asDict()) == {
         "glyph_id", "char_start", "char_end", "text", "conf", "choices"
     }
+
+
+_FRAKTUR_ENG = (
+    ("fraktur", (("l", ("t", "i")),)),
+    ("eng", (("z", ("s",)),)),
+)
+
+#: every preset, plus the rule / auto_model / segment_only / extra /
+#: custom-confusion configs of test_oracle.py and a per-block level mix
+_PARITY_CONFIGS = {
+    **{"preset_" + name: p for name, p in PRESETS.items()},
+    "block_rules": ExtractParams(block_rules=(
+        ("kind=paragraph and link_density>0.5", (("max_link_density", "1.0"),)),
+    )),
+    "model_rules": ExtractParams(model="base", model_rules=(
+        ("kind=heading", "eng_best"), ("rtl=true", "ara"),
+        ("kind=heading and n_chars>4", "deu"),
+    )),
+    "auto_model": ExtractParams(
+        model="fraktur+eng", auto_model=True, textequiv_level="glyph",
+        model_resources=_FRAKTUR_ENG,
+    ),
+    "auto_model_extra": ExtractParams(
+        model="fraktur+eng", extra=(("auto_model", "true"),),
+        model_resources=_FRAKTUR_ENG,
+    ),
+    "auto_model_rule_exempt": ExtractParams(
+        auto_model=True, textequiv_level="glyph", model_resources=_FRAKTUR_ENG,
+        model_rules=(("kind=paragraph", "fraktur"), ("n_chars>5", "eng")),
+    ),
+    "segment_only_rule": ExtractParams(block_rules=(
+        ("kind=heading", (("segment_only", "true"),)),
+    )),
+    "extra": ExtractParams(extra=(("min_paragraph_chars", "100"), ("oem", "1"))),
+    "custom_confusions": ExtractParams(
+        textequiv_level="glyph", glyph_confusions=(("x", ("y", "z")),),
+    ),
+    "level_rules": ExtractParams(textequiv_level="block", block_rules=(
+        ("kind=heading", (("textequiv_level", "glyph"),)),
+        ("kind=table", (("textequiv_level", "line"),)),
+        ("n_chars>200", (("textequiv_level", "word"),)),
+    )),
+}
+
+
+@pytest.fixture(scope="module")
+def parity_inputs():
+    from ocrd_tesserocr_spark.corpus import hostile_pages, pages_records
+    from tests.conftest import SF_SMOKE
+
+    recs = pages_records(SF_SMOKE)
+    return {
+        "sf0.001": pages_batch(recs),
+        "zero_rows": pages_batch([]),
+        "hostile": pages_batch(hostile_pages()),
+    }
+
+
+@pytest.mark.parametrize("inputs", ["sf0.001", "zero_rows", "hostile"])
+@pytest.mark.parametrize("config", sorted(_PARITY_CONFIGS))
+def test_kernel_batch_equals_dict_path(parity_inputs, config, inputs):
+    """The whole output batch — every level, id, offset, conf and style —
+    equals the batch built from ``extract_document`` dicts with
+    ``pa.array``, not just selected fields."""
+    from ocrd_tesserocr_spark.kernel import make_extract_arrow_fn
+
+    params = _PARITY_CONFIGS[config]
+    rb = parity_inputs[inputs]
+    got = list(make_extract_arrow_fn(params)(iter([rb])))
+    assert len(got) == 1
+    exp = dict_path_batch(rb, params)
+    assert got[0].num_rows == rb.num_rows
+    assert got[0].equals(exp)

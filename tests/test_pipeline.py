@@ -209,3 +209,26 @@ def test_malformed_config_fails_fast_on_driver(spark, pages_small):
     with pytest.raises(ValueError):
         extract(spark, pages_small,
                 ExtractParams(block_rules=(("kind ~~ junk", ()),)))
+
+
+def test_building_extract_over_joined_input_runs_no_job(spark, pages_small):
+    """``extract`` decides its salted exchange without executing the plan:
+    a partition count on a joined input would make AQE run the join's
+    broadcast stage at build time, and the write would run it again."""
+    from ocrd_tesserocr_spark.pipeline import extract
+
+    urls = pages_small.select("url").where(F.col("url").contains("a"))
+    joined = pages_small.join(urls, "url", "left_semi")
+    sc = spark.sparkContext
+    group = "extract-build-guard"
+    sc.setJobGroup(group, "build extract over a joined input")
+    try:
+        before = set(sc.statusTracker().getJobIdsForGroup(group))
+        df = extract(spark, joined)
+        after = set(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert after == before
+    # joined inputs are always salted
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "hashpartitioning(xxhash64(url" in plan

@@ -177,3 +177,24 @@ def test_extra_params_never_crash_extraction(pairs):
         ExtractParams(extra=tuple(pairs)),
     )
     assert isinstance(out["failed"], bool)
+
+
+@settings(max_examples=100, deadline=None)
+@given(st.lists(_chunks, min_size=1, max_size=3))
+def test_kernel_batch_equals_dict_path_at_every_level(docs):
+    """The kernel's columnar walk and the oracle's dict walk cannot drift
+    on tag-soup shapes the fixed corpora lack: at every level, the batch
+    equals ``pa.array`` over ``extract_document`` dicts."""
+    from ocrd_tesserocr_spark.kernel import make_extract_arrow_fn
+    from ocrd_tesserocr_spark.oracle import ExtractParams
+    from tests.conftest import dict_path_batch, pages_batch
+
+    rb = pages_batch([
+        {"url": "u%d" % i,
+         "html": ("<html><body>" + "".join(c) + "</body></html>").encode("utf-8")}
+        for i, c in enumerate(docs)
+    ])
+    for level in ("block", "line", "word", "glyph"):
+        params = ExtractParams(textequiv_level=level)
+        [got] = make_extract_arrow_fn(params)(iter([rb]))
+        assert got.equals(dict_path_batch(rb, params)), level
