@@ -7,11 +7,13 @@ analysis), each with an exactly-matching DuckDB oracle.  DOM parsing is
 not ANSI SQL, so the extraction queries' oracles work differently: the
 pure-Python extractor materializes its results to cache parquets
 (pyarrow, no Spark) and DuckDB reads those, while the Spark side runs the
-live Arrow kernel.  Both sides share ``oracle.extract_document``, so this
-gate proves the SPARK layer — Arrow serialization, schema, distribution,
-projection, aggregation — not independent extraction logic; extraction
-SEMANTICS are covered by the pytest fixture suite (hand-written expected
-outputs + structural invariants + hypothesis fuzzing, SURVEY.md section 5).
+live Arrow kernel.  The kernel does not call ``oracle.extract_document``:
+it runs its own columnar document walk (``kernel._walk``, built from the
+oracle's parse and scoring helpers), so this gate checks that walk against
+the oracle's output as well as the SPARK layer — Arrow serialization,
+schema, distribution, projection, aggregation.  Extraction SEMANTICS are
+covered by the pytest fixture suite (hand-written expected outputs +
+structural invariants + hypothesis fuzzing, SURVEY.md section 5).
 """
 
 from __future__ import annotations

@@ -260,10 +260,9 @@ def pages_df(spark, sf_dir: str):
     """documents parquet -> pages DataFrame (Arrow-batched, no per-row
     Python at the Spark surface)."""
     from .schemas import PAGES_SCHEMA
+    from .sources import read_documents
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text", "lang"
-    )
+    docs = read_documents(spark, sf_dir).select("doc_id", "text", "lang")
     return docs.mapInPandas(synth_pages_batches, schema=PAGES_SCHEMA)
 
 

@@ -19,6 +19,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..corpus import materialize_pages, pages_cache_path, words_cache_path
+from ..sources import read_parquet
+
 _PATTERNS = [
     ("n_bold", r"<b>[^<]*</b>"),
     ("n_italic", r"<i>[^<]*</i>"),
@@ -38,9 +41,7 @@ def font_style_counts(pages: DataFrame, text_col=None) -> DataFrame:
 
 
 def q_font_style(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..corpus import materialize_pages
-
-    pages = spark.read.parquet(materialize_pages(sf_dir))
+    pages = read_parquet(spark, materialize_pages(sf_dir))
     # html_str is the pre-decoded utf-8 string column the oracle also reads
     return font_style_counts(pages, text_col=F.col("html_str"))
 
@@ -71,29 +72,17 @@ def q_font_style_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sf001_cache() -> str:
-    # the driver's correctness gate runs at sf0.01; the static oracle SQL
-    # below points at that corpus' cache (materialized by oracle_sql());
-    # the path is version-tokened so semantic changes invalidate it.
-    # only the corpus NAME matters — the cache layout is repo-relative
-    from ..corpus import pages_cache_path
-
-    return pages_cache_path("sf0.01")
-
-
+# the driver's correctness gate runs at sf0.01; the static oracle SQL below
+# points at that corpus' cache (materialized by oracle_sql()); the path is
+# version-tokened so semantic changes invalidate it.  Only the corpus NAME
+# matters — the cache layout is repo-relative.
 SQL_FONT_STYLE = f"""
 SELECT url,
        len(regexp_extract_all(html_str, '<b>[^<]*</b>'))::BIGINT AS n_bold,
        len(regexp_extract_all(html_str, '<i>[^<]*</i>'))::BIGINT AS n_italic,
        len(regexp_extract_all(html_str, '<code>[^<]*</code>'))::BIGINT AS n_monospace
-FROM read_parquet('{_sf001_cache()}')
+FROM read_parquet('{pages_cache_path("sf0.01")}')
 """
-
-def _words_cache() -> str:
-    from ..corpus import words_cache_path
-
-    return words_cache_path("sf0.01")
-
 
 SQL_FONT_STYLE_WORDS = f"""
 SELECT url,
@@ -101,7 +90,7 @@ SELECT url,
        count_if(bold)::BIGINT AS n_bold,
        count_if(italic)::BIGINT AS n_italic,
        count_if(monospace)::BIGINT AS n_monospace
-FROM read_parquet('{_words_cache()}')
+FROM read_parquet('{words_cache_path("sf0.01")}')
 GROUP BY url
 """
 

@@ -27,6 +27,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..corpus import materialize_pages, pages_cache_path
+from ..sources import read_parquet
+
 #: max anchors parsed per page: bounds the explode fanout (a 10^6-link
 #: spam page contributes 256 edges, not 10^6).  Mirrored in the oracle.
 ANCHOR_CAP = 256
@@ -55,8 +58,10 @@ def anchor_edges(pages: DataFrame, text_col=None) -> DataFrame:
 def anchor_texts(pages: DataFrame, text_col=None) -> DataFrame:
     """Per-target rollup: total anchors, distinct linking pages, dominant
     anchor text.  All post-edge-table work is O(distinct edges)."""
-    # the edge table feeds THREE consumers below; without the checkpoint
-    # each would re-scan + re-regexp the full corpus (host_skew precedent)
+    # the edge table feeds THREE consumers below.  Unlike host_skew, AQE
+    # cannot share it lazily: Catalyst prunes ``cnt`` on the n_pages branch,
+    # the two edge exchanges no longer match, and the corpus would be
+    # scanned and regexped twice — so it is checkpointed
     edges = anchor_edges(pages, text_col=text_col).localCheckpoint(eager=True)
     pc = edges.groupBy("href", "anchor").agg(F.sum("cnt").alias("cnt"))
     wh = Window.partitionBy("href")
@@ -88,21 +93,13 @@ def anchor_texts(pages: DataFrame, text_col=None) -> DataFrame:
 
 
 def q_anchor_texts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..corpus import materialize_pages
-
-    pages = spark.read.parquet(materialize_pages(sf_dir))
+    pages = read_parquet(spark, materialize_pages(sf_dir))
     # html_str: the pre-decoded utf-8 column the DuckDB oracle regexps too,
     # so the gate proves extraction+aggregation, not bytes->str decoding
     return anchor_texts(pages, text_col=F.col("html_str"))
 
 
-def _sf001_cache() -> str:
-    # driver correctness gate runs at sf0.01; same mechanism as fontshape
-    from ..corpus import pages_cache_path
-
-    return pages_cache_path("sf0.01")
-
-
+# driver correctness gate runs at sf0.01; same mechanism as fontshape
 SQL_ANCHOR_TEXTS = f"""
 WITH m AS (
   SELECT url,
@@ -127,7 +124,7 @@ pg AS (
   SELECT href, COUNT(DISTINCT url)::BIGINT AS n_pages FROM edges GROUP BY href)
 SELECT t.href, t.n_anchors, p.n_pages, t.top_anchor, t.top_anchor_count
 FROM top t JOIN pg p ON t.href = p.href
-""".replace("{cache}", _sf001_cache())
+""".replace("{cache}", pages_cache_path("sf0.01"))
 
 
 QUERIES = {"anchor_texts": q_anchor_texts}

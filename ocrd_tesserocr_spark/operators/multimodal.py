@@ -20,7 +20,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..sources import read_documents
+from ..corpus import materialize_pages, pages_cache_path
+from ..sources import read_documents, read_parquet
 
 MEDIA_META_SCHEMA = T.StructType(
     [
@@ -262,9 +263,7 @@ def q_media_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves hash parity on string payloads) and thumb is the declared
     decode stub.
     """
-    from ..corpus import materialize_pages
-
-    pages = spark.read.parquet(materialize_pages(sf_dir)).select("url", "html")
+    pages = read_parquet(spark, materialize_pages(sf_dir)).select("url", "html")
     return media_meta(pages).select("url", "n_bytes", "media_kind", "sniff_ok")
 
 
@@ -286,17 +285,11 @@ def _sniff_case_sql() -> str:
         " ELSE 'application/octet-stream' END"
 
 
-def _sf001_cache() -> str:
-    # only the corpus NAME matters — the cache layout is repo-relative
-    from ..corpus import pages_cache_path
-
-    return pages_cache_path("sf0.01")
-
-
+# only the corpus NAME matters — the cache layout is repo-relative
 SQL_MEDIA_META = f"""
 WITH p AS (
   SELECT url, octet_length(html)::BIGINT AS n_bytes, hex(html) AS h
-  FROM read_parquet('{_sf001_cache()}'))
+  FROM read_parquet('{pages_cache_path("sf0.01")}'))
 SELECT url, n_bytes,
        {_sniff_case_sql()} AS media_kind,
        ({_sniff_case_sql()}) IN ('image/png', 'image/jpeg', 'text/html') AS sniff_ok

@@ -12,9 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from ..sources import read_table
 
 
 # ---------------------------------------------------------------------------
@@ -22,7 +20,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # (word->line->region joins, common.py:68-180; reading order recognize.py:631)
 # ---------------------------------------------------------------------------
 def q_agg_concat_reading_order(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     token = F.concat(
         F.col("l_returnflag"),
         F.col("l_linestatus"),
@@ -57,7 +55,7 @@ FROM lineitem GROUP BY l_orderkey
 # A2/A6 — confidence averaging (arithmetic means, common.py:127-128)
 # ---------------------------------------------------------------------------
 def q_conf_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     return docs.groupBy("lang").agg(
         F.round(F.avg("n_chars"), 4).alias("avg_chars"),
         F.count(F.lit(1)).alias("n_docs"),
@@ -74,7 +72,7 @@ FROM documents GROUP BY lang
 # A3/P1 — crop-bounds min/max aggregation (crop.py:99-155)
 # ---------------------------------------------------------------------------
 def q_crop_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = read_table(spark, sf_dir, "orders")
     return o.groupBy("o_custkey").agg(
         F.round(F.min("o_totalprice"), 2).alias("min_price"),
         F.round(F.max("o_totalprice"), 2).alias("max_price"),
@@ -97,7 +95,7 @@ FROM orders GROUP BY o_custkey
 # A5/W1 — reading-order index allocation (recognize.py:534-544)
 # ---------------------------------------------------------------------------
 def q_reading_order(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     return ev.select(
         "user_id",
@@ -118,7 +116,7 @@ FROM events
 # (CHOICE_THRESHOLD_NUM=10, CHOICE_THRESHOLD_CONF=1, recognize.py:56-57,849-851)
 # ---------------------------------------------------------------------------
 def q_topk_choices(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy(F.desc("value"), F.asc("event_id"))
     wb = Window.partitionBy("user_id")
     return (
@@ -149,7 +147,7 @@ FROM ranked WHERE rnk <= 10 AND value >= best - 1.0
 # G1/G2/G7 — span clamp to parent (polygon_for_parent, common.py:282-312)
 # ---------------------------------------------------------------------------
 def q_span_clamp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     cs = F.col("l_partkey") % 100
     ce = cs + F.col("l_linenumber") * 7
     ps = F.col("l_suppkey") % 60
@@ -181,7 +179,7 @@ WHERE LEAST(l_partkey % 100 + l_linenumber * 7, l_suppkey % 60 + 50)
 # F1-F4 — degenerate-segment filters (recognize.py:584-601, crop.py:129-138)
 # ---------------------------------------------------------------------------
 def q_filter_degenerate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     n_tokens = F.size(F.split(F.col("text"), " "))
     return (
         docs.select("doc_id", "n_chars", n_tokens.alias("n_tokens"))
@@ -200,8 +198,8 @@ WHERE n_chars >= 16 AND len(str_split(text, ' ')) >= 5
 # F5 — resume anti-join (skip-if-output-exists, test_recognize.py:144-146)
 # ---------------------------------------------------------------------------
 def q_resume_antijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey")
+    o = read_table(spark, sf_dir, "orders")
+    li = read_table(spark, sf_dir, "lineitem").select("l_orderkey")
     return o.join(li, o.o_orderkey == li.l_orderkey, "left_anti").select(
         "o_orderkey", "o_custkey"
     )
@@ -217,7 +215,7 @@ WHERE NOT EXISTS (SELECT 1 FROM lineitem l WHERE l.l_orderkey = o.o_orderkey)
 # A4 — auto_model argmax (score every model, keep best; recognize.py:266-277)
 # ---------------------------------------------------------------------------
 def q_auto_model_argmax(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     scored = docs.groupBy("lang", "source").agg(
         F.round(F.avg("n_chars"), 4).alias("score")
     )
@@ -245,7 +243,7 @@ SELECT lang, source AS best_model, score AS best_score FROM ranked WHERE rn = 1
 # section 2.8 scalars — id formats (recognize.py:604) + rstrip (recognize.py:636)
 # ---------------------------------------------------------------------------
 def q_id_format(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
         F.format_string("block%04d", (F.col("doc_id") % 10000).cast("int")).alias("block_id"),
@@ -319,7 +317,7 @@ _SCRIPT_NAMES = list(SCRIPT_ISO_MAP.keys()) + ["Klingon"]
 
 
 def q_script_map(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     idx = (F.col("doc_id") % len(_SCRIPT_NAMES)).cast("int")
     name = F.element_at(F.array(*[F.lit(n) for n in _SCRIPT_NAMES]), idx + 1)
     iso = None
@@ -354,7 +352,7 @@ FROM named GROUP BY script_name, iso
 # section 2.8 — feature-tag append (features + ',cropped', crop.py:185)
 # ---------------------------------------------------------------------------
 def q_feature_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     base = F.array(F.lit("cleaned"), F.lit("segmented"))
     extra = F.when(F.col("n_chars") > 300, F.array(F.lit("cropped"))).otherwise(
         F.array().cast("array<string>")
@@ -376,7 +374,7 @@ FROM documents
 # A7 — lineage counters (per-partition doc/failure accounting)
 # ---------------------------------------------------------------------------
 def q_lineage_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     return docs.groupBy("source").agg(
         F.count(F.lit(1)).alias("doc_count"),
         F.count_if(F.col("n_chars") < 150).alias("failure_count"),
@@ -394,7 +392,7 @@ FROM documents GROUP BY source
 # F7 — confidence gate (when(conf < tau, fallback), deskew.py:135-151)
 # ---------------------------------------------------------------------------
 def q_conf_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     conf = F.least(F.lit(1.0), F.col("n_chars") / F.lit(500.0))
     fixed = F.when(conf < 0.3, F.col("lang")).otherwise(F.lit("en"))
     return docs.select("doc_id", F.round(conf, 6).alias("conf"), fixed.alias("fixed_lang"))
@@ -412,7 +410,7 @@ FROM documents
 # G6/W — running hull projection as window min/max (common.py:182-217)
 # ---------------------------------------------------------------------------
 def q_running_hull(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
         .orderBy("ts", "event_id")
@@ -441,7 +439,7 @@ WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
 # (the closest classical analogue of the A1/A2 per-level rollup)
 # ---------------------------------------------------------------------------
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     return (
         li.where(F.col("l_shipdate") <= F.lit("1998-09-02"))
         .groupBy("l_returnflag", "l_linestatus")
@@ -472,7 +470,7 @@ GROUP BY l_returnflag, l_linestatus
 # G4/G5 — span union / hull of child segments (join_polygons, common.py:223-265)
 # ---------------------------------------------------------------------------
 def q_span_union(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     cs = F.col("l_partkey") % 100
     ce = cs + F.col("l_linenumber") * 7
     return (
@@ -499,7 +497,7 @@ FROM lineitem GROUP BY l_orderkey
 # P6 — context padding of span windows (pad_image, common.py:267-280)
 # ---------------------------------------------------------------------------
 def q_context_pad(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     pos = (F.col("doc_id") % 40) + 10
     start = F.greatest(pos - 8, F.lit(1))
     end = F.least(pos + 8, F.length("text"))
@@ -527,7 +525,7 @@ FROM documents
 # W3 — data-dependent direction reversal (RTL traversal, common.py:131-151)
 # ---------------------------------------------------------------------------
 def q_direction_reverse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     words = F.slice(F.split(F.col("text"), " "), 1, 6)
     ordered = F.when(F.col("lang").isin("ar", "he"), F.reverse(words)).otherwise(words)
     return docs.select(
@@ -551,7 +549,7 @@ FROM documents
 # relationally: lag -> gap flag -> running sum = session id)
 # ---------------------------------------------------------------------------
 def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gap = F.when(
         (F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))) > 1800,
@@ -599,7 +597,7 @@ FROM sess GROUP BY user_id, session_idx
 # normalization, deskew.py:128-151, common.py:56-66)
 # ---------------------------------------------------------------------------
 def q_angle_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     # signed raw angle in (-360, 360): the deskew estimate analogue
     raw = (F.col("doc_id") * 73) % 720 - 360
     norm = F.pmod(raw, F.lit(360))  # canonical [0, 360)

@@ -14,15 +14,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources import resplit
+from ..sources import read_table, resplit
 
 N_QUERIES = 50  # query set: vec_id < 50
 TOP_K = 5
 BUCKET_DIMS = 4  # sign bits of the first 4 dims -> 16 buckets
-
-
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
 
 def _dot(a, b):
@@ -57,7 +53,7 @@ def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # norms materialize in projections BELOW the join: O(n) norm folds,
     # not O(n*q) — the interpreted higher-order fold is the expensive part
-    emb = resplit(_emb(spark, sf_dir)).select(
+    emb = resplit(read_table(spark, sf_dir, "embeddings")).select(
         "vec_id", "embedding", _norm(F.col("embedding")).alias("nrm")
     )
     q = emb.where(F.col("vec_id") < N_QUERIES).select(
@@ -117,7 +113,7 @@ def _bucket(col, dims: int = BUCKET_DIMS) -> F.Column:
 def q_ann_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    emb = resplit(_emb(spark, sf_dir)).select(
+    emb = resplit(read_table(spark, sf_dir, "embeddings")).select(
         "vec_id",
         "embedding",
         _bucket(F.col("embedding")).alias("bucket"),
@@ -235,7 +231,7 @@ def embedding_near_dup(
 
 
 def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = resplit(_emb(spark, sf_dir))
+    emb = resplit(read_table(spark, sf_dir, "embeddings"))
     return embedding_near_dup(emb)
 
 
@@ -336,7 +332,7 @@ def _kmeans_centroids(emb: DataFrame) -> DataFrame:
 def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    emb = resplit(_emb(spark, sf_dir)).select(
+    emb = resplit(read_table(spark, sf_dir, "embeddings")).select(
         "vec_id", "embedding", _norm(F.col("embedding")).alias("nrm")
     )
     # the fit reuses the SAME projected source (no second parquet listing):

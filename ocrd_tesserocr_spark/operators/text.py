@@ -213,15 +213,15 @@ def q_host_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(".example.org"),
         )
     )
-    # localCheckpoint: the host aggregate (O(distinct hosts), tiny next to
-    # the corpus) feeds BOTH the output and the totals branch — without it
-    # the totals lineage re-scans the full documents table, i.e. two 100 TB
-    # scans instead of one.
+    # the host aggregate (O(distinct hosts), tiny next to the corpus) feeds
+    # BOTH the output and the totals branch; the two branches' host
+    # exchanges are identical, so AQE runs one and the other plans as a
+    # ReusedExchange: the documents table is scanned once
+    # (test_plans_quality pins this).
     agg = (
         docs.select(host.alias("host"))
         .groupBy("host")
         .agg(F.count(F.lit(1)).alias("n_docs"))
-        .localCheckpoint(eager=True)
     )
     totals = agg.agg(
         F.sum("n_docs").cast("double").alias("_total"),
@@ -669,14 +669,15 @@ def q_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("s", F.explode(_lm_tri_idx(F.col("s"))).alias("i"))
         .select(F.col("s").substr(F.col("i"), F.lit(3)).alias("t"))
     )
-    # localCheckpoint: the O(vocab) count table feeds BOTH the model and
-    # the normalizer — without it each branch re-scans + re-aggregates the
-    # fit slice (host_skew precedent: checkpoint the small aggregate, not
-    # the corpus)
+    # the O(vocab) count table feeds BOTH the model and the normalizer.  The
+    # model's left join infers isnotnull(t) below this aggregate; stating it
+    # here (a no-op: t is never null) keeps both branches' exchanges equal,
+    # so AQE explodes and aggregates the fit slice once and the normalizer
+    # reads a ReusedExchange (host_skew precedent)
     cnts = (
-        fit_occ.groupBy("t")
+        fit_occ.where(F.col("t").isNotNull())
+        .groupBy("t")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint(eager=True)
     )
     # normalizer = ALL fit-slice occurrences (below-threshold mass stays in
     # the denominator, so probabilities stay a true distribution + floor)

@@ -1,5 +1,13 @@
-"""Sources: the pages- and documents-table scans (S1/S3 in SURVEY.md
-section 2.1).
+"""Sources: every table scan the engine and its operator queries make
+(S1/S3 in SURVEY.md section 2.1).
+
+This module owns two decisions no other module repeats:
+
+* the table path: ``read_table(spark, sf_dir, name)`` reads
+  ``{sf_dir}/{name}.parquet``; ``read_documents`` is its ``documents`` case;
+* the read policy: ``read_parquet`` declares the schema from the parquet
+  footer, so building a query runs no schema-inference job (a schema-less
+  ``spark.read.parquet`` starts one per call).
 
 At production scale the corpus is an Iceberg table
 (``spark.read.table("warehouse.pages")``) and resume/incremental reads use
@@ -11,8 +19,10 @@ a plain WHERE on the ``features`` tag array — pushed down by Catalyst.
 
 from __future__ import annotations
 
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..schemas import PAGES_SCHEMA
 
@@ -36,10 +46,29 @@ def read_pages(
     return df
 
 
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """Scan a parquet file or a directory of part files with the schema its
+    footer declares: no schema-inference job at build time.
+
+    ``prefer_timestamp_ntz``: Spark infers parquet timestamps written
+    without a time zone as ``TimestampNTZType``; without the flag the
+    declared type would be ``TimestampType`` and the read would cast."""
+    schema = ds.dataset(path, format="parquet").schema
+    return spark.read.schema(
+        from_arrow_schema(schema, prefer_timestamp_ntz=True)
+    ).parquet(path)
+
+
+def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Scan the driver table ``name`` of the scale-factor directory
+    ``sf_dir``."""
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
+
+
 def read_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scan the ``documents`` table: the one documents read every operator
     query goes through."""
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+    return read_table(spark, sf_dir, "documents")
 
 
 def resplit(df: DataFrame) -> DataFrame:

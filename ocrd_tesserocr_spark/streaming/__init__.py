@@ -31,8 +31,12 @@ def extract_stream(
     pages: DataFrame, params: ExtractParams = DEFAULT_PARAMS
 ) -> DataFrame:
     """Streaming extraction: identical kernel, streaming plan — the same
-    mapInArrow RecordBatch construction as the batch path."""
-    return pages.mapInArrow(make_extract_arrow_fn(params), schema=EXTRACTED_SCHEMA)
+    mapInArrow RecordBatch construction as the batch path.  As there, the
+    input is pruned to the two columns the kernel reads, so ``warc_ts``,
+    ``text`` and ``lang`` never cross to the Python worker."""
+    return pages.select("url", "html").mapInArrow(
+        make_extract_arrow_fn(params), schema=EXTRACTED_SCHEMA
+    )
 
 
 def start_to_parquet(

@@ -211,3 +211,68 @@ def test_lm_score_trigrams_not_lambda_built(spark):
 
     plan = _plan(q_lm_score(spark, SF_ORACLE))
     assert "lambdafunction(substring" not in plan
+
+
+#: queries that still start jobs while they are built, and why
+BUILD_JOBS_EXEMPT = {
+    # iterates label propagation to a fixpoint; each round is a job
+    "dedup_components",
+    # eager checkpoint of the shingle table that feeds the LSH branch and
+    # both verification sides (a lazy single-pass form is still open)
+    "near_dedup_verified",
+    # eager checkpoint of the edge table: lazily, Catalyst prunes ``cnt``
+    # on the n_pages branch, the two exchanges no longer match, and the
+    # final plan scans and regexps the pages corpus twice
+    "anchor_texts",
+}
+
+
+def test_building_queries_runs_no_job(spark):
+    """Building a query is lazy: every ``queries()`` entry but the named
+    exemptions starts zero Spark jobs (no schema inference, no eager
+    checkpoint)."""
+    import __spark_entry__
+
+    sc = spark.sparkContext
+    started = {}
+    try:
+        for name, build in __spark_entry__.queries().items():
+            group = f"build-guard-{name}"
+            sc.setJobGroup(group, f"build {name}")
+            build(spark, SF_ORACLE)
+            started[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert BUILD_JOBS_EXEMPT <= started.keys()
+    offenders = {n: k for n, k in started.items() if k and n not in BUILD_JOBS_EXEMPT}
+    assert offenders == {}
+
+
+def _final_plan(df) -> str:
+    """The adaptive plan as it ran (call after an action)."""
+    return df._jdf.queryExecution().executedPlan().executedPlan().toString()
+
+
+def test_host_skew_scans_documents_once(spark):
+    """The host aggregate feeds the output and the totals branch through
+    one exchange: the totals side reuses it, so the corpus is scanned
+    once."""
+    from ocrd_tesserocr_spark.operators.text import q_host_skew
+
+    df = q_host_skew(spark, SF_ORACLE)
+    df.collect()
+    plan = _final_plan(df)
+    assert "ReusedExchange" in plan
+    assert plan.count("FileScan") == 1
+
+
+def test_lm_score_shares_the_count_table(spark):
+    """The fit-slice count table feeds the model and the normalizer through
+    one trigram exchange: the second branch reuses it, so the fit slice is
+    exploded and aggregated once."""
+    from ocrd_tesserocr_spark.operators.text import q_lm_score
+
+    df = q_lm_score(spark, SF_ORACLE)
+    df.collect()
+    plan = _final_plan(df)
+    assert re.search(r"ReusedExchange \[[^\]]*\], Exchange hashpartitioning\(t#", plan)

@@ -3,6 +3,8 @@ produce exactly the batch results (availableNow trigger = one snapshot)."""
 
 from __future__ import annotations
 
+import re
+
 from ocrd_tesserocr_spark.pipeline import extract
 from ocrd_tesserocr_spark.streaming import extract_stream, pages_stream, start_to_parquet
 
@@ -28,6 +30,19 @@ def test_stream_matches_batch(spark, pages_small, tmp_path):
     )
     q2.awaitTermination(300)
     assert spark.read.parquet(out).count() == len(exp)
+
+
+def test_stream_kernel_reads_only_url_and_html(spark, tmp_path):
+    """Like the batch path, the streaming plan prunes the pages to the two
+    columns the kernel reads before they cross to the Python worker."""
+    src = tmp_path / "pages_in"
+    src.mkdir()
+    df = extract_stream(pages_stream(spark, str(src)))
+    plan = df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+    [cols] = re.findall(r"\(\d+\) MapInArrow\nInput \[\d+\]: \[([^\]]*)\]", plan)
+    assert [c.split("#")[0] for c in cols.split(", ")] == ["url", "html"]
 
 
 def test_stateful_dedup_stream_across_batches(spark, pages_small, tmp_path):

@@ -7,12 +7,16 @@ Usage: python tools/check_parity.py [name ...]
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+# Spark's Python workers import the package from their working directory
+os.chdir(REPO)
 
 SF_DIR = "/root/testdata/sf0.01"
 TABLES = [

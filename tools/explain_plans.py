@@ -6,10 +6,14 @@ kernel, broadcasts where intended, partial aggregation)."""
 from __future__ import annotations
 
 import io
+import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+# Spark's Python workers import the package from their working directory
+os.chdir(REPO)
 
 SF = "/root/testdata/sf0.01"
 
@@ -119,8 +123,10 @@ def main() -> None:
             "the host shuffle; corpus totals reduced to ONE row and "
             "broadcast back (never a single-partition window over the "
             "host table, which holds ~10^8 rows at Common-Crawl scale); "
-            "the host aggregate is localCheckpointed so the totals "
-            "branch reuses one corpus scan",
+            "no checkpoint: both branches plan the same host Exchange, and "
+            "at run time AQE executes it once and the totals branch reads "
+            "it as a ReusedExchange, so the corpus is scanned once (this "
+            "initial plan lists the Exchange under both branches)",
         ),
         (
             "Anchor-text aggregation (link-graph rollup)",
@@ -182,7 +188,7 @@ def main() -> None:
     )
     for title, df, note in sections:
         out.append(f"\n## {title}\n\n*{note}*\n\n```\n{fmt(df)}```\n")
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("".join(out))
     print("wrote PLANS.md")
     spark.stop()
