@@ -53,32 +53,31 @@ def kernel_control(cores: int, pages_path: str, n_docs: int = CONTROL_DOCS) -> f
     many-threaded JVM+Python trees harder than a tight loop)."""
     import multiprocessing as mp
 
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
     from ocrd_tesserocr_spark import bench_scaling as me
+    # imported before the pool forks, so no worker imports the kernel's
+    # modules inside the timed window
+    from ocrd_tesserocr_spark import kernel  # noqa: F401
 
-    htmls = (
-        pq.read_table(pages_path, columns=["html"])
-        .slice(0, n_docs)
-        .column("html")
-        .to_pylist()
-    )
-    chunks = [htmls[i :: cores * 4] for i in range(cores * 4)]
+    pages = pq.read_table(pages_path, columns=["url", "html"]).slice(0, n_docs)
+    k = cores * 4
+    chunks = [pages.take(pa.array(range(i, pages.num_rows, k), pa.int64())) for i in range(k)]
     t0 = time.time()
     with mp.Pool(cores) as pool:
         total = sum(pool.map(me._control_chunk, chunks))
     return round(total / (time.time() - t0), 1)
 
 
-def _control_chunk(htmls) -> int:
-    from ocrd_tesserocr_spark.oracle import extract_document
+def _control_chunk(pages) -> int:
+    """Run the Spark path's ``mapInArrow`` kernel over one (url, html)
+    table; returns its doc count."""
+    from ocrd_tesserocr_spark.kernel import make_extract_arrow_fn
     from ocrd_tesserocr_spark.plans import EXTRACT
 
-    n = 0
-    for h in htmls:
-        extract_document(h, EXTRACT)
-        n += 1
-    return n
+    fn = make_extract_arrow_fn(EXTRACT)
+    return sum(out.num_rows for out in fn(iter(pages.to_batches())))
 
 
 #: corpus slice for the pre-flight control burst: big enough that pool

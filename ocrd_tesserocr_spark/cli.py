@@ -18,9 +18,10 @@ subcommand/preset of this single job::
     spark-submit --py-files dist/engine.zip tools/submit_entry.py \\
         extract --preset recognize --input /data/pages --output /data/extracted
 
-(``tools/submit_scaling.sh`` wraps this as the two-cluster-size N / 4N
-deployment recipe for the scaling-efficiency evidence; the shim exists
-because spark-submit runs its primary file as a parentless script.)
+(``tools/submit_scaling.sh`` builds ``dist/engine.zip`` from the package
+and wraps this as the two-cluster-size N / 4N deployment recipe for the
+scaling-efficiency evidence; the shim exists because spark-submit runs
+its primary file as a parentless script.)
 
 plus ``recompute`` (process_existing analogue) and ``lineage``.  On a real
 cluster ``--master yarn/k8s`` + executor counts come from spark-submit;

@@ -15,10 +15,11 @@ Python) -> bounded explode (``ANCHOR_CAP`` anchors per page, so a link
 farm cannot explode the fanout) -> ONE shuffle keyed (href, anchor,
 url) with map-side partial aggregation.  That first aggregate IS the
 canonical link-edge table a production pipeline persists (Iceberg in
-deployment; ``localCheckpoint`` stands in here exactly like
-pipeline.py's stage tables) — everything downstream (per-target totals,
-distinct-source counts, dominant anchor) derives from it with
-O(distinct edges) shuffles, never rescanning the corpus.  Dominant
+deployment).  Here it stays lazy: both rollup branches read its one
+exchange (the second as a ``ReusedExchange``), and everything
+downstream (per-target totals, distinct-source counts, dominant anchor)
+derives from it with O(distinct edges) shuffles, never rescanning the
+corpus.  Dominant
 anchor ties break (count DESC, anchor ASC) so output is deterministic.
 """
 
@@ -58,11 +59,10 @@ def anchor_edges(pages: DataFrame, text_col=None) -> DataFrame:
 def anchor_texts(pages: DataFrame, text_col=None) -> DataFrame:
     """Per-target rollup: total anchors, distinct linking pages, dominant
     anchor text.  All post-edge-table work is O(distinct edges)."""
-    # the edge table feeds THREE consumers below.  Unlike host_skew, AQE
-    # cannot share it lazily: Catalyst prunes ``cnt`` on the n_pages branch,
-    # the two edge exchanges no longer match, and the corpus would be
-    # scanned and regexped twice — so it is checkpointed
-    edges = anchor_edges(pages, text_col=text_col).localCheckpoint(eager=True)
+    # the edge table feeds both branches below through one exchange (the
+    # host_skew precedent): AQE runs it once and the n_pages branch reads a
+    # ReusedExchange, so the corpus is scanned and regexped once
+    edges = anchor_edges(pages, text_col=text_col)
     pc = edges.groupBy("href", "anchor").agg(F.sum("cnt").alias("cnt"))
     wh = Window.partitionBy("href")
     top = (
@@ -81,8 +81,11 @@ def anchor_texts(pages: DataFrame, text_col=None) -> DataFrame:
             F.col("cnt").cast("long").alias("top_anchor_count"),
         )
     )
+    # a no-op filter (cnt >= 1 always) keeps ``cnt`` on this branch: else
+    # Catalyst prunes it and the two edge exchanges no longer match
     pg = (
-        edges.select("href", "url")
+        edges.where(F.col("cnt") > 0)
+        .select("href", "url")
         .distinct()
         .groupBy("href")
         .agg(F.count(F.lit(1)).alias("n_pages"))

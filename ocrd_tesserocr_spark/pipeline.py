@@ -7,25 +7,35 @@ Physical plan (SURVEY.md section 4)::
     -> Filter (resume anti-join, lang, ...)   -- predicate pushdown
     -> Exchange hashpartitioning(xxhash64(url, salt), N)   -- explicit salting
     -> MapInArrow(extract)                    -- the whole inner loop
-    -> AppendData(extracted, snapshot=K) + lineage rows    -- atomic-ish commit
+    -> AppendData(extracted, snapshot=K)      -- the data write
+    -> one groupBy(partition_id) over the written snapshot -> lineage rows,
+       whose sums are the manifest totals     -- the atomic-ish commit
+
+Every stage opens through ``_open_stage`` (one manifest read: snapshot id
+and resume anti-join) and commits through ``_commit_stage``.
 
 At production scale the sink is an Iceberg table and each stage commit is an
 Iceberg snapshot (the analogue of the reference's METS-server-serialized
 metadata commit, /root/reference/test/conftest.py:25-37).  This sandbox has
 no Iceberg jars, so the sink is a parquet directory partitioned by
-``snapshot_id`` with the same append/resume semantics; swapping
-``_write_snapshot`` for ``df.writeTo(table).append()`` is the only change
-needed on a real cluster.
+``snapshot_id`` with the same append/resume semantics; swapping the data
+write in ``_commit_stage`` for ``df.writeTo(table).append()`` is the only
+change needed on a real cluster.
 """
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import os
+import shutil
 import time
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from .kernel import make_extract_arrow_fn
 from .oracle import DEFAULT_PARAMS, ExtractParams
@@ -71,7 +81,6 @@ def extract(
     pages: DataFrame,
     params: ExtractParams = DEFAULT_PARAMS,
     num_partitions: int | None = None,
-    salt: int = 0,
 ) -> DataFrame:
     """pages -> extracted (lazy; no action triggered).
 
@@ -97,7 +106,7 @@ def extract(
     pages = pages.select("url", "html")
     splits = _exchange_free_splits(pages)
     if splits is None or splits < 2 * spark.sparkContext.defaultParallelism:
-        pages = salted_repartition(pages, num_partitions, salt)
+        pages = salted_repartition(pages, num_partitions)
     return pages.mapInArrow(make_extract_arrow_fn(params), schema=EXTRACTED_SCHEMA)
 
 
@@ -127,6 +136,10 @@ def lineage_from_extracted(
 # snapshot-committed stage runs (checkpoint resumability)
 # ---------------------------------------------------------------------------
 
+#: committed docs up to which the resume anti-join broadcasts the url set
+#: (~50 B/url -> well under the 8 GB broadcast ceiling at 4M rows)
+BROADCAST_RESUME_THRESHOLD = 4_000_000
+
 
 def _manifest_path(out_dir: str) -> str:
     return os.path.join(out_dir, "_snapshots.json")
@@ -153,15 +166,80 @@ def committed_snapshot_ids(out_dir: str) -> list[int]:
     return [e["snapshot_id"] for e in read_manifest(out_dir)]
 
 
+def _read_snapshots(spark: SparkSession, root: str, ids: list[int], schema) -> DataFrame:
+    if not ids:
+        return spark.createDataFrame([], schema)
+    paths = [os.path.join(root, f"snapshot_id={i}") for i in ids]
+    return spark.read.schema(schema).parquet(*paths)
+
+
 def read_extracted(spark: SparkSession, out_dir: str) -> DataFrame:
     """Read only *committed* snapshots (uncommitted partial writes from a
     killed run are invisible — snapshot isolation, the Iceberg property the
     manifest emulates)."""
-    ids = committed_snapshot_ids(out_dir)
-    if not ids:
-        return spark.createDataFrame([], EXTRACTED_SCHEMA)
-    paths = [os.path.join(out_dir, f"snapshot_id={i}") for i in ids]
-    return spark.read.schema(EXTRACTED_SCHEMA).parquet(*paths)
+    return _read_snapshots(spark, out_dir, committed_snapshot_ids(out_dir), EXTRACTED_SCHEMA)
+
+
+def read_lineage(spark: SparkSession, out_dir: str) -> DataFrame:
+    root = os.path.join(out_dir, "_lineage")
+    return _read_snapshots(spark, root, committed_snapshot_ids(out_dir), LINEAGE_SCHEMA)
+
+
+def _open_stage(
+    spark: SparkSession, pages: DataFrame, out_dir: str, resume: bool
+) -> tuple[int, DataFrame]:
+    """Open the next snapshot of ``out_dir`` from one manifest read: its id,
+    and ``pages`` without the urls already committed there.
+
+    Resume = left-anti join of input urls against the union of committed
+    snapshots (the OCRD_EXISTING_OUTPUT=SKIP analogue,
+    test/test_recognize.py:144-146 of the reference): a restarted run
+    processes only the remainder, and a killed run leaves no visible
+    partial state because visibility requires the manifest commit.  The
+    committed-url set broadcasts while the manifest's own doc_count sum is
+    at most ``BROADCAST_RESUME_THRESHOLD``; above it the anti-join is a
+    shuffle join and AQE picks the strategy from runtime stats."""
+    os.makedirs(out_dir, exist_ok=True)
+    entries = read_manifest(out_dir)
+    ids = [e["snapshot_id"] for e in entries]
+    if resume and ids:
+        done = _read_snapshots(spark, out_dir, ids, EXTRACTED_SCHEMA).select("url")
+        if sum(e.get("doc_count", 0) for e in entries) <= BROADCAST_RESUME_THRESHOLD:
+            done = F.broadcast(done)
+        pages = pages.join(done, "url", "left_anti")
+    return max(ids, default=0) + 1, pages
+
+
+def _commit_stage(
+    spark: SparkSession, extracted: DataFrame, out_dir: str, snapshot_id: int, stage: str
+) -> dict:
+    """Write one snapshot's data, then its lineage rows from one aggregate
+    over the written files, then the atomic manifest commit whose totals
+    are the sums of those rows."""
+    t0 = time.time()
+    data_path = os.path.join(out_dir, f"snapshot_id={snapshot_id}")
+    extracted.write.mode("overwrite").parquet(data_path)
+    wall_ms = int((time.time() - t0) * 1000)
+
+    written = spark.read.schema(EXTRACTED_SCHEMA).parquet(data_path)
+    lineage = lineage_from_extracted(written, snapshot_id, stage, wall_ms)
+    rows = [r.asDict() for r in lineage.collect()]
+    # the few lineage rows are written here with pyarrow, like the
+    # manifest; a crashed attempt's file for this id is replaced, not
+    # read alongside
+    lineage_path = os.path.join(out_dir, "_lineage", f"snapshot_id={snapshot_id}")
+    shutil.rmtree(lineage_path, ignore_errors=True)
+    os.makedirs(lineage_path)
+    table = pa.Table.from_pylist(rows, schema=to_arrow_schema(LINEAGE_SCHEMA))
+    pq.write_table(table, os.path.join(lineage_path, "part-00000.parquet"))
+
+    totals = {
+        "doc_count": sum(r["doc_count"] for r in rows),
+        "failure_count": sum(r["failure_count"] for r in rows),
+        "wall_ms": wall_ms,
+    }
+    _commit_manifest(out_dir, {"snapshot_id": snapshot_id, "stage": stage, **totals})
+    return {"snapshot_id": snapshot_id, **totals}
 
 
 def run_stage(
@@ -173,65 +251,11 @@ def run_stage(
     num_partitions: int | None = None,
     resume: bool = True,
 ) -> dict:
-    """Execute one stage with checkpoint-resume semantics.
-
-    Resume = left-anti join of input urls against the union of committed
-    snapshots (the OCRD_EXISTING_OUTPUT=SKIP analogue,
-    /root/reference/test/test_recognize.py:144-146): a restarted run
-    processes only the remainder, and a killed run leaves no visible
-    partial state because visibility requires the manifest commit.
-    """
-    os.makedirs(out_dir, exist_ok=True)
-    snapshot_id = (max(committed_snapshot_ids(out_dir)) + 1) if read_manifest(out_dir) else 1
-
-    if resume and committed_snapshot_ids(out_dir):
-        done = read_extracted(spark, out_dir).select("url")
-        small = _small_committed(out_dir)
-        pages = pages.join(F.broadcast(done) if small else done, "url", "left_anti")
-
-    t0 = time.time()
+    """Execute one stage with checkpoint-resume semantics (see
+    ``_open_stage``) into the next snapshot of ``out_dir``."""
+    snapshot_id, pages = _open_stage(spark, pages, out_dir, resume)
     extracted = extract(spark, pages, params, num_partitions)
-    return _commit_stage(spark, extracted, out_dir, snapshot_id, stage, t0)
-
-
-def _commit_stage(
-    spark: SparkSession,
-    extracted: DataFrame,
-    out_dir: str,
-    snapshot_id: int,
-    stage: str,
-    t0: float,
-) -> dict:
-    """Write one snapshot's data + lineage, then the atomic manifest commit
-    (shared by run_stage and recompute_stage)."""
-    data_path = os.path.join(out_dir, f"snapshot_id={snapshot_id}")
-    extracted.write.mode("overwrite").parquet(data_path)
-    wall_ms = int((time.time() - t0) * 1000)
-
-    written = spark.read.schema(EXTRACTED_SCHEMA).parquet(data_path)
-    lineage = lineage_from_extracted(written, snapshot_id, stage, wall_ms)
-    lineage_path = os.path.join(out_dir, "_lineage", f"snapshot_id={snapshot_id}")
-    lineage.write.mode("overwrite").parquet(lineage_path)
-
-    counts = written.agg(
-        F.count(F.lit(1)).alias("n"), F.sum(F.col("failed").cast("long")).alias("f")
-    ).collect()[0]
-    _commit_manifest(
-        out_dir,
-        {
-            "snapshot_id": snapshot_id,
-            "stage": stage,
-            "doc_count": counts["n"],
-            "failure_count": counts["f"] or 0,
-            "wall_ms": wall_ms,
-        },
-    )
-    return {
-        "snapshot_id": snapshot_id,
-        "doc_count": counts["n"],
-        "failure_count": counts["f"] or 0,
-        "wall_ms": wall_ms,
-    }
+    return _commit_stage(spark, extracted, out_dir, snapshot_id, stage)
 
 
 def recompute_stage(
@@ -257,23 +281,12 @@ def recompute_stage(
     below the existing levels is refreshed); True lets the new recognition
     replace them.
     """
-    import dataclasses
-
-    os.makedirs(out_dir, exist_ok=True)
-    snapshot_id = (max(committed_snapshot_ids(out_dir)) + 1) if read_manifest(out_dir) else 1
-    stage = f"recompute_{level}"
-
+    snapshot_id, pages = _open_stage(spark, pages, out_dir, resume)
     committed = read_extracted(spark, in_dir)
     # only existing outputs are recomputed (the join against committed
     # segmentation); left_semi keeps the pages columns and lets AQE pick
     # broadcast-vs-shuffle for the url set
     subset = pages.join(committed.select("url"), "url", "left_semi")
-    if resume and committed_snapshot_ids(out_dir):
-        done = read_extracted(spark, out_dir).select("url")
-        small = _small_committed(out_dir)
-        subset = subset.join(F.broadcast(done) if small else done, "url", "left_anti")
-
-    t0 = time.time()
     deeper = dataclasses.replace(params, textequiv_level=level)
     recomputed = extract(spark, subset, deeper, num_partitions)
     if not overwrite_text:
@@ -284,30 +297,8 @@ def recompute_stage(
             .join(kept, "url")
             .select(*[f.name for f in EXTRACTED_SCHEMA.fields])
         )
-    return _commit_stage(spark, recomputed, out_dir, snapshot_id, stage, t0)
-
-
-def read_lineage(spark: SparkSession, out_dir: str) -> DataFrame:
-    ids = committed_snapshot_ids(out_dir)
-    if not ids:
-        return spark.createDataFrame([], LINEAGE_SCHEMA)
-    paths = [os.path.join(out_dir, "_lineage", f"snapshot_id={i}") for i in ids]
-    return spark.read.schema(LINEAGE_SCHEMA).parquet(*paths)
+    return _commit_stage(spark, recomputed, out_dir, snapshot_id, f"recompute_{level}")
 
 
 def user_view(extracted: DataFrame) -> DataFrame:
     return extracted.select(*EXTRACTED_USER_COLUMNS)
-
-
-BROADCAST_RESUME_THRESHOLD = 4_000_000
-
-
-def _small_committed(out_dir: str, threshold_rows: int = BROADCAST_RESUME_THRESHOLD) -> bool:
-    """Broadcast gate for the resume anti-join, decided from the manifest's
-    own doc_count accounting (no extra Spark action): under the threshold
-    the committed-url set broadcasts (~50 B/url -> well under the 8 GB
-    broadcast ceiling at 4M rows); at 10^12-doc scale it is huge and the
-    anti-join falls back to a shuffle join, where AQE picks the strategy
-    from runtime stats."""
-    total = sum(e.get("doc_count", 0) for e in read_manifest(out_dir))
-    return total <= threshold_rows

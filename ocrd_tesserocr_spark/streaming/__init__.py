@@ -2,10 +2,12 @@
 
 The reference is strictly batch (finite METS workspace; SURVEY.md section
 2.9), and the north rule asks for batch with checkpoint resumability — so
-streaming is a thin adapter, not a separate engine: the same Arrow kernel
-drops into ``foreachBatch`` unchanged, giving continuous ingestion of
-newly-landed WARC partitions with exactly-once sinks via the same
-snapshot-manifest commit.
+streaming is a thin adapter, not a separate engine: a file-source stream
+over newly-landed pages partitions (``pages_stream``) -> the batch path's
+``mapInArrow`` kernel (``extract_stream``) -> Spark's checkpointed,
+exactly-once parquet file sink (``start_to_parquet``).  The stream does not
+write the batch path's snapshot manifest or lineage rows; its progress
+lives in the sink's checkpoint directory.
 """
 
 from __future__ import annotations

@@ -672,3 +672,29 @@ def test_wide_grant_refusal_from_rep_evidence():
     throttled = _rep(2656.0, 10315.0, 2.9, 8.5, 4244.0, 13662.0)  # soc4 0.626
     assert not wide_grant_refusal([throttled, throttled])
     assert not wide_grant_refusal([])
+
+
+def test_scaling_control_runs_the_arrow_kernel(monkeypatch, tmp_path):
+    """The multiprocessing control behind ``spark_over_control`` runs the
+    kernel Spark runs (``make_extract_arrow_fn``), not the per-document
+    oracle, so a kernel-only change moves both sides of the ratio."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ocrd_tesserocr_spark import bench_scaling, oracle
+
+    def _oracle(*args, **kwargs):
+        raise AssertionError("the control must not call the oracle")
+
+    monkeypatch.setattr(oracle, "extract_document", _oracle)
+    pages = pa.table(
+        {
+            "url": ["u1", "u2", "u3"],
+            "html": [b"<p>one two</p>", b"<body><p>x</p></body>", None],
+        },
+        schema=pa.schema([("url", pa.string()), ("html", pa.binary())]),
+    )
+    assert bench_scaling._control_chunk(pages) == 3
+    path = str(tmp_path / "pages.parquet")
+    pq.write_table(pages, path)
+    assert bench_scaling.kernel_control(1, path, n_docs=3) > 0

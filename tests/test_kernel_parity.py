@@ -91,7 +91,7 @@ def test_structural_invariants(extracted_rows):
 def test_parallelism_invariance(spark, pages_small, extracted_rows):
     """Same results at different partition counts — the reference's
     pageparallel config invariance (test/conftest.py:10-43)."""
-    rows2 = extract(spark, pages_small, num_partitions=13, salt=7).collect()
+    rows2 = extract(spark, pages_small, num_partitions=13).collect()
     assert len(rows2) == len(extracted_rows)
     for r in rows2:
         assert extracted_rows[r["url"]]["text"] == r["text"]

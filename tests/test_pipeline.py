@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import functions as F
@@ -97,33 +98,114 @@ def test_mid_crash_rerun_is_idempotent(spark, pages_small, tmp_path):
 
 
 def test_resume_broadcast_gate(spark, pages_small, tmp_path):
-    """The resume anti-join broadcasts the committed-url set when the
-    manifest's doc_count is under the threshold and shuffles above it."""
-    from ocrd_tesserocr_spark.pipeline import (
-        _small_committed,
-        extract,
-        read_extracted,
-    )
-    import json as _json
+    """The resume anti-join ``_open_stage`` plans broadcasts the committed
+    urls while the manifest's doc_count is under the threshold, and
+    shuffles above it.  Size-based auto-broadcast is off here, so the plan
+    shows only the gate's own hint."""
+    from ocrd_tesserocr_spark.pipeline import _open_stage
 
     out_dir = str(tmp_path / "extracted")
     run_stage(spark, pages_small.limit(50), out_dir, num_partitions=2)
-    assert _small_committed(out_dir)  # 50 docs committed -> broadcast
 
-    done = read_extracted(spark, out_dir).select("url")
-    plan = pages_small.join(
-        F.broadcast(done), "url", "left_anti"
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastExchange" in plan
+    def plan():
+        _, pages = _open_stage(spark, pages_small, out_dir, resume=True)
+        return pages._jdf.queryExecution().executedPlan().toString()
 
-    # fake a huge committed history: the gate must flip to shuffle
-    manifest = os.path.join(out_dir, "_snapshots.json")
-    entries = _json.load(open(manifest))
-    entries.append({"snapshot_id": 99, "stage": "x", "doc_count": 10_000_000,
-                    "failure_count": 0, "wall_ms": 0})
-    with open(manifest, "w") as f:
-        _json.dump(entries, f)
-    assert not _small_committed(out_dir)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        assert "BroadcastExchange" in plan()  # 50 docs committed
+        # fake a huge committed history: the gate must flip to shuffle
+        manifest = os.path.join(out_dir, "_snapshots.json")
+        with open(manifest) as f:
+            entries = json.load(f)
+        entries[0]["doc_count"] = 10_000_000
+        with open(manifest, "w") as f:
+            json.dump(entries, f)
+        assert "BroadcastExchange" not in plan()
+    finally:
+        spark.conf.set(key, old)
+
+
+def _jobs(spark, group, fn):
+    """Spark jobs ``fn()`` starts, counted with a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_commit_costs_one_aggregate(spark, pages_small, tmp_path):
+    """A stage adds at most two jobs to the bare extract write of the same
+    input: the lineage aggregate over the written snapshot (its shuffle
+    and its collect).  The manifest totals come from those rows."""
+    from ocrd_tesserocr_spark.pipeline import extract
+
+    src = str(tmp_path / "pages")
+    pages_small.write.parquet(src)
+    bare = _jobs(
+        spark, "commit-guard-bare",
+        lambda: extract(spark, spark.read.parquet(src), num_partitions=4)
+        .write.parquet(str(tmp_path / "bare")),
+    )
+    stage = _jobs(
+        spark, "commit-guard-stage",
+        lambda: run_stage(spark, spark.read.parquet(src), str(tmp_path / "out"),
+                          num_partitions=4),
+    )
+    assert stage <= bare + 2, (bare, stage)
+
+
+def test_stale_lineage_is_replaced(spark, pages_small, tmp_path):
+    """A crashed attempt's lineage file for the next snapshot id is
+    replaced by the commit, not read alongside the new rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from ocrd_tesserocr_spark.pipeline import read_manifest
+    from ocrd_tesserocr_spark.schemas import LINEAGE_SCHEMA
+
+    out_dir = str(tmp_path / "extracted")
+    run_stage(spark, pages_small.limit(30), out_dir, num_partitions=2)
+    stale_dir = os.path.join(out_dir, "_lineage", "snapshot_id=2")
+    os.makedirs(stale_dir)
+    stale = {"snapshot_id": [2], "partition_id": [0], "stage": ["extract"],
+             "doc_count": [999], "failure_count": [9], "wall_ms": [1]}
+    pq.write_table(
+        pa.Table.from_pydict(stale, schema=to_arrow_schema(LINEAGE_SCHEMA)),
+        os.path.join(stale_dir, "part-stale.parquet"),
+    )
+    r2 = run_stage(spark, pages_small.limit(60), out_dir, num_partitions=2)
+    assert r2["snapshot_id"] == 2 and r2["doc_count"] == 30
+    assert not os.path.exists(os.path.join(stale_dir, "part-stale.parquet"))
+
+    lin = read_lineage(spark, out_dir).agg(
+        F.sum("doc_count").alias("d"), F.sum("failure_count").alias("f")
+    ).collect()[0]
+    entries = read_manifest(out_dir)
+    assert lin["d"] == sum(e["doc_count"] for e in entries) == 60
+    assert lin["f"] == sum(e["failure_count"] for e in entries)
+
+
+def test_empty_resume_commits_empty_lineage(spark, pages_small, tmp_path):
+    """A resumed stage with nothing left commits doc_count 0 and an empty
+    lineage snapshot, readable by Spark and by pyarrow."""
+    import pyarrow.parquet as pq
+
+    out_dir = str(tmp_path / "extracted")
+    run_stage(spark, pages_small.limit(20), out_dir, num_partitions=2)
+    r2 = run_stage(spark, pages_small.limit(20), out_dir, num_partitions=2)
+    assert (r2["snapshot_id"], r2["doc_count"], r2["failure_count"]) == (2, 0, 0)
+    lin = read_lineage(spark, out_dir)
+    assert lin.where(F.col("snapshot_id") == 2).count() == 0
+    assert lin.count() > 0  # snapshot 1's rows
+    path = os.path.join(out_dir, "_lineage", "snapshot_id=2")
+    assert pq.read_table(path).num_rows == 0
 
 
 def test_connected_components_raises_without_convergence(spark):

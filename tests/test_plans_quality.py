@@ -220,10 +220,6 @@ BUILD_JOBS_EXEMPT = {
     # eager checkpoint of the shingle table that feeds the LSH branch and
     # both verification sides (a lazy single-pass form is still open)
     "near_dedup_verified",
-    # eager checkpoint of the edge table: lazily, Catalyst prunes ``cnt``
-    # on the n_pages branch, the two exchanges no longer match, and the
-    # final plan scans and regexps the pages corpus twice
-    "anchor_texts",
 }
 
 
@@ -260,6 +256,19 @@ def test_host_skew_scans_documents_once(spark):
     from ocrd_tesserocr_spark.operators.text import q_host_skew
 
     df = q_host_skew(spark, SF_ORACLE)
+    df.collect()
+    plan = _final_plan(df)
+    assert "ReusedExchange" in plan
+    assert plan.count("FileScan") == 1
+
+
+def test_anchor_texts_scans_pages_once(spark):
+    """The edge table feeds the top-anchor and the n_pages branches through
+    one exchange: the n_pages side reuses it, so the pages corpus is
+    scanned and regexped once."""
+    from ocrd_tesserocr_spark.operators.linkgraph import q_anchor_texts
+
+    df = q_anchor_texts(spark, SF_ORACLE)
     df.collect()
     plan = _final_plan(df)
     assert "ReusedExchange" in plan

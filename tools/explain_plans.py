@@ -131,12 +131,15 @@ def main() -> None:
         (
             "Anchor-text aggregation (link-graph rollup)",
             q_anchor_texts(spark, SF),
-            "one corpus scan feeds the checkpointed (href, anchor, url) "
-            "edge table (capped regexp pair-extract, ONE O(edges) "
-            "shuffle with map-side partial agg); both rollup branches "
-            "read the checkpoint, never the corpus — the dominant-anchor "
-            "window plans a map-side WindowGroupLimit and the tiny "
-            "n_pages aggregate broadcasts into the final join",
+            "one corpus scan feeds the (href, anchor, url) edge table "
+            "(capped regexp pair-extract, ONE O(edges) shuffle with "
+            "map-side partial agg); no checkpoint: a no-op cnt > 0 filter "
+            "keeps both rollup branches on the same edge Exchange, which "
+            "AQE executes once (the n_pages branch reads a "
+            "ReusedExchange, so the corpus is scanned once; this initial "
+            "plan lists the Exchange under both branches) — the "
+            "dominant-anchor window plans a map-side WindowGroupLimit and "
+            "the tiny n_pages aggregate broadcasts into the final join",
         ),
         (
             "Repetition stats (Gopher repetition filters)",
@@ -188,8 +191,9 @@ def main() -> None:
     )
     for title, df, note in sections:
         out.append(f"\n## {title}\n\n*{note}*\n\n```\n{fmt(df)}```\n")
+    # checkout-relative cache paths, so the file reads the same anywhere
     with open(os.path.join(REPO, "PLANS.md"), "w") as f:
-        f.write("".join(out))
+        f.write("".join(out).replace(f"file:{REPO}/", "file:"))
     print("wrote PLANS.md")
     spark.stop()
 
