@@ -86,11 +86,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    from ocrd_tesserocr_spark.corpus import (
-        materialize_extracted,
-        materialize_pages,
-        materialize_words,
-    )
+    from ocrd_tesserocr_spark.corpus import materialize_oracle, materialize_pages
     from ocrd_tesserocr_spark.operators import all_queries
 
     # cache-backed oracles (font_style/media_meta/font_style_words and the
@@ -102,8 +98,7 @@ def oracle_sql() -> dict[str, str]:
     o: dict[str, str] = {}
     try:
         materialize_pages("/root/testdata/sf0.01")
-        materialize_words("/root/testdata/sf0.01")
-        flag, blk = materialize_extracted("/root/testdata/sf0.01")
+        _, flag, blk = materialize_oracle("/root/testdata/sf0.01")
         o["extract_flagship"] = f"""
 SELECT url, text, conf, n_blocks, failed FROM read_parquet('{flag}')
 """

@@ -172,6 +172,7 @@ def main(argv: list[str] | None = None) -> int:
     from pyspark.sql import SparkSession
 
     from .session import get_spark
+    from .sources import read_parquet
 
     # embedding-friendly: only stop a session this invocation created.
     # getActiveSession() is thread-local, so also check the process-wide
@@ -188,7 +189,7 @@ def main(argv: list[str] | None = None) -> int:
             from .plans import PRESETS
 
             params = apply_cli_params(PRESETS[args.preset], args.param, args.rules)
-            pages = spark.read.parquet(args.input)
+            pages = read_parquet(spark, args.input)
             res = run_stage(
                 spark,
                 pages,
@@ -206,7 +207,7 @@ def main(argv: list[str] | None = None) -> int:
 
             res = recompute_stage(
                 spark,
-                spark.read.parquet(args.input),
+                read_parquet(spark, args.input),
                 args.committed,
                 args.output,
                 level=args.level,
@@ -278,7 +279,7 @@ def main(argv: list[str] | None = None) -> int:
         if args.cmd == "fontshape":
             from .operators.fontshape import font_style_counts
 
-            font_style_counts(spark.read.parquet(args.input)).write.mode(
+            font_style_counts(read_parquet(spark, args.input)).write.mode(
                 "overwrite"
             ).parquet(args.output)
             return 0

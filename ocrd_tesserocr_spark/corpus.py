@@ -240,14 +240,10 @@ def pages_from_documents_pdf(pdf: pd.DataFrame, repeat: int = 1) -> pd.DataFrame
     )
 
 
-def synth_pages_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas entry: distributed deterministic synthesis."""
-    for pdf in it:
-        yield pages_from_documents_pdf(pdf)
-
-
 def make_synth_fn(repeat: int):
-    """Bound-repeat variant for the bench corpus (realistic page sizes)."""
+    """mapInPandas entry: distributed deterministic synthesis, each page's
+    body text repeated ``repeat`` times (1 for the test corpus; more for
+    the bench corpus's realistic page sizes)."""
 
     def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -263,7 +259,20 @@ def pages_df(spark, sf_dir: str):
     from .sources import read_documents
 
     docs = read_documents(spark, sf_dir).select("doc_id", "text", "lang")
-    return docs.mapInPandas(synth_pages_batches, schema=PAGES_SCHEMA)
+    return docs.mapInPandas(make_synth_fn(1), schema=PAGES_SCHEMA)
+
+
+def _write_cache(tbl, out: str, **kw) -> None:
+    """Write one cache parquet through a temp file and a rename, so a
+    reader never sees a partial file."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    os.makedirs(os.path.dirname(out), exist_ok=True)
+    tmp = out + ".tmp"
+    pq.write_table(tbl, tmp, **kw)
+    os.replace(tmp, out)
 
 
 def materialize_pages(sf_dir: str) -> str:
@@ -294,15 +303,12 @@ def materialize_pages(sf_dir: str) -> str:
         (bytes(b).decode("utf-8", errors="replace") if b is not None else None)
         for b in pdf["html"]
     ]
-    os.makedirs(os.path.dirname(out), exist_ok=True)
-    tmp = out + ".tmp"
-    pq.write_table(
+    _write_cache(
         pa.Table.from_pandas(pdf, preserve_index=False),
-        tmp,
+        out,
         coerce_timestamps="us",  # Spark cannot read TIMESTAMP(NANOS)
         allow_truncated_timestamps=True,
     )
-    os.replace(tmp, out)
     return out
 
 
@@ -315,142 +321,71 @@ def pages_records(sf_dir: str) -> list:
     return pages_from_documents_pdf(pdf).to_dict("records")
 
 
-def materialize_words(sf_dir: str) -> str:
-    """Write the flat per-word TextStyle table the pure-Python oracle
-    produces for ``sf_dir`` to a cache parquet and return the path.
-
-    Columns (url, word_id, bold, italic, monospace): the DuckDB side of
-    the ``font_style_words`` correctness gate — DuckDB aggregates this
-    oracle-extracted table while Spark aggregates the kernel-extracted
-    word structs, so the gate checks kernel-vs-oracle style parity AND
-    the Spark aggregation.  Test/oracle infrastructure only.
-    """
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from .oracle import extract_document
-
-    out = words_cache_path(sf_dir)
-    if os.path.exists(out):
-        return out
-    urls: list = []
-    wids: list = []
-    bold: list = []
-    ital: list = []
-    mono: list = []
-    for r in pages_records(sf_dir):
-        doc = extract_document(r["html"])
-        for b in doc["blocks"]:
-            for ln in b["lines"]:
-                for w in ln["words"]:
-                    urls.append(r["url"])
-                    wids.append(w["word_id"])
-                    s = w["style"]
-                    bold.append(s["bold"])
-                    ital.append(s["italic"])
-                    mono.append(s["monospace"])
-    os.makedirs(os.path.dirname(out), exist_ok=True)
-    tmp = out + ".tmp"
-    pq.write_table(
-        pa.table(
-            {
-                "url": pa.array(urls, type=pa.string()),
-                "word_id": pa.array(wids, type=pa.string()),
-                "bold": pa.array(bold, type=pa.bool_()),
-                "italic": pa.array(ital, type=pa.bool_()),
-                "monospace": pa.array(mono, type=pa.bool_()),
-            }
-        ),
-        tmp,
-    )
-    os.replace(tmp, out)
-    return out
-
-
-def materialize_extracted(sf_dir: str) -> tuple[str, str]:
-    """Write the pure-Python oracle's extraction results for ``sf_dir`` to
-    two cache parquets and return (flagship_path, blocks_path).
-
-    flagship: (url, text, conf, n_blocks, failed) — the driver-facing
-    projection of extract_flagship.  blocks: the exploded block-span table
-    matching extract_block_spans.  With these, the two extraction queries
-    get REAL DuckDB oracles (DuckDB aggregates the oracle-extracted
-    tables while Spark runs the live kernel) instead of rows-only checks —
-    the same differential pattern as font_style/media_meta/font_style_words.
-    Test/oracle infrastructure only.
-    """
-    import os
+def _round6(x: float) -> float:
+    # Spark's F.round = BigDecimal.valueOf(double).setScale(6, HALF_UP);
+    # valueOf goes through Double.toString — the SHORTEST round-trip
+    # decimal — which Python's repr() also produces.  Decimal(x) would
+    # instead expand the exact binary value (0.9978125 -> ...4999...)
+    # and round DOWN where Spark rounds up.  Python's round() differs
+    # twice over (banker's).  repr + HALF_UP matches Spark exactly.
     from decimal import ROUND_HALF_UP, Decimal
 
+    return float(Decimal(repr(float(x))).quantize(Decimal("0.000001"), ROUND_HALF_UP))
+
+
+def materialize_oracle(sf_dir: str) -> tuple[str, str, str]:
+    """Run the pure-Python oracle once over ``sf_dir``'s pages and write
+    its three cache parquets; return their (words, flagship, blocks) paths.
+
+    words: (url, word_id, bold, italic, monospace), the DuckDB side of
+    ``font_style_words``.  flagship: (url, text, conf, n_blocks, failed),
+    the projection extract_flagship returns.  blocks: the
+    exploded block-span table matching extract_block_spans.  DuckDB
+    aggregates these oracle-extracted tables while Spark runs the live
+    kernel, so each gate checks kernel-vs-oracle parity AND the Spark
+    side's query.  Test/oracle infrastructure only.
+    """
+    import os
+
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
     from .oracle import extract_document
 
-    def round6(x: float) -> float:
-        # Spark's F.round = BigDecimal.valueOf(double).setScale(6, HALF_UP);
-        # valueOf goes through Double.toString — the SHORTEST round-trip
-        # decimal — which Python's repr() also produces.  Decimal(x) would
-        # instead expand the exact binary value (0.9978125 -> ...4999...)
-        # and round DOWN where Spark rounds up.  Python's round() differs
-        # twice over (banker's).  repr + HALF_UP matches Spark exactly.
-        return float(
-            Decimal(repr(float(x))).quantize(Decimal("0.000001"), ROUND_HALF_UP)
-        )
-
-    flag_out, blk_out = extracted_cache_paths(sf_dir)
-    if os.path.exists(flag_out) and os.path.exists(blk_out):
-        return flag_out, blk_out
-    f_url, f_text, f_conf, f_nb, f_failed = [], [], [], [], []
-    b_cols: dict = {
-        "url": [], "block_id": [], "kind": [], "order_idx": [],
-        "char_start": [], "char_end": [], "is_main": [], "link_density": [],
-    }
+    paths = (words_cache_path(sf_dir),) + extracted_cache_paths(sf_dir)
+    if all(os.path.exists(p) for p in paths):
+        return paths
+    s, b, i32, i64, f64 = pa.string(), pa.bool_(), pa.int32(), pa.int64(), pa.float64()
+    schemas = (
+        pa.schema([("url", s), ("word_id", s), ("bold", b), ("italic", b),
+                   ("monospace", b)]),
+        pa.schema([("url", s), ("text", s), ("conf", f64), ("n_blocks", i32),
+                   ("failed", b)]),
+        pa.schema([("url", s), ("block_id", s), ("kind", s), ("order_idx", i32),
+                   ("char_start", i64), ("char_end", i64), ("is_main", b),
+                   ("link_density", f64)]),
+    )
+    words, flag, blocks = [], [], []
     for r in pages_records(sf_dir):
+        url = r["url"]
         doc = extract_document(r["html"])
-        f_url.append(r["url"])
-        f_text.append(doc["text"])
-        f_conf.append(round6(doc["conf"]))
-        f_nb.append(len(doc["blocks"]))
-        f_failed.append(doc["failed"])
-        for b in doc["blocks"]:
-            b_cols["url"].append(r["url"])
-            b_cols["block_id"].append(b["block_id"])
-            b_cols["kind"].append(b["kind"])
-            b_cols["order_idx"].append(b["order_idx"])
-            b_cols["char_start"].append(b["char_start"])
-            b_cols["char_end"].append(b["char_end"])
-            b_cols["is_main"].append(b["is_main"])
-            b_cols["link_density"].append(round6(b["link_density"]))
-    os.makedirs(os.path.dirname(flag_out), exist_ok=True)
-    flag_tbl = pa.table(
-        {
-            "url": pa.array(f_url, type=pa.string()),
-            "text": pa.array(f_text, type=pa.string()),
-            "conf": pa.array(f_conf, type=pa.float64()),
-            "n_blocks": pa.array(f_nb, type=pa.int32()),
-            "failed": pa.array(f_failed, type=pa.bool_()),
-        }
-    )
-    blk_tbl = pa.table(
-        {
-            "url": pa.array(b_cols["url"], type=pa.string()),
-            "block_id": pa.array(b_cols["block_id"], type=pa.string()),
-            "kind": pa.array(b_cols["kind"], type=pa.string()),
-            "order_idx": pa.array(b_cols["order_idx"], type=pa.int32()),
-            "char_start": pa.array(b_cols["char_start"], type=pa.int64()),
-            "char_end": pa.array(b_cols["char_end"], type=pa.int64()),
-            "is_main": pa.array(b_cols["is_main"], type=pa.bool_()),
-            "link_density": pa.array(b_cols["link_density"], type=pa.float64()),
-        }
-    )
-    for tbl, out in ((flag_tbl, flag_out), (blk_tbl, blk_out)):
-        tmp = out + ".tmp"
-        pq.write_table(tbl, tmp)
-        os.replace(tmp, out)
-    return flag_out, blk_out
+        flag.append((url, doc["text"], _round6(doc["conf"]), len(doc["blocks"]),
+                     doc["failed"]))
+        for bl in doc["blocks"]:
+            blocks.append((url, bl["block_id"], bl["kind"], bl["order_idx"],
+                           bl["char_start"], bl["char_end"], bl["is_main"],
+                           _round6(bl["link_density"])))
+            for ln in bl["lines"]:
+                for w in ln["words"]:
+                    st = w["style"]
+                    words.append((url, w["word_id"], st["bold"], st["italic"],
+                                  st["monospace"]))
+    for rows, schema, out in zip((words, flag, blocks), schemas, paths):
+        cols = list(zip(*rows)) or [()] * len(schema)
+        _write_cache(pa.Table.from_arrays(
+            [pa.array(list(c), type=f.type) for c, f in zip(cols, schema)],
+            schema=schema,
+        ), out)
+    return paths
 
 
 def hostile_pages() -> list:

@@ -203,7 +203,7 @@ def lsh_candidate_pairs(docs: DataFrame, hs_df: DataFrame | None = None) -> Data
 
     ``hs_df``: optional precomputed (doc_id, hs) shingle-hash table — a
     caller that also needs the shingle sets for exact verification passes
-    its (persisted) copy so the md5-heavy shingle map runs once, not per
+    its shared copy so the md5-heavy shingle map runs once, not per
     branch.  MinHash is invariant under duplicate elements, so distinct or
     raw shingle arrays give identical signatures."""
     if hs_df is None:
@@ -431,27 +431,27 @@ def q_near_dedup_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = resplit(read_documents(spark, sf_dir)).where(
         F.size(F.split(F.col("text"), " ")) >= 3
     )
-    # materialize the shingle table once: it feeds the LSH signature branch
-    # AND both verification sides.  localCheckpoint (not persist): blocks
-    # are released by the ContextCleaner as soon as the query's DataFrame
-    # is garbage-collected, so a long-lived session running the whole
-    # suite doesn't accrete cached shingle tables (persist() would pin
-    # them until an explicit unpersist the caller never gets to make).
-    # At cluster scale the equivalent is a reliable checkpoint / staged
-    # table between the shingle pass and its three consumers.
-    with_h = (
-        _staged_hs(docs)
+    # the shingle table feeds the LSH signature branch AND both
+    # verification sides.  Ending it in a re-split exchange lets AQE run the
+    # md5 shingle map once and hand the other consumers a ReusedExchange
+    # (ngram_jaccard_stats precedent; no eager checkpoint, so building the
+    # query runs no job).  For the exchanges to match: the joins infer
+    # isnotnull(doc_id), which is stated here (a no-op for the LSH side too:
+    # collect_list drops null ids), and the verification sides join on
+    # DataFrame aliases instead of renamed columns, since a rename is
+    # pushed below the exchange
+    with_h = resplit(
+        _staged_hs(docs.where(F.col("doc_id").isNotNull()))
         .select("doc_id", F.array_distinct("hs").alias("hs"))
-        .localCheckpoint(eager=True)
     )
     cands = lsh_candidate_pairs(docs, hs_df=with_h).select(
         F.col("doc_a").alias("da"), F.col("doc_b").alias("db")
     )
-    ha = with_h.select(F.col("doc_id").alias("da"), F.col("hs").alias("hsa"))
-    hb = with_h.select(F.col("doc_id").alias("db"), F.col("hs").alias("hsb"))
+    ha, hb = with_h.alias("ha"), with_h.alias("hb")
     verified = (
-        cands.join(ha, "da")
-        .join(hb, "db")
+        cands.join(ha, F.col("da") == F.col("ha.doc_id"))
+        .join(hb, F.col("db") == F.col("hb.doc_id"))
+        .select("da", "db", F.col("ha.hs").alias("hsa"), F.col("hb.hs").alias("hsb"))
         .withColumn("inter", F.size(F.array_intersect("hsa", "hsb")))
         .withColumn(
             "jac",

@@ -658,26 +658,28 @@ def q_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.substring("text", 1, _LM_DOC_CAP).alias("s")
     )
     docs = resplit(base)
-    # fit pass: own scan, slice filter applied at the scan, re-split for
-    # the explode+groupBy
-    fit_occ = (
-        resplit(
-            read_documents(spark, sf_dir)
-            .where(F.col("doc_id") % _LM_FIT_MOD == 0)
-            .select(F.substring("text", 1, _LM_DOC_CAP).alias("s"))
-        )
-        .select("s", F.explode(_lm_tri_idx(F.col("s"))).alias("i"))
-        .select(F.col("s").substr(F.col("i"), F.lit(3)).alias("t"))
+    # the fit slice feeds the fit pass and the cutoff sample below through
+    # one re-split exchange; the second consumer reads a ReusedExchange.
+    # The fit pass's explode infers isnotnull(s) at its scan; stating it
+    # here keeps both scans equal, and it is a no-op for the sample too (a
+    # null s scores n_trigrams = 0, which the sample drops)
+    fit = resplit(
+        base.where((F.col("doc_id") % _LM_FIT_MOD == 0) & F.col("s").isNotNull())
     )
+    fit_occ = fit.select(
+        "doc_id", "s", F.explode(_lm_tri_idx(F.col("s"))).alias("i")
+    ).select("doc_id", F.col("s").substr(F.col("i"), F.lit(3)).alias("t"))
     # the O(vocab) count table feeds BOTH the model and the normalizer.  The
     # model's left join infers isnotnull(t) below this aggregate; stating it
     # here (a no-op: t is never null) keeps both branches' exchanges equal,
     # so AQE explodes and aggregates the fit slice once and the normalizer
-    # reads a ReusedExchange (host_skew precedent)
+    # reads a ReusedExchange (host_skew precedent).  Counting doc_id (never
+    # null in the slice) equals counting rows and keeps doc_id in the fit
+    # exchange, which the cutoff sample's exchange also carries
     cnts = (
         fit_occ.where(F.col("t").isNotNull())
         .groupBy("t")
-        .agg(F.count(F.lit(1)).alias("cnt"))
+        .agg(F.count("doc_id").alias("cnt"))
     )
     # normalizer = ALL fit-slice occurrences (below-threshold mass stays in
     # the denominator, so probabilities stay a true distribution + floor)
@@ -720,7 +722,7 @@ def q_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     sample = (
-        _score(resplit(base.where(F.col("doc_id") % _LM_FIT_MOD == 0)))
+        _score(fit)
         .where(F.col("n_trigrams") > 0)
         .select("doc_id", F.col("avg_neg_logp").alias("s"))
     )

@@ -1,9 +1,11 @@
 """Single-document reference extractor — the byte-identical truth.
 
-This module is pure Python (stdlib only, no Spark).  It defines the
-extraction semantics exactly once; the Arrow batch kernel (kernel.py) and the
-tests both import it, so every whitespace/ordering/id decision has a single
-source of truth (SURVEY.md section 7.3.1).
+This module is pure Python (stdlib only, no Spark).  It holds the parse,
+assemble and scoring helpers (``_parse_blocks``, ``_assemble_block``,
+``classify_is_main``, ``word_conf``, ...) and :func:`extract_document`, one
+plain walk over a single document that defines the output.  The Arrow batch
+kernel (kernel.py) imports the helpers and runs its own columnar walk; the
+tests pin that walk to :func:`extract_document` (SURVEY.md section 7.3.1).
 
 Semantics transplanted from the reference:
 
@@ -40,10 +42,10 @@ from functools import lru_cache
 from html import unescape
 
 #: bump on ANY change to extract_document semantics: the token is baked
-#: into the oracle-cache parquet filenames (corpus.materialize_words /
-#: materialize_extracted), so a semantic change invalidates stale oracle
-#: snapshots automatically instead of silently failing the gate until
-#: someone runs `rm -rf .cache`.  (2 = auto_model exempts rule-selected
+#: into the oracle-cache parquet filenames (corpus.materialize_oracle
+#: writes them), so a semantic change invalidates stale oracle snapshots
+#: automatically instead of silently failing the gate until someone runs
+#: `rm -rf .cache`.  (2 = auto_model exempts rule-selected
 #: models, round 4.)
 ORACLE_VERSION = 2
 
@@ -246,10 +248,6 @@ def _block_effective(params: ExtractParams, attrs: dict):
     '+'-joined rule models are used jointly, verbatim), so auto_model
     scoring must only ever apply to the preset model.
     """
-    if not params.block_rules and not params.model_rules:
-        # no-rules fast path (the common production config): skip the
-        # override scan entirely — callers then need not build attrs
-        return params, params.model, False
     eff = params
     overrides: dict = {}
     for expr, pairs in params.block_rules:
@@ -853,11 +851,6 @@ def classify_is_main(kind: str, n_chars: int, link_density: float,
     return n_chars > 0
 
 
-#: preformatted block ids ("block%04d"): ~40 formats per document replaced
-#: by list indexing; documents with >1024 blocks fall back to the format
-_BLOCK_IDS = ["block%04d" % i for i in range(1024)]
-
-
 def extract_document(html: bytes | str | None,
                      params: ExtractParams = DEFAULT_PARAMS) -> dict:
     """html payload -> extracted record (dict matching EXTRACTED_SCHEMA
@@ -901,36 +894,15 @@ def extract_document(html: bytes | str | None,
     prev_main = False
     main_confs: list[float] = []
 
-    # loop invariants hoisted out of the per-block walk (round 6): rule
-    # presence, the default (eff, model) triple, and the auto_model
-    # precondition are properties of params, not of any block
-    has_rules = bool(params.block_rules or params.model_rules)
-    default_model = params.model
-    may_auto = params.auto_model and "+" in default_model
-    main_kinds = params.main_kinds
-    max_ld = params.max_link_density
-    min_pc = params.min_paragraph_chars
-
-    for idx, a in enumerate(assembled):
-        # positional unpack of the _assemble_block tuple: the loop body
-        # reads these fields 10+ times per block
-        a_kind, a_rtl, a_join, a_line_words, a_n_chars, a_link_density, a_text_density = a
-        block_id = _BLOCK_IDS[idx] if idx < 1024 else "block%04d" % idx
+    for idx, (kind, rtl, join, line_words, n_chars, link_density,
+              text_density) in enumerate(assembled):
+        block_id = "block%04d" % idx
         # per-segment dynamic config (xpath_parameters/xpath_model
-        # analogue): rules see the block's classification inputs (the
-        # attrs dict is only built when a rule could read it)
-        if has_rules:
-            attrs = {
-                "kind": a_kind,
-                "n_chars": a_n_chars,
-                "link_density": a_link_density,
-                "text_density": a_text_density,
-                "rtl": a_rtl,
-                "join": a_join,
-            }
-            eff, model, model_from_rule = _block_effective(params, attrs)
-        else:
-            eff, model, model_from_rule = params, default_model, False
+        # analogue): rules see the block's classification inputs
+        eff, model, model_from_rule = _block_effective(params, {
+            "kind": kind, "n_chars": n_chars, "link_density": link_density,
+            "text_density": text_density, "rtl": rtl, "join": join,
+        })
         # in-kernel auto_model (recognize.py:266-277): '+'-joined candidates
         # are each scored on THIS block; the argmax (first on ties, like
         # np.argmax) becomes the block's model and its confusion table
@@ -939,212 +911,121 @@ def extract_document(html: bytes | str | None,
         # match (recognize.py:258-262), using the joined tag verbatim —
         # auto_model only ever scores the preset model.
         block_glyph_table = glyph_table
-        if (may_auto or has_rules) and eff.auto_model and not model_from_rule and "+" in model:
+        if eff.auto_model and not model_from_rule and "+" in model:
             cands = model.split("+")
             scores = [
-                model_block_score(a_line_words, _model_table(params, m))
+                model_block_score(line_words, _model_table(params, m))
                 for m in cands
             ]
-            best = max(range(len(cands)), key=lambda i: (scores[i], -i))
-            model = cands[best]
+            model = cands[max(range(len(cands)), key=lambda i: (scores[i], -i))]
             block_glyph_table = _model_table(params, model)
-        if has_rules:
-            is_main = classify_is_main(a_kind, a_n_chars, a_link_density, eff)
-        else:
-            # inlined classify_is_main over the hoisted default gates
-            # (identical logic; the call itself was ~1.5% of the document
-            # walk on the bench corpus)
-            is_main = (
-                a_kind in main_kinds
-                and a_link_density <= max_ld
-                and not (a_kind == "paragraph" and a_n_chars < min_pc)
-                and a_n_chars > 0
-            )
-        if eff.segment_only:
-            is_main_out = is_main
-            blocks.append(
-                {
-                    "block_id": block_id,
-                    "kind": a_kind,
-                    "order_idx": idx,
-                    "char_start": -1,
-                    "char_end": -1,
-                    "text": "",
-                    "conf": 0.0,
-                    "text_density": a_text_density,
-                    "link_density": a_link_density,
-                    "is_main": is_main_out,
-                    "model": model,
-                    "lines": [],
-                }
-            )
-            continue
-        btext = _block_canonical_text(a_line_words)
-        if not is_main:
-            # lazy recognition: segment-only for non-main blocks
-            blocks.append(
-                {
-                    "block_id": block_id,
-                    "kind": a_kind,
-                    "order_idx": idx,
-                    "char_start": -1,
-                    "char_end": -1,
-                    "text": btext,
-                    "conf": 0.0,
-                    "text_density": a_text_density,
-                    "link_density": a_link_density,
-                    "is_main": False,
-                    "model": model,
-                    "lines": [],
-                }
-            )
-            continue
-
-        # separator between main blocks: '\n' unless join relation
-        # (common.py:166-175)
-        if prev_main and not a_join:
-            doc_parts.append("\n")
-            pos += 1
-        b_start = pos
+        is_main = classify_is_main(kind, n_chars, link_density, eff)
+        # segment-only and non-main blocks (lazy recognition) get no spans
+        # and no lines; segment-only blocks carry no text either
+        btext = "" if eff.segment_only else _block_canonical_text(line_words)
+        b_start = b_end = -1
+        bconf = 0.0
         lines_out = []
-        line_confs = []
-        # emission gate (textequiv_level): structure below the exit level
-        # never crosses the batch boundary — and is never BUILT (true lazy
-        # emission, the analogue of running lower RIL levels only when
-        # asked, recognize.py:806-856); per-block rules may deepen/shallow
-        # the level for matching blocks.  Offsets and confidences are
-        # computed identically at every level — only dict construction is
-        # skipped.  The production 'extract' preset is block-level, so
-        # this skip is its hot path.
-        level = eff.textequiv_level
-        emit_lines = level in ("line", "word", "glyph")
-        emit_words = level in ("word", "glyph")
-        if not emit_lines:
-            # block-level fast path (the production 'extract' hot path):
-            # no per-word structure is emitted, and the block's emitted
-            # text IS btext (the "\n"/" " joins the generic walk below
-            # performs word-by-word — _assemble_block never yields empty
-            # word lists, so the shapes coincide exactly), so emission
-            # reduces to ONE append + the conf aggregation — no duplicate
-            # join work.  Byte-identical text/offsets/confs to the
-            # generic walk (pinned by the kernel-parity suite and the
-            # level-projection fuzz property); VERDICT r4 item 5: the
-            # per-word Python walk was the largest remaining block-level
-            # cost after r4's lazy emission.
-            doc_parts.append(btext)
-            pos += len(btext)
-            lw = a_line_words
-            bconf = 0.0
-            if lw:
-                wc = word_conf
-                # explicit loop: identical left-to-right float summation,
-                # no generator frame per line (round 6)
-                acc = 0.0
-                for words, _ in lw:
-                    acc += sum(map(wc, words)) / len(words)
-                bconf = acc / len(lw)
-            main_confs.append(bconf)
-            blocks.append(
-                {
-                    "block_id": block_id,
-                    "kind": a_kind,
-                    "order_idx": idx,
-                    "char_start": b_start,
-                    "char_end": pos,
-                    "text": btext,
-                    "conf": bconf,
-                    "text_density": a_text_density,
-                    "link_density": a_link_density,
-                    "is_main": True,
-                    "model": model,
-                    "lines": [],
-                }
-            )
-            prev_main = True
-            continue
-        for li, (words, wbits) in enumerate(a_line_words):
-            if li > 0:
+        if is_main and not eff.segment_only:
+            # separator between main blocks: '\n' unless join relation
+            # (common.py:166-175)
+            if prev_main and not join:
                 doc_parts.append("\n")
                 pos += 1
-            l_start = pos
-            words_out = []
-            wconfs = []
-            line_prefix = "%s_line%04d" % (block_id, li) if emit_lines else ""
-            for wi, w in enumerate(words):
-                sbits = wbits[wi] if wbits else 0
-                if wi > 0:
-                    doc_parts.append(" ")
+            b_start = pos
+            # emission gate (textequiv_level): structure below the exit
+            # level is never built (the analogue of running lower RIL
+            # levels only when asked, recognize.py:806-856); per-block
+            # rules may deepen/shallow the level for matching blocks.
+            # Offsets and confidences are identical at every level.
+            level = eff.textequiv_level
+            emit_lines = level in ("line", "word", "glyph")
+            emit_words = level in ("word", "glyph")
+            line_confs = []
+            for li, (words, wbits) in enumerate(line_words):
+                if li > 0:
+                    doc_parts.append("\n")
                     pos += 1
-                w_start = pos
-                doc_parts.append(w)
-                pos += len(w)
-                c = word_conf(w)
-                wconfs.append(c)
-                if not emit_words:
-                    continue
-                word_id = "%s_word%04d" % (line_prefix, wi)
-                glyphs = []
-                if level == "glyph":
-                    # symbol-level descent with ranked choices
-                    # (recognize.py:816-856)
-                    glyphs = [
+                l_start = pos
+                words_out = []
+                wconfs = []
+                line_prefix = "%s_line%04d" % (block_id, li) if emit_lines else ""
+                for wi, w in enumerate(words):
+                    sbits = wbits[wi] if wbits else 0
+                    if wi > 0:
+                        doc_parts.append(" ")
+                        pos += 1
+                    w_start = pos
+                    doc_parts.append(w)
+                    pos += len(w)
+                    c = word_conf(w)
+                    wconfs.append(c)
+                    if not emit_words:
+                        continue
+                    word_id = "%s_word%04d" % (line_prefix, wi)
+                    glyphs = []
+                    if level == "glyph":
+                        # symbol-level descent with ranked choices
+                        # (recognize.py:816-856)
+                        glyphs = [
+                            {
+                                "glyph_id": "%s_glyph%04d" % (word_id, gi),
+                                "char_start": w_start + gi,
+                                "char_end": w_start + gi + 1,
+                                "text": ch,
+                                "conf": glyph_conf(ch),
+                                "choices": glyph_choices(ch, block_glyph_table),
+                            }
+                            for gi, ch in enumerate(w)
+                        ]
+                    words_out.append(
                         {
-                            "glyph_id": "%s_glyph%04d" % (word_id, gi),
-                            "char_start": w_start + gi,
-                            "char_end": w_start + gi + 1,
-                            "text": ch,
-                            "conf": glyph_conf(ch),
-                            "choices": glyph_choices(ch, block_glyph_table),
+                            "word_id": word_id,
+                            "char_start": w_start,
+                            "char_end": pos,
+                            "text": w,
+                            "conf": c,
+                            "style": {
+                                "bold": bool(sbits & 1),
+                                "italic": bool(sbits & 2),
+                                "monospace": bool(sbits & 4),
+                            },
+                            "glyphs": glyphs,
                         }
-                        for gi, ch in enumerate(w)
-                    ]
-                words_out.append(
-                    {
-                        "word_id": word_id,
-                        "char_start": w_start,
-                        "char_end": pos,
-                        "text": w,
-                        "conf": c,
-                        "style": {
-                            "bold": bool(sbits & 1),
-                            "italic": bool(sbits & 2),
-                            "monospace": bool(sbits & 4),
-                        },
-                        "glyphs": glyphs,
-                    }
-                )
-            lconf = sum(wconfs) / len(wconfs) if wconfs else 0.0
-            line_confs.append(lconf)
-            if emit_lines:
-                lines_out.append(
-                    {
-                        "line_id": line_prefix,
-                        "char_start": l_start,
-                        "char_end": pos,
-                        "text": " ".join(words),
-                        "conf": lconf,
-                        "words": words_out,
-                    }
-                )
-        bconf = sum(line_confs) / len(line_confs) if line_confs else 0.0
-        main_confs.append(bconf)
+                    )
+                lconf = sum(wconfs) / len(wconfs) if wconfs else 0.0
+                line_confs.append(lconf)
+                if emit_lines:
+                    lines_out.append(
+                        {
+                            "line_id": line_prefix,
+                            "char_start": l_start,
+                            "char_end": pos,
+                            "text": " ".join(words),
+                            "conf": lconf,
+                            "words": words_out,
+                        }
+                    )
+            b_end = pos
+            bconf = sum(line_confs) / len(line_confs) if line_confs else 0.0
+            main_confs.append(bconf)
+            prev_main = True
         blocks.append(
             {
                 "block_id": block_id,
-                "kind": a_kind,
+                "kind": kind,
                 "order_idx": idx,
                 "char_start": b_start,
-                "char_end": pos,
+                "char_end": b_end,
                 "text": btext,
                 "conf": bconf,
-                "text_density": a_text_density,
-                "link_density": a_link_density,
-                "is_main": True,
+                "text_density": text_density,
+                "link_density": link_density,
+                "is_main": is_main,
                 "model": model,
                 "lines": lines_out,
             }
         )
-        prev_main = True
 
     doc_text = None
     if not params.segment_only:

@@ -329,6 +329,36 @@ def test_cli_extract_end_to_end(tmp_path, pages_small, spark):
     assert read_manifest(out)[0]["doc_count"] == 50
 
 
+def test_cli_extract_reads_without_inference(tmp_path, pages_small, spark):
+    """The CLI declares the input schema from the parquet footer: `extract`
+    starts exactly the jobs of the stage itself, none for reading."""
+    from ocrd_tesserocr_spark.cli import main
+    from ocrd_tesserocr_spark.pipeline import run_stage
+    from ocrd_tesserocr_spark.plans import EXTRACT
+    from ocrd_tesserocr_spark.sources import read_parquet
+
+    src = str(tmp_path / "pages_in")
+    pages_small.limit(50).write.parquet(src)
+    sc = spark.sparkContext
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    pages = read_parquet(spark, src)
+    bare = jobs("cli-bare-stage", lambda: run_stage(
+        spark, pages, str(tmp_path / "bare"), stage="extract", params=EXTRACT,
+        num_partitions=2))
+    cli = jobs("cli-extract", lambda: main([
+        "extract", "--preset", "extract", "--input", src,
+        "--output", str(tmp_path / "cli"), "--partitions", "2"]))
+    assert cli == bare
+
+
 def test_cli_stream_extract_end_to_end(tmp_path, pages_small, spark):
     """The `stream` subcommand (VERDICT r3 item 8): availableNow over a
     landed parquet directory runs the streaming kernel and commits an

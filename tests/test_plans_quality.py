@@ -217,9 +217,6 @@ def test_lm_score_trigrams_not_lambda_built(spark):
 BUILD_JOBS_EXEMPT = {
     # iterates label propagation to a fixpoint; each round is a job
     "dedup_components",
-    # eager checkpoint of the shingle table that feeds the LSH branch and
-    # both verification sides (a lazy single-pass form is still open)
-    "near_dedup_verified",
 }
 
 
@@ -272,6 +269,32 @@ def test_anchor_texts_scans_pages_once(spark):
     df.collect()
     plan = _final_plan(df)
     assert "ReusedExchange" in plan
+    assert plan.count("FileScan") == 1
+
+
+def test_lm_score_reads_the_fit_slice_once(spark):
+    """The 10% fit slice feeds the fit pass and the cutoff sample through
+    one re-split exchange: the sample reuses it, so the plan holds one scan
+    of the corpus and one of the slice."""
+    from ocrd_tesserocr_spark.operators.text import q_lm_score
+
+    df = q_lm_score(spark, SF_ORACLE)
+    df.collect()
+    plan = _final_plan(df)
+    assert re.search(r"ReusedExchange \[[^\]]*\], Exchange RoundRobinPartitioning", plan)
+    assert plan.count("FileScan") == 2
+
+
+def test_near_dedup_verified_shingles_once(spark):
+    """The shingle table feeds the LSH branch and both verification sides
+    through one exchange: the md5 shingle map runs once and the documents
+    are scanned once."""
+    from ocrd_tesserocr_spark.operators.dedup import q_near_dedup_verified
+
+    df = q_near_dedup_verified(spark, SF_ORACLE)
+    df.collect()
+    plan = _final_plan(df)
+    assert plan.count("md5(") == 1
     assert plan.count("FileScan") == 1
 
 
