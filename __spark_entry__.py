@@ -27,18 +27,7 @@ from pyspark.sql import functions as F
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: synthesize pages from sf0.001 documents, run the full
     Arrow-batched extraction, return (url, text, conf, n_blocks, failed)."""
-    from ocrd_tesserocr_spark.corpus import pages_df
-    from ocrd_tesserocr_spark.pipeline import extract
-
-    pages = pages_df(spark, "/root/testdata/sf0.001")
-    out = extract(spark, pages)
-    return out.select(
-        "url",
-        "text",
-        F.round("conf", 6).alias("conf"),
-        F.size("blocks").alias("n_blocks"),
-        "failed",
-    )
+    return _extract_flagship(spark, "/root/testdata/sf0.001")
 
 
 def _extract_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:

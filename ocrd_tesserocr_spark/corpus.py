@@ -395,6 +395,7 @@ def hostile_pages() -> list:
         ("<b>w%d</b>" if i % 4 == 0 else "<i>w%d</i>" if i % 4 == 2 else "w%d") % i
         for i in range(800)
     )
+    open_comments = "".join("<!-- c%d> word%d " % (i, i) for i in range(1500))
     pages = {
         "style_dense": "<p>" + styled + "</p>",
         "rtl": '<p dir="rtl">alpha <b>beta</b> gamma<br>delta epsilon zeta eta</p>'
@@ -412,6 +413,12 @@ def hostile_pages() -> list:
         "<p>emoji \U0001f600 and 中文 &amp; <code>x0x</code> text</p>"
         "<hr><img src=a.png><pre>  spaced\n\n  out  </pre><p><br></p>"
         "<p><a href=x>link link link link</a> tail</p><footer>foot</footer>",
+        # comment and CDATA openers with no closer left in the document:
+        # each drops up to the next '>' like bogus markup
+        "open_comments": "<p>" + open_comments + "</p>",
+        "open_cdata": "<p>" + open_comments.replace("<!--", "<![CDATA[") + "</p>",
+        "closed_then_open_comments": "<p>kept <!-- hidden --> text "
+        "<![CDATA[ hidden ]]> more</p><p>" + open_comments + "</p>",
     }
     recs = [
         {"url": "hostile://" + name, "html": html.encode("utf-8")}

@@ -439,16 +439,21 @@ _RK, _RRTL, _RBTT, _RJOIN, _RPARTS, _RTAGS = 0, 1, 2, 3, 4, 5
 # Alternation order: most common first (start tag, end tag) so the engine
 # tries at most one extra branch per real tag — safe because every branch
 # except the bogus catch-all is mutually exclusive on the 2nd/3rd char
-# ('<a', '</', '<!--', '<![', '<!D'), and bogus stays last.
+# ('<a', '</', '<!--', '<![', '<!D'), and bogus stays last.  Comments and
+# CDATA match their opener only and the parser finds the closer: a lazy
+# `<!--.*?-->` rescans to the end at every opener once no closer is left.
+# The shared `<!` stays outside the opener group (`(<!--|<!\[CDATA\[)`
+# doubled the token scan).
 _TOKEN_RE = re.compile(
     r"<([a-zA-Z][a-zA-Z0-9:_-]*)([^>]*)>"  # start tag (attrs incl. selfclose /)
     r"|</\s*([a-zA-Z][a-zA-Z0-9:_-]*)[^>]*>"  # end tag
-    r"|<!--.*?-->"  # comment
-    r"|<!\[CDATA\[.*?\]\]>"  # cdata
+    r"|<!(--|\[CDATA\[)"  # comment / cdata opener
     r"|<!DOCTYPE[^>]*>"  # doctype
     r"|<[^>]*>?",  # bogus markup -> dropped
-    re.S | re.I,
+    re.I,
 )
+#: opener (group 4 of _TOKEN_RE, lowered) -> its closer
+_CLOSER = {"--": "-->", "[cdata[": "]]>"}
 #: case-insensitive end-tag finders for raw-content skips: searching with
 #: one of these from the current position replaces lowering the WHOLE
 #: document (html.lower() allocated + scanned a full copy per document
@@ -494,6 +499,7 @@ def _parse_blocks(html: str) -> list:
     # open b/i/code depths -> current style bits for text parts
     style_depth = {"b": 0, "i": 0, "code": 0}
     style_bits = 0
+    last_closer: dict = {}  # closer -> its last offset (one rfind each)
 
     pos = 0
     n = len(html)
@@ -590,34 +596,18 @@ def _parse_blocks(html: str) -> list:
                 if open_tags and open_tags[-1] == "#implicit":
                     open_tags.pop()
                     stack.pop()
-                boiler = boiler_depth > 0
-                if a is None:
-                    blk = [
-                        "noise" if boiler else _BLOCK_KIND[tag],
-                        dir_stack[-1] if dir_stack else False,
-                        False,
-                        False,
-                        [],
-                        0,
-                    ]
-                else:
-                    d = a.get("dir", "").lower()
-                    blk = [
-                        "noise" if boiler else _BLOCK_KIND[tag],
-                        False
-                        if d == "ltr"
-                        else (
-                            (dir_stack[-1] if dir_stack else False)
-                            or d == "rtl"
-                        ),
-                        # textLineOrder bottom-to-top analogue
-                        # (common.py:131-134)
-                        a.get("data-line-order", "").lower()
-                        in ("btt", "bottom-to-top"),
-                        "data-join" in a,
-                        [],
-                        0,
-                    ]
+                # this tag's own dir= is already on dir_stack
+                blk = [
+                    "noise" if boiler_depth else _BLOCK_KIND[tag],
+                    dir_stack[-1] if dir_stack else False,
+                    # textLineOrder bottom-to-top analogue (common.py:131-134)
+                    a is not None
+                    and a.get("data-line-order", "").lower()
+                    in ("btt", "bottom-to-top"),
+                    a is not None and "data-join" in a,
+                    [],
+                    0,
+                ]
                 blocks.append(blk)
                 stack.append(blk)
                 open_tags.append(tag)
@@ -704,7 +694,19 @@ def _parse_blocks(html: str) -> list:
             elif cat == _CAT_BOILER:
                 if boiler_depth:
                     boiler_depth -= 1
-        # comments / doctype / bogus markup: dropped
+        elif li == 4:
+            # -- comment / cdata: skip past the first closer; with none
+            # left, drop up to the next '>' like bogus markup ------------
+            closer = _CLOSER[m.group(4).lower()]
+            last = last_closer.get(closer)
+            if last is None:
+                last = last_closer[closer] = html.rfind(closer)
+            if last >= pos:
+                pos = html.find(closer, pos) + len(closer)
+            else:
+                k = html.find(">", pos)
+                pos = n if k < 0 else k + 1
+        # doctype / bogus markup: dropped
     return blocks
 
 
@@ -719,114 +721,70 @@ def _assemble_block(raw: list) -> tuple:
     Lines split on <br>-induced '\\n' (textLineOrder analogue,
     recognize.py:735-780); words are whitespace tokens
     (recognize.py:782-814); RTL blocks reverse word order per line
-    (common.py:138-151).
+    (common.py:138-151).  A word's style bits are the OR of the bits of
+    every styled part it overlaps, so a word assembled across a style
+    boundary (e.g. foo<b>bar</b>) still carries the style, mirroring
+    WordFontAttributes being per-word.  Each line is (words, bits), with
+    bits None when the block has no styled part.
     """
     kind, rtl, btt, join, parts, tag_count = raw
     if not parts:
-        # 14% of blocks (void/empty elements): the general path below
-        # reduces to exactly this constant shape
         return (kind, rtl, join, [], 0, 0.0, 0.0)
-    if len(parts) == 1:
-        # 79% of blocks carry a single coalesced text part: skip the
-        # join and the accumulation loop (same arithmetic, one pass)
-        text, in_link, sbits = parts[0]
-        nl = text.count("\n")
-        total_chars = len(text) - text.count(" ") - nl
-        link_chars = total_chars if in_link else 0
-        any_style = bool(sbits)
-    else:
-        text = "".join(p for p, _, _ in parts)
-        nl = text.count("\n")
-        total_chars = 0
-        link_chars = 0
-        any_style = False
-        for part, in_link, sbits in parts:
-            # non-whitespace char count; count() beats building two
-            # stripped copies via replace() (same value: parts only carry
-            # ' '/'\n' whitespace after the tokenizer's _WS_RE
-            # normalization)
-            n = len(part) - part.count(" ") - part.count("\n")
-            total_chars += n
-            if in_link:
-                link_chars += n
-            if sbits:
-                any_style = True
-    # styled intervals (only materialized when a style tag occurred): a
-    # word's TextStyle is the OR of the bits of every styled part it
-    # overlaps, so a word assembled across a style boundary (e.g.
-    # foo<b>bar</b>) still carries the style — mirroring
-    # WordFontAttributes being per-word.  Interval overlap (typically one
-    # interval per block) beats a per-char bits array by ~10x; unstyled
-    # blocks skip the offset bookkeeping entirely (the hot path).
-    styled_ivs: list[tuple[int, int, int]] = []
-    if any_style:
-        pos = 0
-        for part, _, sbits in parts:
-            if sbits:
-                styled_ivs.append((pos, pos + len(part), sbits))
-            pos += len(part)
-    # each line is (words, style_bits_or_None): words stay plain strings —
-    # the downstream joins/conf sums run straight over them — and the
-    # parallel bits list only exists when a style tag occurred (round 6:
-    # dropping the per-word (w, sbits) tuples removed ~40 tuple builds +
-    # unpacks per document from the hot path)
+    text = "".join([p for p, _, _ in parts])
+    # chars other than ' '/'\n', the only ASCII whitespace left after the
+    # tokenizer's _WS_RE normalization (U+00A0 counts as a char)
+    total_chars = len(text) - text.count(" ") - text.count("\n")
+    link_chars = 0
+    styled = []  # (start, end, bits) of the styled parts, in offset order
+    pos = 0
+    for part, in_link, sbits in parts:
+        if in_link:
+            link_chars += len(part) - part.count(" ") - part.count("\n")
+        if sbits:
+            styled.append((pos, pos + len(part), sbits))
+        pos += len(part)
+    if styled:
+        # sentinel: both forward scans below stop on it
+        styled.append((pos + 1, pos + 1, 0))
+        i = 0  # first styled part ending after the current word's start
     lines = []
-    if not styled_ivs:
-        if nl == 0:
-            # single-line fast path (reuses the count computed above):
-            # no "\n" means exactly one candidate segment
-            words = text.split()
-            if words:
-                if rtl:
-                    words.reverse()
-                lines.append((words, None))
+    offset = 0
+    for seg in text.split("\n"):
+        if not styled:
+            words = seg.split()
+            bits = None
         else:
-            for seg in text.split("\n"):
-                words = seg.split()
-                if not words:
-                    continue
-                if rtl:
-                    words.reverse()
-                lines.append((words, None))
-    else:
-        offset = 0
-        for seg in text.split("\n"):
             words = []
             bits = []
+            # words and styled parts are both in offset order: one
+            # forward pointer, linear in words + parts
             for m in _WORD_RE.finditer(seg):
-                s = offset + m.start()
-                e = offset + m.end()
+                s, e = m.span()
+                s += offset
+                e += offset
+                while styled[i][1] <= s:
+                    i += 1
                 sbits = 0
-                for ivs, ive, ivb in styled_ivs:
-                    if ivs < e and s < ive:
-                        sbits |= ivb
-                words.append(m.group(0))
+                j = i
+                while styled[j][0] < e:
+                    sbits |= styled[j][2]
+                    j += 1
+                words.append(m.group())
                 bits.append(sbits)
             offset += len(seg) + 1
-            if not words:
-                continue
+        if words:
             if rtl:
                 words.reverse()
-                bits.reverse()
+                if bits:
+                    bits.reverse()
             lines.append((words, bits))
     if btt:
         # bottom-to-top textLineOrder reverses line traversal
         # (common.py:131-134)
         lines.reverse()
-    # link-free blocks (the common case) skip the round() call outright
-    link_density = (
-        round(link_chars / total_chars, 6) if link_chars else 0.0
-    )
-    text_density = total_chars / (1.0 + tag_count)
-    return (
-        kind,
-        rtl,
-        join,
-        lines,
-        total_chars,
-        link_density,
-        round(text_density, 6),
-    )
+    link_density = round(link_chars / total_chars, 6) if link_chars else 0.0
+    text_density = round(total_chars / (1.0 + tag_count), 6)
+    return (kind, rtl, join, lines, total_chars, link_density, text_density)
 
 
 def _block_canonical_text(line_words: list) -> str:

@@ -519,3 +519,24 @@ def test_custom_model_resource_swaps_confusion_table():
     assert [c["text"] for c in g[0]["choices"]] == ["x", "y", "z"]
     # built-in table NOT consulted: '0' has no alternatives under custom
     assert [c["text"] for c in g[1]["choices"]] == ["0"]
+
+
+def test_comments_and_cdata_dropped_with_or_without_closer():
+    """A comment or CDATA section ends at its first closer; with no closer
+    left, the opener drops up to the next '>' like bogus markup."""
+    cases = {
+        "<p>kept <!-- hidden --> text <![CDATA[ hidden ]]> and some more</p>":
+            "kept text and some more",
+        "<p>before <!-- open> after and more words</p>":
+            "before after and more words",
+        "<p>before <![cdata[ open> after and more words</p>":
+            "before after and more words",
+        "<p>x <!-- a> y <!-- b --> z and some more words</p>":
+            "x z and some more words",
+        "<p>the opener <!--> hidden --> ends at a later closer</p>":
+            "the opener ends at a later closer",
+        "<p>enough words before it <!-- no closer and no end":
+            "enough words before it",
+    }
+    for body, text in cases.items():
+        assert extract_document(_doc(body))["text"] == text, body

@@ -198,3 +198,103 @@ def test_kernel_batch_equals_dict_path_at_every_level(docs):
         params = ExtractParams(textequiv_level=level)
         [got] = make_extract_arrow_fn(params)(iter([rb]))
         assert got.equals(dict_path_batch(rb, params)), level
+
+
+def _assemble_per_char(raw):
+    """Per-character reference for ``oracle._assemble_block``: a bits
+    value per character, words from ``\\S+`` per line, each word's bits
+    the OR over its characters."""
+    import re
+
+    kind, rtl, btt, join, parts, tag_count = raw
+    text = "".join(p for p, _, _ in parts)
+    char_bits = [b for p, _, b in parts for _ in p]
+    total = sum(ch not in " \n" for p, _, _ in parts for ch in p)
+    linked = sum(ch not in " \n" for p, link, _ in parts if link for ch in p)
+    styled = any(b for _, _, b in parts)
+    lines = []
+    offset = 0
+    for seg in text.split("\n"):
+        words, bits = [], []
+        for m in re.finditer(r"\S+", seg):
+            b = 0
+            for k in range(offset + m.start(), offset + m.end()):
+                b |= char_bits[k]
+            words.append(m.group())
+            bits.append(b)
+        offset += len(seg) + 1
+        if words:
+            if rtl:
+                words.reverse()
+                bits.reverse()
+            lines.append((words, bits if styled else None))
+    if btt:
+        lines.reverse()
+    return (kind, rtl, join, lines, total,
+            round(linked / total, 6) if linked else 0.0,
+            round(total / (1.0 + tag_count), 6))
+
+
+_part = st.tuples(
+    st.text(alphabet="ab \n\xa0", min_size=1, max_size=8),
+    st.booleans(),
+    st.one_of(st.just(0), st.integers(1, 7)),
+)
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.lists(_part, max_size=12), st.booleans(), st.booleans(),
+       st.booleans(), st.integers(0, 20))
+def test_assemble_block_matches_per_char_reference(parts, rtl, btt, join, tags):
+    """The shared block assembler (one sweep over words and styled parts)
+    equals a per-character reference on tokenizer-shaped parts."""
+    from ocrd_tesserocr_spark.oracle import _assemble_block
+
+    raw = ["paragraph", rtl, btt, join, parts, tags]
+    assert _assemble_block(raw) == _assemble_per_char(raw)
+
+
+#: hostile page families as html(n units); each must parse in linear time
+_FAMILIES = {
+    "style_soup": lambda n: "<p>" + " ".join("<b>w%d</b>" % i for i in range(n)) + "</p>",
+    "unclosed_b": lambda n: "<p>" + "".join("<b>w%d word " % i for i in range(n)),
+    "open_comment": lambda n: "<p>" + "".join("<!-- c%d> w%d " % (i, i) for i in range(n)),
+    "open_cdata": lambda n: "<p>" + "".join("<![CDATA[ c%d> w%d " % (i, i) for i in range(n)),
+    "unclosed_p": lambda n: "".join("<p>w%d word " % i for i in range(n)),
+    "stray_closers": lambda n: "<p>" + "".join("</b></i></p></div>w%d " % i for i in range(n)),
+    "nested_divs": lambda n: "".join("<div>w%d " % i for i in range(n)) + "</div>" * n,
+    "link_soup": lambda n: "<p>" + " ".join("<a href=x%d>w%d</a>" % (i, i) for i in range(n)) + "</p>",
+    "open_script": lambda n: "".join("<p>w%d word</p>" % i for i in range(n // 2))
+    + "<script>" + "".join("<p>s%d</p>" % i for i in range(n // 2)),
+}
+
+
+def test_block_walk_cost_grows_linearly():
+    """Complexity guard: ``kernel._walk`` at block level spends about the
+    same CPU per KB on a page of n units as on one of 4n, for every
+    hostile family (best of 3 process-CPU timings; linear reads ~1x, a
+    quadratic shape ~4x)."""
+    import time
+
+    from ocrd_tesserocr_spark.kernel import _walk
+    from ocrd_tesserocr_spark.oracle import ExtractParams, resolve_params
+
+    params = resolve_params(ExtractParams(textequiv_level="block"))
+
+    def us_per_kb(html: bytes) -> float:
+        best = float("inf")
+        for _ in range(3):
+            t = time.process_time()
+            _walk([html], params)
+            best = min(best, time.process_time() - t)
+        return best * 1e6 / (len(html) / 1024)
+
+    n = 2000
+    growth = {}
+    for name, page in _FAMILIES.items():
+        small = ("<html><body>%s</body></html>" % page(n)).encode()
+        large = ("<html><body>%s</body></html>" % page(4 * n)).encode()
+        assert len(small) >= 20_000, name
+        growth[name] = round(us_per_kb(large) / us_per_kb(small), 2)
+    slow = {name: g for name, g in growth.items() if g > 2.5}
+    assert not slow, "superlinear us/KB growth: %s (all: %s)" % (slow, growth)
