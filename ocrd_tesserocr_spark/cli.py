@@ -166,7 +166,7 @@ def main(argv: list[str] | None = None) -> int:
         from .plans import PRESETS
 
         for name, params in PRESETS.items():
-            print(name, json.dumps(params.__dict__, default=list))
+            print(name, json.dumps(params.__dict__, default=sorted))
         return 0
 
     from pyspark.sql import SparkSession

@@ -7,16 +7,16 @@ batches, we run the per-document walk over each batch, and hand columnar
 results back.
 
 Emission is columnar.  Each document is walked with the oracle's own
-helpers (``_parse_blocks``, ``_assemble_block``, ``_block_effective``,
-``classify_is_main``, ``_block_canonical_text``, ``word_conf``,
-``model_block_score``/``_model_table``, ``glyph_choices``), and every
-level's scalars go to flat per-level lists plus list offsets.  The nested
-``blocks`` column is then assembled once per batch with
-``StructArray.from_arrays``/``ListArray.from_arrays``; ids, word and glyph
-offsets and styles are derived column-wise from those offsets.  No
-per-word dict is built, so there is neither a nested ``pa.array``
-conversion nor dicts for CPython's cyclic GC to rescan (1,500 word-level
-pages of ~305 words, one process on a 4-core VM: 4.6 s -> 1.0 s).
+helpers (``_assembled_blocks``, ``_block_effective``, ``classify_is_main``,
+``_block_canonical_text``, ``word_conf``, ``model_block_score``/
+``_model_table``, ``glyph_choices``) in the same loop shape as
+``oracle.extract_document``, and every level's scalars go to flat
+per-level lists plus list offsets.  The nested ``blocks`` column is then
+assembled once per batch with ``StructArray.from_arrays``/
+``ListArray.from_arrays``; ids, word and glyph offsets and styles are
+derived column-wise from those offsets.  No per-word dict is built, so
+there is neither a nested ``pa.array`` conversion nor dicts for CPython's
+cyclic GC to rescan.
 ``oracle.extract_document`` stays the reference: the kernel's batch
 equals ``pa.array`` over its dicts (tests/test_kernel_parity.py).
 
@@ -33,11 +33,10 @@ import pyarrow.compute as pc
 
 from .oracle import (
     ExtractParams,
-    _assemble_block,
+    _assembled_blocks,
     _block_canonical_text,
     _block_effective,
     _model_table,
-    _parse_blocks,
     classify_is_main,
     glyph_choices,
     glyph_conf,
@@ -57,15 +56,18 @@ def _partition_id() -> int:
         return -1
 
 
-def _validate(params: ExtractParams) -> None:
+def _validate(params: ExtractParams) -> ExtractParams:
+    """Raise on a malformed ``extra`` value or rule predicate; return the
+    resolved params."""
     from .oracle import _coerce_overrides, compile_predicate
 
-    resolve_params(params)
+    resolved = resolve_params(params)
     for expr, pairs in params.block_rules:
         compile_predicate(expr)
         _coerce_overrides(pairs)
     for expr, _model in params.model_rules:
         compile_predicate(expr)
+    return resolved
 
 
 class _Columns:
@@ -109,17 +111,11 @@ def _walk(htmls: list, params: ExtractParams) -> _Columns:
     # (table key, glyph) -> (choice texts, choice confs); the key is the
     # auto-selected model, or None for the batch-wide table
     choices_memo: dict = {}
-    has_rules = bool(params.block_rules or params.model_rules)
-    may_auto = params.auto_model and "+" in params.model
     wc = word_conf
 
     for html in htmls:
         try:
-            if html is None:
-                raise ValueError("null payload")
-            if isinstance(html, (bytes, bytearray, memoryview)):
-                html = bytes(html).decode("utf-8", errors="strict")
-            raws = _parse_blocks(html)
+            assembled = _assembled_blocks(html)
         except Exception:
             d_text.append(None)
             d_conf.append(0.0)
@@ -128,33 +124,16 @@ def _walk(htmls: list, params: ExtractParams) -> _Columns:
             d_feat_off.append(len(d_feat))
             d_blocks.append(len(b_kind))
             continue
-        assembled = []
-        for raw in raws:
-            a = _assemble_block(raw)
-            # binary-empty filter (recognize.py:598-601)
-            if not a[3] and a[0] not in ("separator", "image"):
-                continue
-            assembled.append(a)
 
         doc_parts: list[str] = []
         pos = 0
         prev_main = False
         main_confs: list[float] = []
-        for idx, (kind, rtl, join, line_words, n_chars, link_density,
-                  text_density) in enumerate(assembled):
-            if has_rules:
-                eff, model, from_rule = _block_effective(params, {
-                    "kind": kind,
-                    "n_chars": n_chars,
-                    "link_density": link_density,
-                    "text_density": text_density,
-                    "rtl": rtl,
-                    "join": join,
-                })
-            else:
-                eff, model, from_rule = params, params.model, False
+        for idx, block in enumerate(assembled):
+            kind, _, join, line_words, n_chars, link_density, text_density = block
+            eff, model, from_rule = _block_effective(params, block)
             table, table_key = glyph_table, None
-            if (may_auto or has_rules) and eff.auto_model and not from_rule and "+" in model:
+            if eff.auto_model and not from_rule and "+" in model:
                 cands = model.split("+")
                 scores = [
                     model_block_score(line_words, _model_table(params, m))
@@ -163,88 +142,77 @@ def _walk(htmls: list, params: ExtractParams) -> _Columns:
                 model = cands[max(range(len(cands)), key=lambda i: (scores[i], -i))]
                 table, table_key = _model_table(params, model), model
             is_main = classify_is_main(kind, n_chars, link_density, eff)
+            btext = "" if eff.segment_only else _block_canonical_text(line_words)
             b_kind.append(kind)
             b_idx.append(idx)
+            b_text.append(btext)
             b_td.append(text_density)
             b_ld.append(link_density)
+            b_main.append(is_main)
             b_model.append(model)
             if eff.segment_only or not is_main:
-                # no spans and no lines: segment-only blocks carry no text,
-                # non-main blocks stay unrecognized (lazy recognition)
+                # segment-only and non-main blocks (lazy recognition) get
+                # no spans and no lines
                 b_start.append(-1)
                 b_end.append(-1)
-                if eff.segment_only:
-                    b_text.append("")
-                    b_main.append(is_main)
-                else:
-                    b_text.append(_block_canonical_text(line_words))
-                    b_main.append(False)
                 b_conf.append(0.0)
                 b_lines.append(len(l_start))
                 continue
 
-            btext = _block_canonical_text(line_words)
             if prev_main and not join:
                 doc_parts.append("\n")
                 pos += 1
             b_start.append(pos)
             doc_parts.append(btext)
+            lpos = pos  # the next line's start
+            pos += len(btext)
             level = eff.textequiv_level
-            if level not in ("line", "word", "glyph"):
-                # block level: no per-line structure; the oracle's
-                # left-to-right line-conf accumulation
-                pos += len(btext)
-                bconf = 0.0
-                if line_words:
-                    acc = 0.0
-                    for words, _ in line_words:
-                        acc += sum(map(wc, words)) / len(words)
-                    bconf = acc / len(line_words)
-            else:
-                emit_words = level != "line"
-                line_confs = []
-                for li, (words, wbits) in enumerate(line_words):
-                    if li:
-                        pos += 1
-                    ltext = " ".join(words)
-                    l_start.append(pos)
-                    pos += len(ltext)
-                    l_end.append(pos)
-                    l_text.append(ltext)
-                    confs = list(map(wc, words))
-                    lconf = sum(confs) / len(confs) if confs else 0.0
-                    l_conf.append(lconf)
-                    line_confs.append(lconf)
-                    if emit_words:
-                        w0 = len(w_text)
-                        if wbits:
-                            styled.append((w0, wbits))
-                        w_text.extend(words)
-                        w_conf.extend(confs)
-                        if level == "glyph":
-                            glyph_words.append((w0, len(w_text)))
-                            chars = "".join(words)
-                            g_text.extend(chars)
-                            g_conf.extend(map(glyph_conf, chars))
-                            for ch in chars:
-                                memo_key = (table_key, ch)
-                                ranked = choices_memo.get(memo_key)
-                                if ranked is None:
-                                    cs = glyph_choices(ch, table)
-                                    ranked = choices_memo[memo_key] = (
-                                        [c["text"] for c in cs],
-                                        [c["conf"] for c in cs],
-                                    )
-                                c_text.extend(ranked[0])
-                                c_conf.extend(ranked[1])
-                                c_off.append(len(c_text))
-                    l_words.append(len(w_text))
-                bconf = sum(line_confs) / len(line_confs) if line_confs else 0.0
+            emit_lines = level in ("line", "word", "glyph")
+            emit_words = level in ("word", "glyph")
+            line_confs = []
+            for words, wbits in line_words:
+                # a list only where the word confs are emitted; every
+                # assembled line has at least one word
+                confs = list(map(wc, words)) if emit_words else map(wc, words)
+                lconf = sum(confs) / len(words)
+                line_confs.append(lconf)
+                if not emit_lines:
+                    continue
+                ltext = " ".join(words)
+                l_start.append(lpos)
+                lpos += len(ltext)
+                l_end.append(lpos)
+                lpos += 1
+                l_text.append(ltext)
+                l_conf.append(lconf)
+                if emit_words:
+                    w0 = len(w_text)
+                    if wbits:
+                        styled.append((w0, wbits))
+                    w_text.extend(words)
+                    w_conf.extend(confs)
+                    if level == "glyph":
+                        glyph_words.append((w0, len(w_text)))
+                        chars = "".join(words)
+                        g_text.extend(chars)
+                        g_conf.extend(map(glyph_conf, chars))
+                        for ch in chars:
+                            memo_key = (table_key, ch)
+                            ranked = choices_memo.get(memo_key)
+                            if ranked is None:
+                                cs = glyph_choices(ch, table)
+                                ranked = choices_memo[memo_key] = (
+                                    [c["text"] for c in cs],
+                                    [c["conf"] for c in cs],
+                                )
+                            c_text.extend(ranked[0])
+                            c_conf.extend(ranked[1])
+                            c_off.append(len(c_text))
+                l_words.append(len(w_text))
+            bconf = sum(line_confs) / len(line_confs) if line_confs else 0.0
             main_confs.append(bconf)
             b_end.append(pos)
-            b_text.append(btext)
             b_conf.append(bconf)
-            b_main.append(True)
             b_lines.append(len(l_start))
             prev_main = True
 
@@ -398,8 +366,7 @@ def make_extract_arrow_fn(params: ExtractParams):
 
     from .schemas import EXTRACTED_SCHEMA
 
-    _validate(params)
-    resolved = resolve_params(params)
+    resolved = _validate(params)
     aschema = to_arrow_schema(EXTRACTED_SCHEMA)
     blocks_t = aschema.field("blocks").type
     feats_t = aschema.field("features").type

@@ -357,9 +357,9 @@ FROM c
 # ---------------------------------------------------------------------------
 def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = resplit(read_documents(spark, sf_dir).select("doc_id", "text"))
-    # word array STAGED as a named column (round 6): the inline form
-    # re-split the text per element reference inside the bigram/trigram
-    # lambdas — see dedup._staged_hs for the mechanism and measurement
+    # word array staged as a named column: inline, the text would be
+    # re-split per element reference inside the bigram/trigram lambdas —
+    # see dedup._staged_hs for the mechanism and measurement
     docs = docs.select(
         "doc_id", "text", F.split(F.col("text"), " ").alias("__w")
     )
@@ -391,7 +391,19 @@ def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # current run length, best count, best gram).  `x == acc.prev` is null
     # on the first element (prev starts null) so the run resets to 1.
     # sort_array: codegen'd natural ordering vs array_sort's interpreted
-    # comparison lambda — identical on null-free string arrays (round 6)
+    # comparison lambda — identical on null-free string arrays
+    def step(acc, x):
+        run = F.when(x == acc["prev"], acc["run"] + 1).otherwise(
+            F.lit(1).cast("long")
+        )
+        better = run > acc["best_cnt"]
+        return F.struct(
+            x.alias("prev"),
+            run.alias("run"),
+            F.when(better, run).otherwise(acc["best_cnt"]).alias("best_cnt"),
+            F.when(better, x).otherwise(acc["best"]).alias("best"),
+        )
+
     top_struct = F.aggregate(
         F.sort_array(bigrams),
         F.struct(
@@ -400,37 +412,13 @@ def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(0).cast("long").alias("best_cnt"),
             F.lit(None).cast("string").alias("best"),
         ),
-        lambda acc, x: F.struct(
-            x.alias("prev"),
-            F.when(x == acc["prev"], acc["run"] + 1)
-            .otherwise(F.lit(1).cast("long"))
-            .alias("run"),
-            F.when(
-                F.when(x == acc["prev"], acc["run"] + 1).otherwise(
-                    F.lit(1).cast("long")
-                )
-                > acc["best_cnt"],
-                F.when(x == acc["prev"], acc["run"] + 1).otherwise(
-                    F.lit(1).cast("long")
-                ),
-            )
-            .otherwise(acc["best_cnt"])
-            .alias("best_cnt"),
-            F.when(
-                F.when(x == acc["prev"], acc["run"] + 1).otherwise(
-                    F.lit(1).cast("long")
-                )
-                > acc["best_cnt"],
-                x,
-            )
-            .otherwise(acc["best"])
-            .alias("best"),
-        ),
+        step,
     )
 
-    # trigrams and the longest-run fold are staged too: the r5 projection
-    # referenced each twice (size + distinct-size; best + best_cnt), so
-    # the trigram build and the WHOLE bigram fold each ran twice per row
+    # trigrams and the longest-run fold are staged too: the projection
+    # below references each twice (size + distinct-size; best + best_cnt),
+    # and inline the trigram build and the whole bigram fold would each
+    # run twice per row
     staged = docs.select(
         "doc_id",
         F.length("text").cast("long").alias("n_text_chars"),

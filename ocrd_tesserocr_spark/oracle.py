@@ -4,8 +4,10 @@ This module is pure Python (stdlib only, no Spark).  It holds the parse,
 assemble and scoring helpers (``_parse_blocks``, ``_assemble_block``,
 ``classify_is_main``, ``word_conf``, ...) and :func:`extract_document`, one
 plain walk over a single document that defines the output.  The Arrow batch
-kernel (kernel.py) imports the helpers and runs its own columnar walk; the
-tests pin that walk to :func:`extract_document` (SURVEY.md section 7.3.1).
+kernel (kernel.py) imports the helpers, shares the decode -> parse ->
+assemble prefix (``_assembled_blocks``) and runs its own columnar walk of
+the same shape; the tests pin that walk to :func:`extract_document`
+(SURVEY.md section 7.3.1).
 
 Semantics transplanted from the reference:
 
@@ -45,8 +47,7 @@ from html import unescape
 #: into the oracle-cache parquet filenames (corpus.materialize_oracle
 #: writes them), so a semantic change invalidates stale oracle snapshots
 #: automatically instead of silently failing the gate until someone runs
-#: `rm -rf .cache`.  (2 = auto_model exempts rule-selected
-#: models, round 4.)
+#: `rm -rf .cache`.  (2 = auto_model exempts rule-selected models.)
 ORACLE_VERSION = 2
 
 # --------------------------------------------------------------------------
@@ -146,9 +147,10 @@ _PRED_CLAUSE_RE = re.compile(
 )
 
 #: fixed attribute schema the rule predicates evaluate against (the
-#: block-classification inputs assembled in extract_document); typing the
-#: RHS literal at COMPILE time lets a mistyped rule like 'n_chars>ten'
-#: fail driver-side in _validate instead of killing executor tasks.
+#: block-classification inputs _block_effective reads from an assembled
+#: block); typing the RHS literal at COMPILE time lets a mistyped rule like
+#: 'n_chars>ten' fail at plan time in _validate instead of killing executor
+#: tasks.
 _PRED_ATTR_TYPES = {
     "kind": str,
     "n_chars": float,
@@ -237,17 +239,27 @@ def resolve_params(params: ExtractParams) -> ExtractParams:
     return replace(params, **overrides)
 
 
-def _block_effective(params: ExtractParams, attrs: dict):
+def _block_effective(params: ExtractParams, block: tuple):
     """Per-block (effective_params, model, from_rule) after rule application.
 
-    All matching block_rules apply in order (recognize.py:238-246 applies
-    every matching xpath_parameters entry); matching model_rules '+'-join
-    (recognize.py:258-259), falling back to the default model.
-    ``from_rule`` records whether a model_rule matched: the reference
-    RETURNS right after an xpath_model match (recognize.py:258-262 — the
-    '+'-joined rule models are used jointly, verbatim), so auto_model
-    scoring must only ever apply to the preset model.
+    ``block`` is one ``_assemble_block`` tuple; without rules the preset
+    applies unchanged.  All matching block_rules apply in order
+    (recognize.py:238-246 applies every matching xpath_parameters entry);
+    matching model_rules '+'-join (recognize.py:258-259), falling back to
+    the default model.  ``from_rule`` records whether a model_rule matched:
+    the reference RETURNS right after an xpath_model match
+    (recognize.py:258-262 — the '+'-joined rule models are used jointly,
+    verbatim), so auto_model scoring must only ever apply to the preset
+    model.
     """
+    if not params.block_rules and not params.model_rules:
+        return params, params.model, False
+    # rules see the block's classification inputs
+    kind, rtl, join, _, n_chars, link_density, text_density = block
+    attrs = {
+        "kind": kind, "n_chars": n_chars, "link_density": link_density,
+        "text_density": text_density, "rtl": rtl, "join": join,
+    }
     eff = params
     overrides: dict = {}
     for expr, pairs in params.block_rules:
@@ -428,14 +440,13 @@ def word_conf(word: str) -> float:
 
 #: raw block record layout (plain list — LOAD_FAST + BINARY_SUBSCR beat
 #: slots-attribute traffic across the parser's ~40 constructions and
-#: ~hundreds of accesses per document, round 6):
+#: ~hundreds of accesses per document):
 #:   [kind, rtl, btt, join, parts, tag_count]
 #: ``parts`` holds (text, in_link, style_bits); ``btt`` is the
 #: bottom-to-top line order flag (common.py:131-134).
 _RK, _RRTL, _RBTT, _RJOIN, _RPARTS, _RTAGS = 0, 1, 2, 3, 4, 5
 
-# single-pass token scanner (replaces stdlib HTMLParser, which profiled at
-# ~60% of kernel time; same event stream, lenient like a browser tokenizer).
+# single-pass token scanner, lenient like a browser tokenizer.
 # Alternation order: most common first (start tag, end tag) so the engine
 # tries at most one extra branch per real tag — safe because every branch
 # except the bogus catch-all is mutually exclusive on the 2nd/3rd char
@@ -482,12 +493,9 @@ def _parse_blocks(html: str) -> list:
     analysis: one walk over the token stream yields every block with its
     classification inputs, recognize.py:486-492).
 
-    One function, all state in locals (round 6): the former _BlockParser
-    class dispatched ~320 method calls per document whose bodies were
-    dominated by ``self._x`` attribute traffic; inlining the handlers
-    keeps the whole event loop in LOAD_FAST territory.  The event stream
-    and its semantics are byte-identical (digest-pinned across every
-    preset x corpus combination).
+    One function with all state in locals: the event handlers are inlined
+    so the event loop runs on local-variable access instead of per-event
+    method calls and attribute traffic.
     """
     blocks: list = []
     stack: list = []  # open block records
@@ -516,7 +524,7 @@ def _parse_blocks(html: str) -> list:
             # one span() call instead of separate start()/end() lookups
             start, pend = m.span()
         if start > pos:
-            # -- text run (the former handle_data, inlined) --------------
+            # -- text run ------------------------------------------------
             chunk = html[pos:start]
             if "&" in chunk:
                 chunk = unesc(chunk)
@@ -557,7 +565,7 @@ def _parse_blocks(html: str) -> list:
         # end tags at group 3, comment/doctype/bogus at None
         li = m.lastindex
         if li == 2:
-            # -- start tag (the former handle_starttag, inlined) ---------
+            # -- start tag -----------------------------------------------
             tag_raw, attrs_raw = m.group(1, 2)
             tag = tag_raw.lower()
             cat = tag_cat.get(tag, 0)
@@ -664,7 +672,7 @@ def _parse_blocks(html: str) -> list:
                 ]
             )
         elif li == 3:
-            # -- end tag (the former handle_endtag, inlined) -------------
+            # -- end tag -------------------------------------------------
             tag = m.group(3).lower()
             cat = tag_cat.get(tag, 0)
             if cat == _CAT_SKIP:
@@ -787,6 +795,25 @@ def _assemble_block(raw: list) -> tuple:
     return (kind, rtl, join, lines, total_chars, link_density, text_density)
 
 
+def _assembled_blocks(html) -> list:
+    """html payload -> its ``_assemble_block`` tuples, the prefix shared by
+    both walks (this module's :func:`extract_document` and the batch
+    kernel's).  Bytes-like payloads decode as strict UTF-8; a ``None`` or
+    undecodable payload raises, and the caller turns that into a failure
+    row.  Blocks with no line are dropped unless they are structural
+    markers (binary-empty filter, recognize.py:598-601)."""
+    if html is None:
+        raise ValueError("null payload")
+    if isinstance(html, (bytes, bytearray, memoryview)):
+        html = bytes(html).decode("utf-8", errors="strict")
+    out = []
+    for raw in _parse_blocks(html):
+        a = _assemble_block(raw)
+        if a[3] or a[0] in ("separator", "image"):
+            out.append(a)
+    return out
+
+
 def _block_canonical_text(line_words: list) -> str:
     # str.join over a LIST beats a generator here (join pre-sizes;
     # measured 1.4x on the bench corpus's block-shape distribution);
@@ -823,11 +850,7 @@ def extract_document(html: bytes | str | None,
     # document, default table otherwise
     glyph_table = dict(params.glyph_confusions) if params.glyph_confusions else None
     try:
-        if html is None:
-            raise ValueError("null payload")
-        if isinstance(html, (bytes, bytearray, memoryview)):
-            html = bytes(html).decode("utf-8", errors="strict")
-        raws = _parse_blocks(html)
+        assembled = _assembled_blocks(html)
     except Exception:
         return {
             "text": None,
@@ -837,30 +860,17 @@ def extract_document(html: bytes | str | None,
             "failed": True,
         }
 
-    assembled = []
-    for raw in raws:
-        a = _assemble_block(raw)
-        # binary-empty filter: drop blocks with no tokens unless they are
-        # structural markers (recognize.py:598-601)
-        if not a[3] and a[0] not in ("separator", "image"):
-            continue
-        assembled.append(a)
-
     blocks = []
     doc_parts: list[str] = []
     pos = 0  # running char offset into canonical doc text
     prev_main = False
     main_confs: list[float] = []
 
-    for idx, (kind, rtl, join, line_words, n_chars, link_density,
-              text_density) in enumerate(assembled):
+    for idx, block in enumerate(assembled):
+        kind, _, join, line_words, n_chars, link_density, text_density = block
         block_id = "block%04d" % idx
-        # per-segment dynamic config (xpath_parameters/xpath_model
-        # analogue): rules see the block's classification inputs
-        eff, model, model_from_rule = _block_effective(params, {
-            "kind": kind, "n_chars": n_chars, "link_density": link_density,
-            "text_density": text_density, "rtl": rtl, "join": join,
-        })
+        # per-segment dynamic config (xpath_parameters/xpath_model analogue)
+        eff, model, model_from_rule = _block_effective(params, block)
         # in-kernel auto_model (recognize.py:266-277): '+'-joined candidates
         # are each scored on THIS block; the argmax (first on ties, like
         # np.argmax) becomes the block's model and its confusion table

@@ -287,6 +287,24 @@ def test_cli_list_presets(capsys):
         assert name in out
 
 
+def test_cli_list_presets_is_deterministic():
+    """Set-valued params (``main_kinds``) print in sorted order, so the
+    listing does not depend on the interpreter's string-hash seed."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    outs = set()
+    for seed in ("1", "2"):
+        env = dict(os.environ, PYTHONHASHSEED=seed)
+        outs.add(subprocess.run(
+            [sys.executable, "-m", "ocrd_tesserocr_spark.cli", "list-presets"],
+            cwd=repo, env=env, capture_output=True, text=True, check=True,
+        ).stdout)
+    assert len(outs) == 1
+    assert '"main_kinds": ["caption", "floating", "heading", "paragraph", "table"]' in outs.pop()
+
+
 def test_font_style_counts(spark, pages_small):
     """P7 analogue: article template wraps single words in <b>/<i>/<code>."""
     from pyspark.sql import functions as F

@@ -540,3 +540,36 @@ def test_comments_and_cdata_dropped_with_or_without_closer():
     }
     for body, text in cases.items():
         assert extract_document(_doc(body))["text"] == text, body
+
+
+def test_assembled_blocks_decode_parse_assemble_filter():
+    """The prefix both walks share, pinned by hand: the kernel-vs-oracle
+    parity tests run it on both sides, so they cannot see a change in it.
+    Tuples are (kind, rtl, join, lines, n_chars, link_density,
+    text_density) and each line is (words, style bits or None)."""
+    import pytest
+
+    from ocrd_tesserocr_spark.oracle import _assembled_blocks
+
+    with pytest.raises(ValueError):
+        _assembled_blocks(None)
+    with pytest.raises(UnicodeDecodeError):
+        _assembled_blocks(b"<p>\xff\xfe</p>")
+    assert _assembled_blocks(b"") == []
+    assert _assembled_blocks(b" \n\t ") == []
+
+    para = [("paragraph", False, False, [(["alpha", "beta"], None)], 9, 0.0, 9.0)]
+    raw = b"<p>alpha beta</p>"
+    for payload in (raw, bytearray(raw), memoryview(raw), raw.decode()):
+        assert _assembled_blocks(payload) == para
+
+    # structural markers survive the empty filter with no words
+    assert _assembled_blocks("<hr><img src=a>") == [
+        ("separator", False, False, [], 0, 0.0, 0.0),
+        ("image", False, False, [], 0, 0.0, 0.0),
+    ]
+    assert _assembled_blocks("<p> </p>") == []
+    assert _assembled_blocks("<div><script>x</script></div>") == []
+    assert _assembled_blocks("<p>a<br>b</p>") == [
+        ("paragraph", False, False, [(["a"], None), (["b"], None)], 2, 0.0, 2.0)
+    ]
