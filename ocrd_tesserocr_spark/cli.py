@@ -34,6 +34,9 @@ import argparse
 import json
 import sys
 
+from .oracle import LEVELS
+from .plans import PRESETS
+
 
 def _add_param_args(sp) -> None:
     sp.add_argument(
@@ -91,12 +94,12 @@ def apply_cli_params(params, param_opts, rules_path):
 
 
 def build_parser() -> argparse.ArgumentParser:
+    presets = sorted(PRESETS)
     p = argparse.ArgumentParser(prog="ocrd-tesserocr-spark")
     sub = p.add_subparsers(dest="cmd", required=True)
 
     ex = sub.add_parser("extract", help="run an extraction stage")
-    ex.add_argument("--preset", default="recognize",
-                    help="recognize|segment|sparse|strict_main")
+    ex.add_argument("--preset", default="recognize", choices=presets)
     ex.add_argument("--input", required=True, help="pages parquet/table path")
     ex.add_argument("--output", required=True, help="output snapshot dir")
     ex.add_argument("--partitions", type=int, default=None)
@@ -108,8 +111,8 @@ def build_parser() -> argparse.ArgumentParser:
         "recompute",
         help="re-recognize existing output at a lower level (process_existing)",
     )
-    rc.add_argument("--preset", default="extract")
-    rc.add_argument("--level", default="word", help="word|glyph|line")
+    rc.add_argument("--preset", default="extract", choices=presets)
+    rc.add_argument("--level", default="word", choices=LEVELS)
     rc.add_argument("--input", required=True, help="pages parquet/table path")
     rc.add_argument("--committed", required=True, help="existing stage output dir")
     rc.add_argument("--output", required=True, help="new stage output dir")
@@ -139,7 +142,7 @@ def build_parser() -> argparse.ArgumentParser:
     st.add_argument("--output", required=True, help="append-mode parquet sink")
     st.add_argument("--checkpoint", required=True,
                     help="streaming checkpoint dir (resume point + state store)")
-    st.add_argument("--preset", default="recognize")
+    st.add_argument("--preset", default="recognize", choices=presets)
     st.add_argument(
         "--continuous",
         action="store_true",
@@ -163,8 +166,6 @@ def main(argv: list[str] | None = None) -> int:
     args = build_parser().parse_args(argv)
 
     if args.cmd == "list-presets":
-        from .plans import PRESETS
-
         for name, params in PRESETS.items():
             print(name, json.dumps(params.__dict__, default=sorted))
         return 0
@@ -186,7 +187,6 @@ def main(argv: list[str] | None = None) -> int:
     try:
         if args.cmd == "extract":
             from .pipeline import run_stage
-            from .plans import PRESETS
 
             params = apply_cli_params(PRESETS[args.preset], args.param, args.rules)
             pages = read_parquet(spark, args.input)
@@ -203,7 +203,6 @@ def main(argv: list[str] | None = None) -> int:
             return 0
         if args.cmd == "recompute":
             from .pipeline import recompute_stage
-            from .plans import PRESETS
 
             res = recompute_stage(
                 spark,
@@ -223,8 +222,6 @@ def main(argv: list[str] | None = None) -> int:
             from .streaming import extract_stream, pages_stream, start_to_parquet
 
             if args.mode == "extract":
-                from .plans import PRESETS
-
                 params = apply_cli_params(
                     PRESETS[args.preset], args.param, args.rules
                 )

@@ -32,6 +32,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 
 from .oracle import (
+    LEVELS,
     ExtractParams,
     _assembled_blocks,
     _block_canonical_text,
@@ -57,16 +58,22 @@ def _partition_id() -> int:
 
 
 def _validate(params: ExtractParams) -> ExtractParams:
-    """Raise on a malformed ``extra`` value or rule predicate; return the
-    resolved params."""
+    """Raise on a malformed ``extra`` value, rule predicate or
+    ``textequiv_level`` (the resolved level and every block rule's
+    override must be one of ``LEVELS``); return the resolved params."""
     from .oracle import _coerce_overrides, compile_predicate
 
     resolved = resolve_params(params)
+    level = resolved.textequiv_level
+    levels = {level}
     for expr, pairs in params.block_rules:
         compile_predicate(expr)
-        _coerce_overrides(pairs)
+        levels.add(_coerce_overrides(pairs).get("textequiv_level", level))
     for expr, _model in params.model_rules:
         compile_predicate(expr)
+    bad = sorted(levels.difference(LEVELS))
+    if bad:
+        raise ValueError(f"textequiv_level must be one of {LEVELS}, got {bad}")
     return resolved
 
 
@@ -359,9 +366,10 @@ def make_extract_arrow_fn(params: ExtractParams):
     this one path.
 
     Config validation happens HERE, on the driver, before any job
-    launches: a malformed ``extra`` value or rule predicate raises at plan
-    time instead of failing executor tasks (the analogue of the
-    reference's JSON-Schema parameter validation at processor init)."""
+    launches: a malformed ``extra`` value, rule predicate or
+    ``textequiv_level`` raises at plan time instead of failing executor
+    tasks (the analogue of the reference's JSON-Schema parameter
+    validation at processor init)."""
     from pyspark.sql.pandas.types import to_arrow_schema
 
     from .schemas import EXTRACTED_SCHEMA

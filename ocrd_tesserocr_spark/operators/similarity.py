@@ -144,7 +144,6 @@ _SQL_BUCKET = " || ".join(
     f"(CASE WHEN embedding[{i + 1}] >= 0 THEN '1' ELSE '0' END)"
     for i in range(BUCKET_DIMS)
 )
-_SQL_BUCKET_Q = _SQL_BUCKET
 
 SQL_ANN_BUCKETED = f"""
 WITH b AS (

@@ -19,6 +19,9 @@ canonicalizer, not the synthesis.
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -27,6 +30,11 @@ from ..sources import read_documents, resplit
 #: query parameters stripped by canonicalization: attribution/tracking
 #: noise that never changes page content.  Prefix match for utm_*.
 TRACKING_PREFIXES = ("utm_", "fbclid", "gclid")
+
+
+def _is_tracking(param: Column) -> Column:
+    """Whether query param ``param`` starts with a tracking prefix."""
+    return reduce(operator.or_, [param.startswith(t) for t in TRACKING_PREFIXES])
 
 
 def canonicalize_url(url: Column) -> Column:
@@ -49,13 +57,7 @@ def canonicalize_url(url: Column) -> Column:
     rest = F.regexp_extract(url, r"^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]+([^#]*)", 1)
     path = F.regexp_extract(rest, r"^([^?]*)", 1)
     query = F.regexp_extract(rest, r"\?(.*)$", 1)
-    kept = F.filter(
-        F.split(query, "&"),
-        lambda p: (p != "")
-        & ~p.startswith("utm_")
-        & ~p.startswith("fbclid")
-        & ~p.startswith("gclid"),
-    )
+    kept = F.filter(F.split(query, "&"), lambda p: (p != "") & ~_is_tracking(p))
     canon_query = F.array_join(kept, "&")
     return F.concat(
         scheme,
@@ -72,11 +74,7 @@ def n_stripped_params(url: Column) -> Column:
     """How many query params canonicalization removed (long)."""
     query = F.regexp_extract(url, r"^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]+[^#]*?\?([^#]*)", 1)
     parts = F.filter(F.split(query, "&"), lambda p: p != "")
-    stripped = F.filter(
-        parts,
-        lambda p: p.startswith("utm_") | p.startswith("fbclid") | p.startswith("gclid"),
-    )
-    return F.size(stripped).cast("long")
+    return F.size(F.filter(parts, _is_tracking)).cast("long")
 
 
 def _messy_url() -> Column:

@@ -54,6 +54,9 @@ ORACLE_VERSION = 2
 # parameters (analogue of the ocrd-tool.json parameter surface)
 # --------------------------------------------------------------------------
 
+#: valid ``textequiv_level`` values, shallowest first
+LEVELS = ("block", "line", "word", "glyph")
+
 
 @dataclass(frozen=True)
 class ExtractParams:
@@ -304,8 +307,10 @@ _BOILERPLATE = {"nav", "header", "footer", "aside"}
 
 # one dict lookup per tag instead of a chain of set-membership tests in
 # the parser's hottest hooks (the tag sets above are disjoint; 0 = any
-# other tag, the most common case in real markup)
-_CAT_SKIP, _CAT_BOILER, _CAT_VOID, _CAT_BR, _CAT_A, _CAT_STYLE, _CAT_BLOCK = (
+# other tag, the most common case in real markup).  The categories whose
+# start tag ends an implicit paragraph (boilerplate, void, block) are
+# numbered last, so the parser tests them with one ``cat >= _CAT_BOILER``.
+_CAT_SKIP, _CAT_BR, _CAT_A, _CAT_STYLE, _CAT_BOILER, _CAT_VOID, _CAT_BLOCK = (
     1, 2, 3, 4, 5, 6, 7,
 )
 _TAG_CAT = {t: _CAT_SKIP for t in _SKIP_CONTENT}
@@ -441,10 +446,10 @@ def word_conf(word: str) -> float:
 #: raw block record layout (plain list — LOAD_FAST + BINARY_SUBSCR beat
 #: slots-attribute traffic across the parser's ~40 constructions and
 #: ~hundreds of accesses per document):
-#:   [kind, rtl, btt, join, parts, tag_count]
+#:   [kind, rtl, btt, join, parts, tag_count, tag]
 #: ``parts`` holds (text, in_link, style_bits); ``btt`` is the
-#: bottom-to-top line order flag (common.py:131-134).
-_RK, _RRTL, _RBTT, _RJOIN, _RPARTS, _RTAGS = 0, 1, 2, 3, 4, 5
+#: bottom-to-top line order flag (common.py:131-134); ``tag`` is the tag
+#: that opened the block, None for an implicit paragraph.
 
 # single-pass token scanner, lenient like a browser tokenizer.
 # Alternation order: most common first (start tag, end tag) so the engine
@@ -495,15 +500,15 @@ def _parse_blocks(html: str) -> list:
 
     One function with all state in locals: the event handlers are inlined
     so the event loop runs on local-variable access instead of per-event
-    method calls and attribute traffic.
+    method calls and attribute traffic.  One stack per kind of scope: open
+    block records (each carries its tag), ``(tag, rtl)`` dir= scopes, and
+    depth counters for links, boilerplate and styles.
     """
     blocks: list = []
-    stack: list = []  # open block records
-    open_tags: list = []  # open block tag names ('#implicit' sentinel)
+    stack: list = []  # open block records; an implicit paragraph has tag None
+    dirs: list = []  # (tag, rtl) of the open dir= scopes
     link_depth = 0
     boiler_depth = 0
-    dir_stack: list = []  # rtl flags from dir= attrs
-    dir_tags: list = []
     # open b/i/code depths -> current style bits for text parts
     style_depth = {"b": 0, "i": 0, "code": 0}
     style_bits = 0
@@ -543,15 +548,15 @@ def _parse_blocks(html: str) -> list:
                     # paragraph (sparse_text analogue, recognize.py:736-750)
                     top = [
                         "noise" if boiler_depth else "paragraph",
-                        dir_stack[-1] if dir_stack else False,
+                        dirs[-1][1] if dirs else False,
                         False,
                         False,
                         [],
                         0,
+                        None,
                     ]
                     blocks.append(top)
                     stack.append(top)
-                    open_tags.append("#implicit")
                 # normalize whitespace runs only when one exists (single C
                 # scan beats an unconditional re.sub: most parts are clean)
                 if ws_dirty(chunk) is not None:
@@ -594,20 +599,20 @@ def _parse_blocks(html: str) -> list:
                 )
                 d = a.get("dir", "").lower()
                 if d in ("rtl", "ltr"):
-                    dir_stack.append(d == "rtl")
-                    dir_tags.append(tag)
+                    dirs.append((tag, d == "rtl"))
             if cat == 0:  # any other tag: counts toward text_density only
                 if stack:
                     stack[-1][5] += 1
                 continue
+            if cat >= _CAT_BOILER and stack and stack[-1][6] is None:
+                # a block, boilerplate or void start ends an implicit
+                # paragraph
+                stack.pop()
             if cat == _CAT_BLOCK:
-                if open_tags and open_tags[-1] == "#implicit":
-                    open_tags.pop()
-                    stack.pop()
-                # this tag's own dir= is already on dir_stack
+                # this tag's own dir= is already on dirs
                 blk = [
                     "noise" if boiler_depth else _BLOCK_KIND[tag],
-                    dir_stack[-1] if dir_stack else False,
+                    dirs[-1][1] if dirs else False,
                     # textLineOrder bottom-to-top analogue (common.py:131-134)
                     a is not None
                     and a.get("data-line-order", "").lower()
@@ -615,106 +620,90 @@ def _parse_blocks(html: str) -> list:
                     a is not None and "data-join" in a,
                     [],
                     0,
+                    tag,
                 ]
                 blocks.append(blk)
                 stack.append(blk)
-                open_tags.append(tag)
-                if selfclose:
-                    # <p/>: open + immediate close
-                    if dir_tags and dir_tags[-1] == tag:
-                        dir_tags.pop()
-                        dir_stack.pop()
-                    if open_tags and open_tags[-1] == tag:
-                        open_tags.pop()
-                        stack.pop()
-                continue
-            if cat == _CAT_STYLE:
+                if not selfclose:
+                    continue
+                # <p/>: open + immediate close by the end-tag code below
+            elif cat == _CAT_STYLE:
                 style_depth[tag] += 1
                 style_bits |= _STYLE_BITS[tag]
                 if stack:
                     stack[-1][5] += 1
-                if selfclose:
-                    if dir_tags and dir_tags[-1] == tag:
-                        dir_tags.pop()
-                        dir_stack.pop()
-                    if style_depth[tag] > 0:
-                        style_depth[tag] -= 1
-                        if style_depth[tag] == 0:
-                            style_bits &= ~_STYLE_BITS[tag]
+                if not selfclose:
+                    continue
+                # <b/>: closed by the end-tag code below
+            else:
+                # start-only, also when self-closed: <a/> keeps its link
+                # scope open, <nav/> its boilerplate
+                if cat == _CAT_A:
+                    link_depth += 1
+                    if stack:
+                        stack[-1][5] += 1
+                elif cat == _CAT_BR:
+                    if stack:
+                        stack[-1][4].append(_BR_PART)
+                elif cat == _CAT_BOILER:
+                    boiler_depth += 1
+                else:  # _CAT_VOID
+                    blocks.append(
+                        [
+                            "noise" if boiler_depth else _VOID_KIND[tag],
+                            False,
+                            False,
+                            False,
+                            [],
+                            0,
+                            tag,
+                        ]
+                    )
                 continue
-            if cat == _CAT_A:
-                link_depth += 1
-                if stack:
-                    stack[-1][5] += 1
-                continue
-            if cat == _CAT_BR:
-                if stack:
-                    stack[-1][4].append(_BR_PART)
-                continue
-            if cat == _CAT_BOILER:
-                boiler_depth += 1
-                if open_tags and open_tags[-1] == "#implicit":
-                    open_tags.pop()
-                    stack.pop()
-                continue
-            # _CAT_VOID
-            if open_tags and open_tags[-1] == "#implicit":
-                open_tags.pop()
-                stack.pop()
-            blocks.append(
-                [
-                    "noise" if boiler_depth else _VOID_KIND[tag],
-                    False,
-                    False,
-                    False,
-                    [],
-                    0,
-                ]
-            )
         elif li == 3:
             # -- end tag -------------------------------------------------
             tag = m.group(3).lower()
             cat = tag_cat.get(tag, 0)
             if cat == _CAT_SKIP:
                 continue  # no skip frame can be open: starts fast-forward
-            # dir-stack pop must precede the boilerplate/<a> branches: a
-            # dir attribute on <nav>/<header>/<footer>/<aside>/<a> is
-            # pushed on open and would otherwise leak RTL past its close
-            if dir_tags and dir_tags[-1] == tag:
-                dir_tags.pop()
-                dir_stack.pop()
-            if cat == _CAT_BLOCK:
-                # close innermost matching open block (lenient parser)
-                if open_tags and open_tags[-1] == "#implicit":
-                    open_tags.pop()
-                    stack.pop()
-                if open_tags and open_tags[-1] == tag:
-                    open_tags.pop()
-                    stack.pop()
-            elif cat == _CAT_STYLE:
-                if style_depth[tag] > 0:
-                    style_depth[tag] -= 1
-                    if style_depth[tag] == 0:
-                        style_bits &= ~_STYLE_BITS[tag]
-            elif cat == _CAT_A:
-                if link_depth:
-                    link_depth -= 1
-            elif cat == _CAT_BOILER:
-                if boiler_depth:
-                    boiler_depth -= 1
-        elif li == 4:
-            # -- comment / cdata: skip past the first closer; with none
-            # left, drop up to the next '>' like bogus markup ------------
-            closer = _CLOSER[m.group(4).lower()]
-            last = last_closer.get(closer)
-            if last is None:
-                last = last_closer[closer] = html.rfind(closer)
-            if last >= pos:
-                pos = html.find(closer, pos) + len(closer)
-            else:
-                k = html.find(">", pos)
-                pos = n if k < 0 else k + 1
-        # doctype / bogus markup: dropped
+        else:
+            if li == 4:
+                # -- comment / cdata: skip past the first closer; with
+                # none left, drop up to the next '>' like bogus markup --
+                closer = _CLOSER[m.group(4).lower()]
+                last = last_closer.get(closer)
+                if last is None:
+                    last = last_closer[closer] = html.rfind(closer)
+                if last >= pos:
+                    pos = html.find(closer, pos) + len(closer)
+                else:
+                    k = html.find(">", pos)
+                    pos = n if k < 0 else k + 1
+            # doctype / bogus markup: dropped
+            continue
+        # -- close a scope: an end tag, or a self-closed block/style tag --
+        # the dir pop must precede the boilerplate/<a> branches: a dir
+        # attribute on <nav>/<header>/<footer>/<aside>/<a> is pushed on
+        # open and would otherwise leak RTL past its close
+        if dirs and dirs[-1][0] == tag:
+            dirs.pop()
+        if cat == _CAT_BLOCK:
+            # close innermost matching open block (lenient parser)
+            if stack and stack[-1][6] is None:
+                stack.pop()
+            if stack and stack[-1][6] == tag:
+                stack.pop()
+        elif cat == _CAT_STYLE:
+            if style_depth[tag] > 0:
+                style_depth[tag] -= 1
+                if style_depth[tag] == 0:
+                    style_bits &= ~_STYLE_BITS[tag]
+        elif cat == _CAT_A:
+            if link_depth:
+                link_depth -= 1
+        elif cat == _CAT_BOILER:
+            if boiler_depth:
+                boiler_depth -= 1
     return blocks
 
 
@@ -735,7 +724,7 @@ def _assemble_block(raw: list) -> tuple:
     WordFontAttributes being per-word.  Each line is (words, bits), with
     bits None when the block has no styled part.
     """
-    kind, rtl, btt, join, parts, tag_count = raw
+    kind, rtl, btt, join, parts, tag_count, _ = raw
     if not parts:
         return (kind, rtl, join, [], 0, 0.0, 0.0)
     text = "".join([p for p, _, _ in parts])

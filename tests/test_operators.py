@@ -287,6 +287,24 @@ def test_cli_list_presets(capsys):
         assert name in out
 
 
+def test_cli_rejects_unknown_preset_and_level_before_spark():
+    """A misspelled --preset or --level is a usage error from argparse,
+    before any Spark session starts."""
+    import pytest
+
+    from ocrd_tesserocr_spark.cli import main
+
+    io = ["--input", "in", "--output", "out"]
+    for argv in (
+        ["extract", "--preset", "bogus", *io],
+        ["recompute", "--preset", "bogus", "--committed", "c", *io],
+        ["recompute", "--level", "wrod", "--committed", "c", *io],
+        ["stream", "--preset", "bogus", "--checkpoint", "k", *io],
+    ):
+        with pytest.raises(SystemExit):
+            main(argv)
+
+
 def test_cli_list_presets_is_deterministic():
     """Set-valued params (``main_kinds``) print in sorted order, so the
     listing does not depend on the interpreter's string-hash seed."""

@@ -573,3 +573,45 @@ def test_assembled_blocks_decode_parse_assemble_filter():
     assert _assembled_blocks("<p>a<br>b</p>") == [
         ("paragraph", False, False, [(["a"], None), (["b"], None)], 2, 0.0, 2.0)
     ]
+
+
+def test_self_closed_block_and_style_tags_close_at_once():
+    """A self-closed block or style tag (``<p/>``, ``<b/>``) opens and
+    closes its scope at once; every other self-closed tag stays open like
+    its start tag.  Both walks share the tokenizer, so the parity tests
+    cannot see this: pinned by hand."""
+    from ocrd_tesserocr_spark.oracle import _assembled_blocks, _parse_blocks
+
+    def words(body):
+        return [
+            (kind, rtl, [ws for ws, _ in lines])
+            for kind, rtl, _, lines, _, _, _ in _assembled_blocks(body)
+        ]
+
+    # the empty <p/> block is dropped; the text after it opens an
+    # implicit paragraph (a raw record with no tag)
+    body = "<p>first words</p><p/>tail words"
+    assert [r[6] for r in _parse_blocks(body)] == ["p", "p", None]
+    assert words(body) == [
+        ("paragraph", False, [["first", "words"]]),
+        ("paragraph", False, [["tail", "words"]]),
+    ]
+    # the dir= scope of a self-closed block closes with it
+    assert words('<p dir="rtl"/>after words') == [
+        ("paragraph", False, [["after", "words"]])
+    ]
+    # ... but a self-closed <span dir=rtl/> stays open until </span>
+    assert words('<p><span dir="rtl"/>a b</p><p>c d</p>') == [
+        ("paragraph", False, [["a", "b"]]),
+        ("paragraph", True, [["d", "c"]]),
+    ]
+    assert words('<p><span dir="rtl"/>a b</p></span><p>c d</p>')[1] == (
+        "paragraph", False, [["c", "d"]]
+    )
+    # <b/> styles nothing after it
+    assert _assembled_blocks("<p>x<b/>bold?</p>")[0][3] == [(["xbold?"], None)]
+    # a self-closed <a/> keeps its link scope, <nav/> its boilerplate
+    linked = _assembled_blocks("<p><a/>linked words</p><p>plain words</p>")
+    assert [b[5] for b in linked] == [1.0, 1.0]
+    assert [b[0] for b in _assembled_blocks(
+        "<nav/><p>noise words</p><p>more words</p>")] == ["noise", "noise"]

@@ -291,6 +291,15 @@ def test_malformed_config_fails_fast_on_driver(spark, pages_small):
     with pytest.raises(ValueError):
         extract(spark, pages_small,
                 ExtractParams(block_rules=(("kind ~~ junk", ()),)))
+    # a misspelled textequiv_level, set directly, through ``extra`` or by a
+    # block rule, would otherwise emit block-level output silently
+    for params in (
+        ExtractParams(textequiv_level="wrod"),
+        ExtractParams(extra=(("textequiv_level", "Word"),)),
+        ExtractParams(block_rules=(("kind=paragraph", (("textequiv_level", "glpyh"),)),)),
+    ):
+        with pytest.raises(ValueError):
+            extract(spark, pages_small, params)
 
 
 def test_building_extract_over_joined_input_runs_no_job(spark, pages_small):

@@ -12,7 +12,8 @@ _tags = st.sampled_from(
     ["<p>", "</p>", "<div>", "<b>", "</b>", "<br>", "<table>", "<td>", "</td>",
      "<nav>", "</nav>", "<script>", "</script>", '<p dir="rtl">', "<hr>",
      '<p data-join="1">', "<h1>", "</h1>", "&amp;", "&lt;",
-     "<i>", "</i>", "<code>", "</code>", "<b/>", "</code></b>"]
+     "<i>", "</i>", "<code>", "</code>", "<b/>", "</code></b>",
+     "<p/>", '<p dir="rtl"/>', "<a/>", "<nav/>", '<div dir="rtl"/>']
 )
 _chunks = st.lists(st.one_of(_tags, st.text(max_size=24)), max_size=30)
 
@@ -206,7 +207,7 @@ def _assemble_per_char(raw):
     the OR over its characters."""
     import re
 
-    kind, rtl, btt, join, parts, tag_count = raw
+    kind, rtl, btt, join, parts, tag_count, _ = raw
     text = "".join(p for p, _, _ in parts)
     char_bits = [b for p, _, b in parts for _ in p]
     total = sum(ch not in " \n" for p, _, _ in parts for ch in p)
@@ -250,7 +251,7 @@ def test_assemble_block_matches_per_char_reference(parts, rtl, btt, join, tags):
     equals a per-character reference on tokenizer-shaped parts."""
     from ocrd_tesserocr_spark.oracle import _assemble_block
 
-    raw = ["paragraph", rtl, btt, join, parts, tags]
+    raw = ["paragraph", rtl, btt, join, parts, tags, "p"]
     assert _assemble_block(raw) == _assemble_per_char(raw)
 
 

@@ -1,5 +1,6 @@
 """tools/logical_lines.py: what counts as a logical line, and the
-``--base`` comparison against a git revision (no Spark)."""
+``--base`` comparison against a git revision; tools/kernel_digest.py's
+seeded soup corpus (no Spark)."""
 
 from __future__ import annotations
 
@@ -47,3 +48,17 @@ def test_base_prints_counts_and_difference(tmp_path, capsys):
         "b.py 1 0 +1",
         "total 2 2 +0",
     ]
+
+
+def test_soup_corpus_is_seeded_and_covers_the_rare_tokenizer_paths():
+    from kernel_digest import SOUP_DOCS, soup_pages
+
+    pages = soup_pages()
+    assert len(pages) == SOUP_DOCS >= 5000
+    assert pages == soup_pages()
+    assert [r["url"] for r in pages] == sorted(r["url"] for r in pages)
+    htmls = [r["html"].decode("utf-8") for r in pages]
+    for shape in ('dir="rtl"/>', "<p/>", "<b/>", "<a/>", "<nav/>", "data-join",
+                  "data-line-order", "<!-- c -->", "<!-- open",
+                  "<![CDATA[ d ]]>", "<![CDATA[ open", "&amp;", "&#1488;"):
+        assert any(shape in h for h in htmls), shape

@@ -9,24 +9,92 @@ before and after a kernel change: every line must stay the same.
 Each batch is also compared with the reference batch built from
 ``oracle.extract_document`` dicts (``tests.conftest.dict_path_batch``).
 
-    python tools/kernel_digest.py                 # sf0.001, sf0.01, hostile
+The corpora are the sf directories' pages, the hand-written hostile pages
+and ``soup``: a fixed-seed corpus of tag soups (self-closed tags with and
+without ``dir=``, ``data-join``/``data-line-order``, open and closed
+comments/CDATA, entities) that reaches the tokenizer's rarer paths.
+
+    python tools/kernel_digest.py                 # sf0.001, sf0.01, hostile, soup
     python tools/kernel_digest.py SF_DIR [...]    # other sf directories
+    python tools/kernel_digest.py --base REV      # also digest git revision REV
 
 Prints ``<preset> <corpus> <rows> <sha256> oracle=match|DIFF`` per line and
-exits 1 if any line reads ``DIFF``.
+exits 1 if any line reads ``DIFF``.  With ``--base REV`` the same digests
+are computed on a ``git archive`` of ``REV`` in a subprocess, fed the same
+corpora, and each line gains ``base=same|DIFF``.
 """
 
 from __future__ import annotations
 
+import argparse
 import hashlib
+import io
 import json
 import os
+import pickle
+import random
+import shutil
+import subprocess
 import sys
+import tarfile
+import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 BATCH_ROWS = 8192
+SOUP_DOCS = 5000
+SOUP_SEED = 13
+
+#: tag names of the soup: block, style, link, boilerplate, void, skip and
+#: plain tags
+_SOUP_TAGS = (
+    "p", "div", "li", "h1", "h2", "td", "th", "pre", "blockquote", "dd",
+    "b", "i", "code", "a", "nav", "header", "footer", "aside", "span", "br",
+    "hr", "img", "script", "dt", "h3", "table", "tr", "em",
+    "section", "figcaption", "caption",
+)
+_SOUP_ATTRS = (
+    ' dir="rtl"', " dir=ltr", ' data-join="1"', " data-line-order=btt",
+    " data-line-order='bottom-to-top'", ' href="x"', " DIR='RTL'",
+)
+_SOUP_WORDS = (
+    "alpha", "beta", "gamma", "delta", "0o1lI", "x", "אב",
+    "&amp;", "&lt;b&gt;", "&#1488;", "&nbsp;", "a&b", " ", "\n", "  \t ",
+)
+_SOUP_MARKUP = (
+    "<!-- c -->", "<!-- open", "<![CDATA[ d ]]>", "<![CDATA[ open",
+    "<!DOCTYPE html>", "<?bogus?>", "</ p>", "<>",
+)
+
+
+def _soup_token(rng: random.Random) -> str:
+    r = rng.random()
+    if r < 0.45:
+        tag = rng.choice(_SOUP_TAGS)
+        if rng.random() < 0.5:
+            attrs = "".join(
+                rng.choice(_SOUP_ATTRS) for _ in range(rng.randint(0, 2))
+            )
+            return "<%s%s%s>" % (tag, attrs, "/" if rng.random() < 0.25 else "")
+        return "</%s>" % tag
+    if r < 0.9:
+        return " ".join(rng.choice(_SOUP_WORDS) for _ in range(rng.randint(1, 4)))
+    return rng.choice(_SOUP_MARKUP)
+
+
+def soup_pages(n: int = SOUP_DOCS, seed: int = SOUP_SEED) -> list:
+    """``n`` seeded tag-soup pages as (url, html) records, in url order."""
+    rng = random.Random(seed)
+    return [
+        {
+            "url": "soup://%06d" % i,
+            "html": "".join(
+                _soup_token(rng) for _ in range(rng.randint(1, 40))
+            ).encode("utf-8"),
+        }
+        for i in range(n)
+    ]
 
 
 def digest(fn, params, recs: list) -> tuple[str, bool]:
@@ -57,13 +125,61 @@ def digest(fn, params, recs: list) -> tuple[str, bool]:
     return h.hexdigest(), same
 
 
-def main(argv: list) -> int:
-    from ocrd_tesserocr_spark.corpus import hostile_pages, pages_records
+def digest_lines(corpora: dict) -> list:
+    """``[preset, corpus, rows, sha256, oracle=...]`` for every preset x
+    corpus, in print order."""
     from ocrd_tesserocr_spark.kernel import make_extract_arrow_fn
     from ocrd_tesserocr_spark.plans import PRESETS
 
-    if argv:
-        sf_dirs = argv
+    lines = []
+    for preset, params in sorted(PRESETS.items()):
+        fn = make_extract_arrow_fn(params)
+        for name, recs in corpora.items():
+            sha, same = digest(fn, params, recs)
+            lines.append([preset, name, str(len(recs)), sha,
+                          "oracle=" + ("match" if same else "DIFF")])
+    return lines
+
+
+def start_base(rev: str, corpora: dict, tmp: str) -> subprocess.Popen:
+    """Start this tool on a ``git archive`` of ``rev`` under ``tmp``, fed
+    ``corpora``; its stdout is one JSON list of :func:`digest_lines`."""
+    tree = os.path.join(tmp, "tree")
+    archive = subprocess.run(
+        ["git", "-C", REPO, "archive", "--format=tar", rev],
+        capture_output=True, check=True,
+    ).stdout
+    with tarfile.open(fileobj=io.BytesIO(archive)) as tar:
+        tar.extractall(tree)
+    tool = os.path.join(tree, "tools", "kernel_digest.py")
+    os.makedirs(os.path.dirname(tool), exist_ok=True)
+    shutil.copyfile(os.path.abspath(__file__), tool)
+    path = os.path.join(tmp, "corpora.pickle")
+    with open(path, "wb") as f:
+        pickle.dump(corpora, f)
+    return subprocess.Popen(
+        [sys.executable, tool, "--corpora", path],
+        stdout=subprocess.PIPE, text=True,
+    )
+
+
+def main(argv: list) -> int:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("sf_dirs", nargs="*", help="sf directories (default sf0.001, sf0.01)")
+    ap.add_argument("--base", metavar="REV", help="also digest git revision REV")
+    # internal: digest pickled corpora and print the lines as JSON (the
+    # --base subprocess)
+    ap.add_argument("--corpora", help=argparse.SUPPRESS)
+    args = ap.parse_args(argv)
+    if args.corpora:
+        with open(args.corpora, "rb") as f:
+            print(json.dumps(digest_lines(pickle.load(f))))
+        return 0
+
+    from ocrd_tesserocr_spark.corpus import hostile_pages, pages_records
+
+    if args.sf_dirs:
+        sf_dirs = args.sf_dirs
     else:
         from tests.conftest import SF_ORACLE, SF_SMOKE
 
@@ -73,15 +189,28 @@ def main(argv: list) -> int:
         for d in sf_dirs
     }
     corpora["hostile"] = hostile_pages()
-    all_same = True
-    for preset, params in sorted(PRESETS.items()):
-        fn = make_extract_arrow_fn(params)
-        for name, recs in corpora.items():
-            sha, same = digest(fn, params, recs)
-            all_same = all_same and same
-            print(preset, name, len(recs), sha,
-                  "oracle=" + ("match" if same else "DIFF"), flush=True)
-    return 0 if all_same else 1
+    corpora["soup"] = soup_pages()
+    if not args.base:
+        ok = True
+        for line in digest_lines(corpora):
+            ok = ok and line[-1] == "oracle=match"
+            print(*line, flush=True)
+        return 0 if ok else 1
+
+    with tempfile.TemporaryDirectory() as tmp:
+        proc = start_base(args.base, corpora, tmp)
+        lines = digest_lines(corpora)
+        out, _ = proc.communicate()
+    if proc.returncode:
+        print("base run of %s failed (exit %d)" % (args.base, proc.returncode))
+        return 1
+    base = {tuple(b[:2]): b[2:4] for b in json.loads(out)}
+    ok = True
+    for line in lines:
+        same = base.get(tuple(line[:2])) == line[2:4]
+        ok = ok and same and line[-1] == "oracle=match"
+        print(*line, "base=" + ("same" if same else "DIFF"), flush=True)
+    return 0 if ok else 1
 
 
 if __name__ == "__main__":
