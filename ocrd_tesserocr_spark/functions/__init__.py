@@ -11,11 +11,17 @@ hash and goes through the :func:`hash_long`/:func:`hash_mod` dispatchers
 below.  The production implementation is ``xxhash64`` (one JVM intrinsic
 instead of md5 + hex substring + base-16 conv) — toggle with
 ``SPARK_GRAFT_HASH=xxhash64`` or :func:`set_hash_impl` — measured ~1.13x
-faster on the sf0.1 word-hash map (round 3; modest because the
-interpreted higher-order ``transform`` around the hash dominates).  md5
+faster on the sf0.1 word-hash map (modest because the interpreted
+higher-order ``transform`` around the hash dominates).  md5
 stays the default because DuckDB has no xxhash64 twin and the
 correctness gate demands identical values on both engines; no operator
 logic depends on the hash beyond determinism + uniformity.
+
+Words and word k-grams are defined once here too: a word is a ``' '``-split
+token of the canonical text (the extractor joins words with one space), a
+k-gram is k consecutive words joined by one space, and a text with fewer
+than k words has none.  The DuckDB twin of :func:`split_words` is
+``str_split(text, ' ')``.
 """
 
 from __future__ import annotations
@@ -92,3 +98,30 @@ def hash_mod(col: Column, p: int = HASH_P) -> Column:
     if HASH_IMPL == "xxhash64":
         return F.pmod(F.xxhash64(col), F.lit(p))
     return md5_mod(col, p)
+
+
+def split_words(text: Column) -> Column:
+    """The words of ``text``: ``split(text, ' ')``, so two adjacent spaces
+    give an empty word and the empty text gives one empty word."""
+    return F.split(text, " ")
+
+
+def ngram_starts(n: Column, k: int) -> Column:
+    """1-based start positions of the k-grams of an n-element sequence:
+    ``[1, n - k + 1]``, empty when ``n < k``."""
+    return F.when(n >= k, F.sequence(F.lit(1), n - (k - 1))).otherwise(
+        F.array().cast("array<int>")
+    )
+
+
+def word_ngrams(ws: Column, k: int) -> Column:
+    """Word k-grams of the word array ``ws``, in order, each joined by one
+    space.  ``ws`` must be a named column (a staged ``split_words``): a
+    lambda body has no common-subexpression elimination, so an inline
+    split would re-run once per element reference."""
+    return F.transform(
+        ngram_starts(F.size(ws), k),
+        lambda i: F.concat_ws(
+            " ", *[F.element_at(ws, i + j if j else i) for j in range(k)]
+        ),
+    )

@@ -23,8 +23,10 @@ from ..functions import (
     HASH_P,
     hash_long,
     hash_mod,
+    split_words,
     sql_md5_long,
     sql_md5_mod,
+    word_ngrams,
 )
 from ..sources import read_documents, resplit
 
@@ -54,31 +56,14 @@ def _sig_cols() -> list:
 
 def _staged_hs(docs: DataFrame) -> DataFrame:
     """docs -> docs + ``hs`` (3-word-shingle md5 hashes), with the word
-    array STAGED as a named column (round-6 optimization, guide section
-    1.2 step 2): an inline ``element_at(split(text), i)`` inside a
-    higher-order lambda re-evaluates the split once PER ELEMENT REFERENCE
-    (interpreted lambda bodies have no subexpression elimination), making
-    shingle construction O(words^2) per document.  A named multi-
-    referenced non-cheap alias is kept in its own Project by
-    CollapseProject, so the split runs once per row — measured 3.4x on
-    the sf1.0 shingle map (1.50 s -> 0.44 s), identical values."""
+    array staged as a named column: CollapseProject keeps a named,
+    multi-referenced non-cheap alias in its own Project, so the split runs
+    once per row instead of once per element reference inside the shingle
+    lambda (measured 3.4x on the sf1.0 shingle map, 1.50 s -> 0.44 s,
+    identical values)."""
     cols = docs.columns
-    staged = docs.select(*cols, F.split(F.col("text"), " ").alias("__w"))
-    wc = F.col("__w")
-    n = F.size(wc)
-    idx = F.when(n >= 3, F.sequence(F.lit(1), n - 2)).otherwise(
-        F.array().cast("array<int>")
-    )
-    shingles = F.transform(
-        idx,
-        lambda i: F.concat_ws(
-            " ",
-            F.element_at(wc, i),
-            F.element_at(wc, i + 1),
-            F.element_at(wc, i + 2),
-        ),
-    )
-    sh = staged.select(*cols, shingles.alias("__sh"))
+    staged = docs.select(*cols, split_words(F.col("text")).alias("__w"))
+    sh = staged.select(*cols, word_ngrams(F.col("__w"), 3).alias("__sh"))
     return sh.select(
         *cols,
         F.transform(F.col("__sh"), lambda s: hash_mod(s, HASH_P)).alias("hs"),
@@ -122,7 +107,7 @@ FROM documents GROUP BY 1
 # ---------------------------------------------------------------------------
 def q_minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = resplit(read_documents(spark, sf_dir)).where(
-        F.size(F.split(F.col("text"), " ")) >= 3
+        F.size(split_words(F.col("text"))) >= 3
     )
     with_h = _staged_hs(docs).select("doc_id", "hs")
     sigged = with_h.select("doc_id", *_sig_cols())
@@ -181,15 +166,15 @@ def _band_keys_col() -> F.Column:
     )
 
 
-def _pairs_fn(ids):
-    # all ordered pairs within one (sorted) bucket: element i pairs with
-    # every later element — slice is 1-based, so the tail starts at i+2
+def _bucket_pairs(arr, pair):
+    """``pair(x, y)`` for every element x of the sorted bucket array
+    ``arr`` and every later element y, flattened into one array.  slice is
+    1-based, so the tail of element i starts at i + 2."""
     return F.flatten(
         F.transform(
-            ids,
+            arr,
             lambda x, i: F.transform(
-                F.slice(ids, i + F.lit(2), F.size(ids)),
-                lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
+                F.slice(arr, i + F.lit(2), F.size(arr)), lambda y: pair(x, y)
             ),
         )
     )
@@ -207,7 +192,7 @@ def lsh_candidate_pairs(docs: DataFrame, hs_df: DataFrame | None = None) -> Data
     branch.  MinHash is invariant under duplicate elements, so distinct or
     raw shingle arrays give identical signatures."""
     if hs_df is None:
-        docs = docs.where(F.size(F.split(F.col("text"), " ")) >= 3)
+        docs = docs.where(F.size(split_words(F.col("text"))) >= 3)
         hs_df = _staged_hs(docs).select("doc_id", "hs")
     sigged = hs_df.select("doc_id", *_sig_cols())
     banded = sigged.select("doc_id", F.explode(_band_keys_col()).alias("band_key"))
@@ -215,12 +200,15 @@ def lsh_candidate_pairs(docs: DataFrame, hs_df: DataFrame | None = None) -> Data
         banded.groupBy("band_key")
         # sort_array, not array_sort: array_sort lowers to an interpreted
         # comparison lambda per element pair, sort_array is codegen'd
-        # natural ordering — identical for null-free elements (round 6)
+        # natural ordering — identical for null-free elements
         .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
         .where((F.size("ids") >= 2) & (F.size("ids") <= HOT_BAND_CAP))
     )
+    pairs = _bucket_pairs(
+        F.col("ids"), lambda x, y: F.struct(x.alias("doc_a"), y.alias("doc_b"))
+    )
     return (
-        buckets.select(F.explode(_pairs_fn(F.col("ids"))).alias("p"))
+        buckets.select(F.explode(pairs).alias("p"))
         .select(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
         .distinct()
     )
@@ -269,7 +257,7 @@ def _vote_fn(b: int):
 
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = resplit(read_documents(spark, sf_dir))
-    words = F.split(F.col("text"), " ")
+    words = split_words(F.col("text"))
     hs = F.transform(words, lambda w: hash_mod(w, HASH_P))
     with_h = docs.select("doc_id", hs.alias("hs"))
     sim = F.lit(0).cast("long")
@@ -337,34 +325,29 @@ def q_ngram_jaccard_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .where(F.size("ms") <= SHINGLE_DF_CAP)
     )
-    # NOT checkpointed although two branches consume it (round 6, measured):
-    # the static plan shows two scan subtrees, but AQE's runtime exchange
-    # reuse collapses them, while an eager localCheckpoint of the posting
-    # table paid ~10x the whole query in row-wise RDD materialization of
-    # the struct arrays.
+    # NOT checkpointed although two branches consume it: the static plan
+    # shows two scan subtrees, but AQE's runtime exchange reuse collapses
+    # them, while an eager localCheckpoint of the posting table measured
+    # ~10x the whole query in row-wise RDD materialization of the struct
+    # arrays.
     # per-doc size over the capped shingle universe
     sizes = (
         buckets.select(F.explode("ms").alias("m"))
         .groupBy(F.col("m.d").alias("doc_id"))
         .agg(F.count(F.lit(1)).alias("sz"))
     )
-    pair_arr = F.flatten(
-        F.transform(
-            F.col("ms"),
-            lambda x, i: F.filter(
-                F.transform(
-                    F.slice(F.col("ms"), i + F.lit(2), F.size(F.col("ms"))),
-                    lambda y: F.struct(
-                        x["g"].alias("lang"),
-                        x["d"].alias("da"),
-                        y["d"].alias("db"),
-                        (x["g"] == y["g"]).alias("same"),
-                    ),
-                ),
-                lambda p: p["same"],
-            ),
-        )
+    # filter the pair array, not the exploded rows: a row filter after the
+    # explode measured 1.12x slower at sf0.1
+    pairs = _bucket_pairs(
+        F.col("ms"),
+        lambda x, y: F.struct(
+            x["g"].alias("lang"),
+            x["d"].alias("da"),
+            y["d"].alias("db"),
+            (x["g"] == y["g"]).alias("same"),
+        ),
     )
+    pair_arr = F.filter(pairs, lambda p: p["same"])
     inter = (
         buckets.where(F.size("ms") >= 2)
         .select(F.explode(pair_arr).alias("p"))
@@ -429,7 +412,7 @@ JACCARD_THRESHOLD = 0.6
 
 def q_near_dedup_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = resplit(read_documents(spark, sf_dir)).where(
-        F.size(F.split(F.col("text"), " ")) >= 3
+        F.size(split_words(F.col("text"))) >= 3
     )
     # the shingle table feeds the LSH signature branch AND both
     # verification sides.  Ending it in a re-split exchange lets AQE run the
@@ -602,13 +585,12 @@ SELECT node AS doc_id, MIN(comp) AS component_id FROM reach GROUP BY node
 # no df cap is needed: per-key work is O(df), not O(df^2).
 # ---------------------------------------------------------------------------
 def q_dup_span_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # round-6 restructure: the r5 shape planned the md5 shingle DAG three
-    # times (counts branch, df branch, join branch) and ended with a
-    # doc_id join of two per-doc tables.  Carrying n_shingles THROUGH the
-    # explode (the decontaminate precedent) folds the counts branch and
-    # the final join away: two shingle passes, one narrow groupBy(h), one
-    # left join against the small df>=2 table (AQE broadcast), one
-    # map-side-combined groupBy(doc_id).  explode_outer keeps shingle-less
+    # n_shingles is carried THROUGH the explode (the decontaminate
+    # precedent), so there is no separate counts branch (a third plan of
+    # the md5 shingle DAG) and no final doc_id join of two per-doc tables:
+    # two shingle passes, one narrow groupBy(h), one left join against the
+    # small df>=2 table (AQE broadcast), one map-side-combined
+    # groupBy(doc_id).  explode_outer keeps shingle-less
     # docs as (h = null) rows, which the left join carries through with
     # df null, so count("df") gives them n_dup = 0 — same rows as before.
     docs = resplit(read_documents(spark, sf_dir))
@@ -685,10 +667,10 @@ _PARA_W = 8  # words per pseudo-paragraph segment
 def q_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = resplit(read_documents(spark, sf_dir))
     w = _PARA_W
-    # the word array is STAGED as a named column (ADVICE r5: the inline
-    # split re-ran once per segment inside the slice lambda — O(n_words x
-    # n_segs) per row; see _staged_hs for the mechanism)
-    staged = docs.select("doc_id", F.split(F.col("text"), " ").alias("__w"))
+    # the word array is STAGED as a named column: an inline split would
+    # re-run once per segment inside the slice lambda — O(n_words x
+    # n_segs) per row (see functions.word_ngrams)
+    staged = docs.select("doc_id", split_words(F.col("text")).alias("__w"))
     wc = F.col("__w")
     n_segs = F.floor((F.size(wc) + F.lit(w - 1)) / F.lit(w)).cast("int")
     segs_arr = F.transform(
@@ -715,7 +697,7 @@ def q_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("kept").cast("long")).alias("n_kept"),
         # sort_array + getField: the array_sort comparison lambda and the
         # transform projection lambda are both interpreted; these codegen'd
-        # twins are value-identical on the null-free kept list (round 6)
+        # twins are value-identical on the null-free kept list
         F.array_join(
             F.sort_array(
                 F.collect_list(
@@ -812,10 +794,9 @@ def q_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sort_array(F.array_distinct("sel")).alias("fps"),
     )
     # '-'-joined string sketch (the minhash_sig precedent above): a raw
-    # array<bigint> column cannot be sorted by the parity driver's pandas
-    # canonicalizer (CORRECTNESS_r05: "unhashable type: 'list'"), so the
-    # fingerprint set ships as one scalar string; n_fingerprints stays the
-    # scalar cardinality
+    # array<bigint> column cannot be sorted by a pandas-based parity
+    # check ("unhashable type: 'list'"), so the fingerprint set ships as
+    # one scalar string; n_fingerprints stays the scalar cardinality
     return fpd.select(
         "doc_id",
         "n_shingles",

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import split_words
 from ..oracle import CHOICE_THRESHOLD_NUM, GLYPH_CONFUSIONS
 from ..sources import read_documents, resplit
 
@@ -35,7 +36,7 @@ def _alts_col():
 
 def q_glyph_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_documents(spark, sf_dir)
-    w = F.element_at(F.split(F.col("text"), " "), 1)
+    w = F.element_at(split_words(F.col("text")), 1)
     # project to (doc_id, first word) BEFORE the re-split exchange that
     # parallelizes the rlike/explode stack below: the shuffle carries
     # ~20 B/row

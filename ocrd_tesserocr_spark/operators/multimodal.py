@@ -62,58 +62,9 @@ def decode_image_stub(payload: bytes) -> bytes:
 
     Real deployment: ``PIL.Image.open(io.BytesIO(payload)).resize(...)``;
     the cluster-side contract (bytes in -> small bytes out, inside an
-    Arrow batch) is identical.  Stays the MEDIA_DECODERS default even
-    when Pillow exists, because the media_meta oracle pins these bytes.
+    Arrow batch) is identical.  The media_meta oracle pins these bytes.
     """
     return hashlib.sha256(payload).digest()[:16]
-
-
-# the container limitation is PROBED, not assumed (VERDICT r4 polish
-# item): when a deployment image bakes in Pillow, decode_image_real
-# becomes usable and production_decoders() picks it up automatically
-try:
-    from PIL import Image as _PILImage  # noqa: N813
-
-    HAVE_PILLOW = True
-except ImportError:
-    _PILImage = None
-    HAVE_PILLOW = False
-
-
-def decode_image_real(payload: bytes, size: tuple = (32, 32)) -> bytes:
-    """Real decode + thumbnail via Pillow (the deployment swap for
-    :func:`decode_image_stub`): raw RGB bytes of a ``size`` resize.
-    Raises ImportError where the container lacks Pillow — callers choose
-    via :data:`HAVE_PILLOW` / :func:`production_decoders`."""
-    if not HAVE_PILLOW:
-        raise ImportError(
-            "Pillow not available in this container; use "
-            "decode_image_stub (the oracle-parity default)"
-        )
-    import io as _io
-
-    return _PILImage.open(_io.BytesIO(payload)).convert("RGB").resize(
-        size
-    ).tobytes()
-
-
-def production_decoders() -> dict:
-    """MEDIA_DECODERS for deployment: real Pillow decode for raster
-    images when available, stub fallback otherwise; text/html keeps the
-    stub always (its 'thumbnail' is a render stand-in, not a decode)."""
-    img = decode_image_real if HAVE_PILLOW else decode_image_stub
-    return {
-        "image/png": img,
-        "image/jpeg": img,
-        "text/html": decode_image_stub,
-    }
-
-
-def decode_audio_stub(payload: bytes) -> bytes:
-    raise NotImplementedError(
-        "audio decode requires ffmpeg/librosa (not in this container); "
-        "plumbing is exercised with decode_image_stub"
-    )
 
 
 MEDIA_DECODERS = {

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions import split_words
 from ..sources import read_table
 
 
@@ -29,7 +30,7 @@ def q_agg_concat_reading_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sort_array (codegen'd natural struct ordering) instead of array_sort,
     # whose generated comparison lambda is interpreted per element pair;
     # .getField drops the transform lambda too.  Identical ordering/values
-    # (verified row-for-row), 1.46x on the sf1.0 replica (round 6).
+    # (verified row-for-row), 1.46x faster on the sf1.0 replica.
     ordered = F.sort_array(
         F.collect_list(F.struct(F.col("l_linenumber").alias("i"), token.alias("t")))
     )
@@ -180,7 +181,7 @@ WHERE LEAST(l_partkey % 100 + l_linenumber * 7, l_suppkey % 60 + 50)
 # ---------------------------------------------------------------------------
 def q_filter_degenerate(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_table(spark, sf_dir, "documents")
-    n_tokens = F.size(F.split(F.col("text"), " "))
+    n_tokens = F.size(split_words(F.col("text")))
     return (
         docs.select("doc_id", "n_chars", n_tokens.alias("n_tokens"))
         .where((F.col("n_chars") >= 16) & (n_tokens >= 5))
@@ -526,7 +527,7 @@ FROM documents
 # ---------------------------------------------------------------------------
 def q_direction_reverse(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_table(spark, sf_dir, "documents")
-    words = F.slice(F.split(F.col("text"), " "), 1, 6)
+    words = F.slice(split_words(F.col("text")), 1, 6)
     ordered = F.when(F.col("lang").isin("ar", "he"), F.reverse(words)).otherwise(words)
     return docs.select(
         "doc_id", "lang", F.array_join(ordered, " ").alias("head_text")

@@ -11,7 +11,7 @@ product over whole-array-cast doubles — no Python in the hot path).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources import read_table, resplit
@@ -22,15 +22,25 @@ BUCKET_DIMS = 4  # sign bits of the first 4 dims -> 16 buckets
 
 
 def _dot(a, b):
-    # whole-array cast BEFORE the fold (round 6): one codegen'd Cast per
-    # array instead of an interpreted x.cast lambda dispatch per element —
-    # the per-element casts were half the fold's cost (measured 2.0x on
-    # the sf1.0 cosine_topk pair loop; values bit-identical, same
-    # left-to-right summation order)
+    # whole-array cast BEFORE the fold: one codegen'd Cast per array
+    # instead of an interpreted x.cast lambda dispatch per element, which
+    # measured half the fold's cost (2.0x on the sf1.0 cosine_topk pair
+    # loop; values bit-identical, same left-to-right summation order)
     return F.aggregate(
         F.zip_with(a.cast("array<double>"), b.cast("array<double>"), lambda x, y: x * y),
         F.lit(0.0),
         lambda acc, v: acc + v,
+    )
+
+
+def _top_k(scored: DataFrame) -> DataFrame:
+    """(query_id, neighbor_id, sim) -> the TOP_K best neighbors per query,
+    ranked by sim, ties broken by the lower neighbor_id."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rnk", F.row_number().over(w))
+        .where(F.col("rnk") <= TOP_K)
+        .select("query_id", "neighbor_id", "rnk", "sim")
     )
 
 
@@ -49,8 +59,6 @@ def _norm(a):
 # SIM1 — brute-force cosine top-k (baseline)
 # ---------------------------------------------------------------------------
 def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     # norms materialize in projections BELOW the join: O(n) norm folds,
     # not O(n*q) — the interpreted higher-order fold is the expensive part
     emb = resplit(read_table(spark, sf_dir, "embeddings")).select(
@@ -69,12 +77,7 @@ def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("neighbor_id"),
         F.round(cos, 4).alias("sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= TOP_K)
-        .select("query_id", "neighbor_id", "rnk", "sim")
-    )
+    return _top_k(scored)
 
 
 _SQL_COS = """
@@ -111,8 +114,6 @@ def _bucket(col, dims: int = BUCKET_DIMS) -> F.Column:
 
 
 def q_ann_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     emb = resplit(read_table(spark, sf_dir, "embeddings")).select(
         "vec_id",
         "embedding",
@@ -132,12 +133,7 @@ def q_ann_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = joined.select(
         "query_id", F.col("vec_id").alias("neighbor_id"), F.round(cos, 4).alias("sim")
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= TOP_K)
-        .select("query_id", "neighbor_id", "rnk", "sim")
-    )
+    return _top_k(scored)
 
 
 _SQL_BUCKET = " || ".join(
@@ -199,8 +195,6 @@ def embedding_near_dup(
     capped sides are identical subplans — AQE reuses the shuffle stage at
     runtime; at 100 TB, persist the capped table first if scanning the
     embeddings twice matters."""
-    from pyspark.sql import Window
-
     b = emb.select(
         "vec_id",
         "embedding",
@@ -276,8 +270,6 @@ KMEANS_ITERS = 2
 def _kmeans_centroids(emb: DataFrame) -> DataFrame:
     """emb(vec_id, embedding) -> (centroid_id, cv array<double>): the
     deterministic sampled Lloyd fit described above."""
-    from pyspark.sql import Window
-
     sample = emb.where(F.col("vec_id") < KMEANS_SAMPLE).select(
         "vec_id", "embedding"
     )
@@ -315,7 +307,7 @@ def _kmeans_centroids(emb: DataFrame) -> DataFrame:
             .agg(
                 # sort_array + getField: codegen'd twins of the interpreted
                 # array_sort/transform lambdas, identical on null-free
-                # struct lists (round 6)
+                # struct lists
                 F.sort_array(F.collect_list(F.struct("pos", "m")))
                 .getField("m")
                 .alias("mv")
@@ -329,8 +321,6 @@ def _kmeans_centroids(emb: DataFrame) -> DataFrame:
 
 
 def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     emb = resplit(read_table(spark, sf_dir, "embeddings")).select(
         "vec_id", "embedding", _norm(F.col("embedding")).alias("nrm")
     )
@@ -369,12 +359,7 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = joined.select(
         "query_id", F.col("vec_id").alias("neighbor_id"), F.round(cos, 4).alias("sim")
     ).distinct()  # a neighbor can surface via multiple probed cells
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= TOP_K)
-        .select("query_id", "neighbor_id", "rnk", "sim")
-    )
+    return _top_k(scored)
 
 
 _SQL_CCOS = """

@@ -11,14 +11,39 @@ whole-stage codegen); exact DuckDB parity via shared md5-derived hashing
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions import POLY_P, hash_mod, sql_md5_mod
+from ..functions import (
+    POLY_P,
+    hash_long,
+    hash_mod,
+    ngram_starts,
+    split_words,
+    sql_md5_mod,
+    word_ngrams,
+)
 from ..sources import read_documents, resplit
 
 
 _STOPWORDS = ("the", "a", "of", "and", "to")
+
+
+def _stop_ratio(words):
+    """Share of ``words`` that are stopwords (an empty array counts as one
+    word)."""
+    n = F.greatest(F.size(words), F.lit(1))
+    return F.size(F.filter(words, lambda w: w.isin(*_STOPWORDS))) / n
+
+
+def _quality(words):
+    """Blended quality score over the row's ``n_chars`` and ``words``:
+    0.4 length (saturating at 400 chars) + 0.3 stopword ratio + 0.3 share
+    of words longer than two characters."""
+    n = F.greatest(F.size(words), F.lit(1))
+    len_score = F.least(F.lit(1.0), F.col("n_chars") / F.lit(400.0))
+    short_ratio = F.size(F.filter(words, lambda w: F.length(w) <= 2)) / n
+    return 0.4 * len_score + 0.3 * _stop_ratio(words) + 0.3 * (1.0 - short_ratio)
 
 
 # ---------------------------------------------------------------------------
@@ -26,10 +51,9 @@ _STOPWORDS = ("the", "a", "of", "and", "to")
 # ---------------------------------------------------------------------------
 def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_documents(spark, sf_dir)
-    words = F.split(F.col("text"), " ")
+    words = split_words(F.col("text"))
     n = F.size(words)
-    stop = F.size(F.filter(words, lambda w: w.isin(*_STOPWORDS)))
-    ratio = stop / F.greatest(n, F.lit(1))
+    ratio = _stop_ratio(words)
     guessed = F.when(ratio >= 0.08, F.lit("en")).otherwise(F.lit("und"))
     # confidence gate (deskew.py:135-143): low-evidence docs keep their
     # declared lang
@@ -59,19 +83,12 @@ FROM w
 # T2 — quality scoring (length / stopword / alpha ratios)
 # ---------------------------------------------------------------------------
 def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # staged word array + re-split scan (round 6): the inline form
-    # re-ran the split once per referencing expression on a 1-task scan
+    # staged word array over a re-split scan: inline, the split would run
+    # once per referencing expression, on the scan's one or two tasks
     staged = resplit(read_documents(spark, sf_dir)).select(
-        "doc_id", "n_chars", F.split(F.col("text"), " ").alias("__w")
+        "doc_id", "n_chars", split_words(F.col("text")).alias("__w")
     )
-    words = F.col("__w")
-    n = F.greatest(F.size(words), F.lit(1))
-    stop_ratio = F.size(F.filter(words, lambda w: w.isin(*_STOPWORDS))) / n
-    len_score = F.least(F.lit(1.0), F.col("n_chars") / F.lit(400.0))
-    short_ratio = F.size(F.filter(words, lambda w: F.length(w) <= 2)) / n
-    score = F.round(
-        0.4 * len_score + 0.3 * stop_ratio + 0.3 * (1.0 - short_ratio), 6
-    )
+    score = F.round(_quality(F.col("__w")), 6)
     return staged.select("doc_id", score.alias("quality"))
 
 
@@ -97,7 +114,7 @@ FROM r
 # ---------------------------------------------------------------------------
 def q_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_documents(spark, sf_dir)
-    ws = F.size(F.split(F.col("text"), " "))
+    ws = F.size(split_words(F.col("text")))
     bpe = F.size(F.regexp_extract_all(F.col("text"), F.lit(r"[a-z]{1,4}"), 0))
     return docs.select("doc_id", ws.alias("ws_tokens"), bpe.alias("bpe_tokens"))
 
@@ -116,7 +133,7 @@ FROM documents
 # ---------------------------------------------------------------------------
 def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = resplit(read_documents(spark, sf_dir))
-    words = F.split(F.col("text"), " ")
+    words = split_words(F.col("text"))
     hashes = F.transform(words, lambda w: hash_mod(w, POLY_P))
     fp = F.aggregate(
         hashes,
@@ -145,20 +162,8 @@ FROM w
 # pipeline runs after extraction.
 # ---------------------------------------------------------------------------
 def q_curation_verdict(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    from ..functions import hash_long
-
     docs = read_documents(spark, sf_dir)
-    words = F.split(F.col("text"), " ")
-    n = F.greatest(F.size(words), F.lit(1))
-    stop_ratio = F.size(F.filter(words, lambda w: w.isin(*_STOPWORDS))) / n
-    short_ratio = F.size(F.filter(words, lambda w: F.length(w) <= 2)) / n
-    quality = (
-        0.4 * F.least(F.lit(1.0), F.col("n_chars") / F.lit(400.0))
-        + 0.3 * stop_ratio
-        + 0.3 * (1.0 - short_ratio)
-    )
+    quality = _quality(split_words(F.col("text")))
     w = Window.partitionBy(hash_long(F.col("text"))).orderBy("doc_id")
     keeper = F.row_number().over(w) == 1
     keep = keeper & (quality >= 0.5) & (F.col("n_chars") >= 50)
@@ -349,43 +354,17 @@ FROM c
 # run of its sorted form.  Strict `>` on the run length keeps the FIRST
 # maximal run, which in a sorted array is the lexicographically smallest
 # gram, reproducing the oracle's `ORDER BY cnt DESC, bg ASC` tie-break.
-# v1 exploded every bigram into a corpus-wide groupBy+window — a shuffle
-# of O(total words) rows that was the suite's heaviest stage; this shape
-# is a narrow projection over the scan.  The one exchange below carries
-# only (doc_id, text) to re-split the scan for the CPU-heavy fold
-# (sources.resplit).
+# Exploding every bigram into a corpus-wide groupBy+window would shuffle
+# O(total words) rows; this shape is a narrow projection over the scan.
+# The one exchange below carries only (doc_id, text) to re-split the scan
+# for the CPU-heavy fold (sources.resplit).
 # ---------------------------------------------------------------------------
 def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = resplit(read_documents(spark, sf_dir).select("doc_id", "text"))
-    # word array staged as a named column: inline, the text would be
-    # re-split per element reference inside the bigram/trigram lambdas —
-    # see dedup._staged_hs for the mechanism and measurement
-    docs = docs.select(
-        "doc_id", "text", F.split(F.col("text"), " ").alias("__w")
-    )
-    words = F.col("__w")
-    n = F.size(words)
-    bigrams = F.when(
-        n >= 2,
-        F.transform(
-            F.sequence(F.lit(1), n - 1),
-            lambda i: F.concat_ws(
-                " ", F.element_at(words, i), F.element_at(words, i + 1)
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    trigrams = F.when(
-        n >= 3,
-        F.transform(
-            F.sequence(F.lit(1), n - 2),
-            lambda i: F.concat_ws(
-                " ",
-                F.element_at(words, i),
-                F.element_at(words, i + 1),
-                F.element_at(words, i + 2),
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    # word array staged as a named column (see functions.word_ngrams)
+    docs = docs.select("doc_id", "text", split_words(F.col("text")).alias("__w"))
+    bigrams = word_ngrams(F.col("__w"), 2)
+    trigrams = word_ngrams(F.col("__w"), 3)
 
     # longest-run fold over the sorted bigram array: acc = (prev gram,
     # current run length, best count, best gram).  `x == acc.prev` is null
@@ -516,22 +495,10 @@ _DECON_EVAL_MOD = 50  # doc_id % 50 == 0 -> the stand-in benchmark set
 
 
 def _staged_decon_shingles(df: DataFrame) -> DataFrame:
-    """(doc_id, text) -> (doc_id, ds): distinct word 8-grams, with the
-    word array staged as a named column — the inline form re-split the
-    text once per element reference (8 element_at per shingle; see
-    dedup._staged_hs for the mechanism and measurement)."""
-    staged = df.select("doc_id", F.split(F.col("text"), " ").alias("__w"))
-    wc = F.col("__w")
-    n = F.size(wc)
-    shingles = F.when(
-        n >= _DECON_K,
-        F.transform(
-            F.sequence(F.lit(1), n - (_DECON_K - 1)),
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(wc, i + j) for j in range(_DECON_K)]
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    """(doc_id, text) -> (doc_id, ds): distinct word 8-grams over a staged
+    word array (see functions.word_ngrams)."""
+    staged = df.select("doc_id", split_words(F.col("text")).alias("__w"))
+    shingles = word_ngrams(F.col("__w"), _DECON_K)
     return staged.select("doc_id", F.array_distinct(shingles).alias("ds"))
 
 
@@ -619,27 +586,22 @@ _LM_MIN_COUNT = 5  # vocab support threshold (replaces a global top-V sort)
 
 
 def _lm_tri_idx(s):
-    """Index array for the explode-then-substr trigram form (round 6):
-    exploding the position sequence and slicing with a codegen'd substr
-    beats exploding the higher-order trigram array, whose lambda is
-    interpreted per element (measured 1.2-1.3x on the sf1.0 fit pass;
-    identical rows — explode/explode_outer of the empty index array
-    behaves exactly like the empty trigram array, and a null index from
-    explode_outer yields a null trigram just like before)."""
-    n = F.length(s)
-    return F.when(n >= 3, F.sequence(F.lit(1), n - 2)).otherwise(
-        F.array().cast("array<int>")
-    )
+    """Start positions of the character trigrams of ``s``.  Exploding the
+    positions and slicing with a codegen'd substr beats exploding a
+    higher-order trigram array, whose lambda is interpreted per element
+    (measured 1.2-1.3x on the sf1.0 fit pass); explode/explode_outer of
+    the empty position array behaves like an empty trigram array, and a
+    null position from explode_outer yields a null trigram."""
+    return ngram_starts(F.length(s), 3)
 
 
 def q_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # round-6 restructure, two changes (guide sections 2.3/2.4 + 1.2):
-    # (a) the capped text is projected BEFORE a re-split exchange — the r5
-    #     bare scan ran the whole trigram explode at the single-row-group
-    #     parquet's 1-2 task parallelism (the suite's slowest query);
+    # (a) the capped text is projected BEFORE a re-split exchange: a bare
+    #     scan runs the whole trigram explode at the single-row-group
+    #     parquet's 1-2 task parallelism;
     # (b) the tertile-cutoff sample is scored on its OWN 10%-slice
-    #     pipeline instead of filtering the corpus-wide `scored` — the r5
-    #     plan evaluated the full explode->join->agg DAG TWICE (once under
+    #     pipeline instead of filtering the corpus-wide `scored`, which
+    #     would evaluate the full explode->join->agg DAG twice (once under
     #     the cutoff branch, once under the final projection).  Scoring is
     #     per-doc deterministic, so slice-scoring gives identical cutoffs.
     base = read_documents(spark, sf_dir).select(
@@ -707,8 +669,6 @@ def q_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     # broadcast as two scalars.  Ordering on the ROUNDED score with a
     # doc_id tie-break is deterministic across engines — no float-rank
     # ambiguity.  The corpus-wide bucket assignment is a narrow map.
-    from pyspark.sql import Window
-
     sample = (
         _score(fit)
         .where(F.col("n_trigrams") > 0)
@@ -834,8 +794,6 @@ def q_mix_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     ops, so no pow/sum-order divergence risk (similarity.py k-means
     note).
     """
-    from pyspark.sql import Window
-
     docs = read_documents(spark, sf_dir)
     counts = docs.groupBy("lang").agg(F.count(F.lit(1)).alias("n_docs_lang"))
     # unpartitioned window is safe HERE ONLY: it runs on the post-agg
@@ -908,10 +866,8 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-level analogue assembles fixed-length training sequences
     from ordered documents.
     """
-    from pyspark.sql import Window
-
     docs = read_documents(spark, sf_dir)
-    tokens = F.size(F.split(F.col("text"), " ")).cast("long")
+    tokens = F.size(split_words(F.col("text"))).cast("long")
     bucket = hash_mod(
         F.concat(F.lit("pack|"), F.col("doc_id").cast("string")), _PACK_BUCKETS
     )
@@ -990,12 +946,12 @@ _GOPHER_MIN_STOPWORDS = 2
 
 
 def q_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # round-6 staging: the r5 single-projection form referenced the split
-    # ~10x (each rule re-ran it) and the char-sum fold 3x, all on a
-    # 1-task scan; the word array and each heavy per-row reduction are
-    # now named columns computed once, over a re-split scan
+    # the word array and each heavy per-row reduction are named columns
+    # computed once, over a re-split scan: in one projection every rule
+    # would re-run the split (~10x) and the char-sum fold (3x), on the
+    # scan's one task
     staged = resplit(read_documents(spark, sf_dir)).select(
-        "doc_id", F.split(F.col("text"), " ").alias("__w")
+        "doc_id", split_words(F.col("text")).alias("__w")
     )
     words = F.col("__w")
     counted = staged.select(
@@ -1100,15 +1056,14 @@ def q_char_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         n >= 1, F.sort_array(F.split(text, ""))
     ).otherwise(F.array().cast("array<string>"))
     n_safe = F.greatest(n, F.lit(1).cast("long"))
-    # round-6 rewrite of the entropy fold: equal-run extraction moves from
-    # an interpreted per-CHAR lambda (4-field struct built per char) to ONE
-    # Java-regex pass — '(?s)(.)\1*' greedily matches each maximal run of
-    # one codepoint in the sorted-char string, so the run array IS the
-    # run-length encoding.  The per-run aggregate then touches d elements
-    # (distinct chars), not n (chars).  Float parity is preserved exactly:
-    # terms len*ln(len) are added in the same ascending-char order with the
-    # same F.log, and a length-1 run contributes the same +0.0 the old fold
-    # added when a run closed.  Measured ~8x on the sf1.0 corpus.
+    # equal-run extraction is ONE Java-regex pass, not an interpreted
+    # per-CHAR lambda (a 4-field struct built per char): '(?s)(.)\1*'
+    # greedily matches each maximal run of one codepoint in the sorted-char
+    # string, so the run array IS the run-length encoding, and the per-run
+    # aggregate touches d elements (distinct chars), not n (chars).  Terms
+    # len*ln(len) are added in ascending-char order, the DuckDB twin's
+    # order, and a length-1 run contributes +0.0.  Measured ~8x faster
+    # than the per-char fold on the sf1.0 corpus.
     base = docs.select(
         "doc_id",
         n.alias("n"),

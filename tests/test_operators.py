@@ -102,6 +102,53 @@ def test_minhash_identical_for_exact_dup(spark, planted):
 
 
 # ---------------------------------------------------------------------------
+# shared word, k-gram and in-bucket pair builders
+# ---------------------------------------------------------------------------
+def test_word_ngram_and_pair_helpers_match_python(spark):
+    """split_words/word_ngrams against Python's ' '-split k-grams (double,
+    leading and trailing spaces, the empty text, n < k), ngram_starts
+    against the trigram start positions, and dedup._bucket_pairs against
+    itertools.combinations on sorted id arrays of sizes 0-6."""
+    import itertools
+    import random
+
+    from ocrd_tesserocr_spark.functions import ngram_starts, split_words, word_ngrams
+    from ocrd_tesserocr_spark.operators.dedup import _bucket_pairs
+
+    ks = (1, 2, 3, 8)
+    rng = random.Random(7)
+    data = [
+        (
+            " ".join(rng.choice(("a", "bb", "ccc", "")) for _ in range(rng.randint(0, 12))),
+            sorted(rng.sample(range(100), i % 7)),
+        )
+        for i in range(2000)
+    ]
+    df = spark.createDataFrame(data, "text string, ids array<int>")
+    rows = df.select(
+        "text",
+        "ids",
+        *[word_ngrams(split_words(F.col("text")), k).alias(f"g{k}") for k in ks],
+        ngram_starts(F.length("text"), 3).alias("starts"),
+        _bucket_pairs(
+            F.col("ids"), lambda x, y: F.struct(x.alias("a"), y.alias("b"))
+        ).alias("pairs"),
+    ).collect()
+    assert len(rows) == len(data)
+    assert {len(t.split(" ")) for t, _ in data} >= set(range(1, 10))
+    assert "" in {t for t, _ in data}
+    for r in rows:
+        ws = r["text"].split(" ")
+        for k in ks:
+            expect = [" ".join(ws[i:i + k]) for i in range(len(ws) - k + 1)]
+            assert r[f"g{k}"] == expect, (r["text"], k)
+        assert r["starts"] == list(range(1, len(r["text"]) - 1)), r["text"]
+        assert [tuple(p) for p in r["pairs"]] == list(
+            itertools.combinations(r["ids"], 2)
+        ), r["ids"]
+
+
+# ---------------------------------------------------------------------------
 # similarity sanity: self-bucket recall, deterministic ranks
 # ---------------------------------------------------------------------------
 def test_cosine_topk_shape(spark):
@@ -158,8 +205,14 @@ def test_ann_bucketed_structure(spark):
 # multimodal plumbing
 # ---------------------------------------------------------------------------
 def test_media_meta(spark, pages_small):
-    from ocrd_tesserocr_spark.operators.multimodal import media_meta
+    from ocrd_tesserocr_spark.operators.multimodal import (
+        MEDIA_DECODERS,
+        decode_image_stub,
+        media_meta,
+    )
 
+    # the media_meta oracle pins the stub's bytes for every decodable kind
+    assert all(dec is decode_image_stub for dec in MEDIA_DECODERS.values())
     rows = media_meta(pages_small.limit(30)).collect()
     assert len(rows) == 30
     for r in rows:
@@ -167,42 +220,6 @@ def test_media_meta(spark, pages_small):
         assert r["media_kind"] in ("text/html", "application/octet-stream")
         if r["sniff_ok"]:
             assert r["thumb"] is not None and len(r["thumb"]) == 16
-
-
-def test_audio_stub_raises():
-    from ocrd_tesserocr_spark.operators.multimodal import decode_audio_stub
-
-    with pytest.raises(NotImplementedError):
-        decode_audio_stub(b"RIFF1234")
-
-
-def test_image_decode_probes_pillow_not_assumes():
-    """The container limitation is probed at import: HAVE_PILLOW reflects
-    actual importability, decode_image_real works or raises accordingly,
-    and production_decoders() degrades to the stub — while the
-    oracle-parity MEDIA_DECODERS default stays the stub either way."""
-    import importlib.util
-
-    from ocrd_tesserocr_spark.operators import multimodal as mm
-
-    assert mm.HAVE_PILLOW == (importlib.util.find_spec("PIL") is not None)
-    prod = mm.production_decoders()
-    assert prod["text/html"] is mm.decode_image_stub
-    if mm.HAVE_PILLOW:
-        import io
-
-        from PIL import Image
-
-        buf = io.BytesIO()
-        Image.new("RGB", (64, 64), (1, 2, 3)).save(buf, format="PNG")
-        out = mm.decode_image_real(buf.getvalue())
-        assert len(out) == 32 * 32 * 3
-        assert prod["image/png"] is mm.decode_image_real
-    else:
-        with pytest.raises(ImportError):
-            mm.decode_image_real(b"\x89PNG\r\n\x1a\n")
-        assert prod["image/png"] is mm.decode_image_stub
-    assert mm.MEDIA_DECODERS["image/png"] is mm.decode_image_stub
 
 
 def test_frame_sample_fanout(spark, pages_small):

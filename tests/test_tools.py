@@ -1,6 +1,6 @@
 """tools/logical_lines.py: what counts as a logical line, and the
 ``--base`` comparison against a git revision; tools/kernel_digest.py's
-seeded soup corpus (no Spark)."""
+seeded soup corpus; tools/query_digest.py's plan masking (no Spark)."""
 
 from __future__ import annotations
 
@@ -62,3 +62,28 @@ def test_soup_corpus_is_seeded_and_covers_the_rare_tokenizer_paths():
                   "data-line-order", "<!-- c -->", "<!-- open",
                   "<![CDATA[ d ]]>", "<![CDATA[ open", "&amp;", "&#1488;"):
         assert any(shape in h for h in htmls), shape
+
+
+def test_query_digest_masks_ids_that_change_between_builds():
+    from query_digest import mask_plan
+
+    def plan(e, p, v):
+        return (
+            f"Project [transform(__w#{e}, lambdafunction(element_at(__w#{e}, "
+            f"(lambda x_{v}#{e + 1} + 1), None, true), lambda x_{v}#{e + 1}, "
+            f"false)) AS __sh#{e + 2}L, s_a#{e + 3}, "
+            f"count(if (NOT _common_expr_{v}#{e + 4}) null else 1)]\n"
+            f"+- 'UnresolvedAttribute [doc_id], plan_id={p}"
+        )
+
+    first, second = plan(12, 3, 7), plan(4051, 98, 311)
+    assert first != second
+    assert mask_plan(first) == mask_plan(second)
+    assert mask_plan(first) == (
+        "Project [transform(__w#, lambdafunction(element_at(__w#, "
+        "(lambda x_# + 1), None, true), lambda x_#, false)) AS __sh#, s_a#, "
+        "count(if (NOT _common_expr_#) null else 1)]\n"
+        "+- 'UnresolvedAttribute [doc_id], plan_id="
+    )
+    # a different plan keeps a different digest input
+    assert mask_plan(first) != mask_plan(first.replace("+ 1", "+ 2"))
