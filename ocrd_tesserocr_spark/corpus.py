@@ -431,3 +431,86 @@ def hostile_pages() -> list:
         {"url": "hostile://empty", "html": b""},
     ]
     return sorted(recs, key=lambda r: r["url"])
+
+
+#: hostile page families as html(n units), each linear to parse; the
+#: complexity guard times n against 4n units
+HOSTILE_FAMILIES = {
+    "style_soup": lambda n: "<p>" + " ".join("<b>w%d</b>" % i for i in range(n)) + "</p>",
+    "unclosed_b": lambda n: "<p>" + "".join("<b>w%d word " % i for i in range(n)),
+    "open_comment": lambda n: "<p>" + "".join("<!-- c%d> w%d " % (i, i) for i in range(n)),
+    "open_cdata": lambda n: "<p>" + "".join("<![CDATA[ c%d> w%d " % (i, i) for i in range(n)),
+    "unclosed_p": lambda n: "".join("<p>w%d word " % i for i in range(n)),
+    "stray_closers": lambda n: "<p>" + "".join("</b></i></p></div>w%d " % i for i in range(n)),
+    "nested_divs": lambda n: "".join("<div>w%d " % i for i in range(n)) + "</div>" * n,
+    "link_soup": lambda n: "<p>" + " ".join("<a href=x%d>w%d</a>" % (i, i) for i in range(n)) + "</p>",
+    "open_script": lambda n: "".join("<p>w%d word</p>" % i for i in range(n // 2))
+    + "<script>" + "".join("<p>s%d</p>" % i for i in range(n // 2)),
+}
+
+SOUP_DOCS = 5000
+SOUP_SEED = 13
+
+#: tag names of the soup: block, style, link, boilerplate, void, skip and
+#: plain tags, and names that only match under re.I's case folding
+#: (U+017F long s, U+0130/U+0131 dotted/dotless i, U+212A Kelvin sign)
+_SOUP_TAGS = (
+    "p", "div", "li", "h1", "h2", "td", "th", "pre", "blockquote", "dd",
+    "b", "i", "code", "a", "nav", "header", "footer", "aside", "span", "br",
+    "hr", "img", "script", "dt", "h3", "table", "tr", "em",
+    "section", "figcaption", "caption",
+    "SCRIPT", "Style", "title", "\u017fcript", "scr\u0130pt", "scr\u0131pt",
+    "\u017ftyle", "bloc\u212aquote", "\u0130", "B", "P",
+)
+_SOUP_ATTRS = (
+    ' dir="rtl"', " dir=ltr", ' data-join="1"', " data-line-order=btt",
+    " data-line-order='bottom-to-top'", ' href="x"', " DIR='RTL'",
+    " dir=rtl", " dir='LTR'", ' dir="&#114;tl"', " data-join",
+    ' data-line-order="BTT"', " data-direction=x", ' dir = "rtl"', ' dir="rtl',
+    " dir=\u00a0rtl", " x-dir=rtl", " data-line-order=Bottom-To-Top",
+)
+_SOUP_WORDS = (
+    "alpha", "beta", "gamma", "delta", "0o1lI", "x", "אב",
+    "&amp;", "&lt;b&gt;", "&#1488;", "&nbsp;", "a&b", " ", "\n", "  \t ",
+    "&amp", "a & b", "&copy", "&#65", "&#x5d0;", "\x00", "\ufffd", "\r\n",
+    "\u00e9t\u00e9", "中文", "\U0001f600", "a\u00a0b", "\u2003", "\x85", "\x1c",
+)
+_SOUP_MARKUP = (
+    "<!-- c -->", "<!-- open", "<![CDATA[ d ]]>", "<![CDATA[ open",
+    "<!DOCTYPE html>", "<?bogus?>", "</ p>", "<>", "<!DocType html>",
+    "</\u2003p>", "</\u2003\u017fcript>", "<![cdata[ e ]]>", "< p>", "</>",
+)
+
+
+def _soup_token(rng: random.Random) -> str:
+    r = rng.random()
+    if r < 0.45:
+        tag = rng.choice(_SOUP_TAGS)
+        if rng.random() < 0.5:
+            attrs = "".join(
+                rng.choice(_SOUP_ATTRS) for _ in range(rng.randint(0, 2))
+            )
+            return "<%s%s%s>" % (tag, attrs, "/" if rng.random() < 0.25 else "")
+        return "</%s>" % tag
+    if r < 0.9:
+        return " ".join(rng.choice(_SOUP_WORDS) for _ in range(rng.randint(1, 4)))
+    return rng.choice(_SOUP_MARKUP)
+
+
+def soup_pages(n: int = SOUP_DOCS, seed: int = SOUP_SEED) -> list:
+    """``n`` seeded tag-soup pages as (url, html) records, in url order:
+    self-closed tags with and without ``dir=``, quoted and unquoted
+    ``data-join``/``data-line-order``, open and closed comments/CDATA,
+    entities with and without ``;``, case-folded tag names and closers,
+    NUL, U+FFFD, CRLF and 2- to 4-byte UTF-8, to reach the tokenizer's
+    rarer paths."""
+    rng = random.Random(seed)
+    return [
+        {
+            "url": "soup://%06d" % i,
+            "html": "".join(
+                _soup_token(rng) for _ in range(rng.randint(1, 40))
+            ).encode("utf-8"),
+        }
+        for i in range(n)
+    ]

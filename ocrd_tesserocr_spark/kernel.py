@@ -20,12 +20,32 @@ cyclic GC to rescan.
 ``oracle.extract_document`` stays the reference: the kernel's batch
 equals ``pa.array`` over its dicts (tests/test_kernel_parity.py).
 
+The prefix (UTF-8 decode -> ``_parse_blocks`` -> ``_assemble_block`` ->
+empty-block filter) has two paths with one output.  On first import this
+module compiles ``_cprefix.c`` with gcc against the interpreter's
+``Python.h`` into ``_build/`` next to it (named by the source's sha256 and
+``EXT_SUFFIX``, written through a temp file and an atomic rename, so
+workers starting at once never load a half-written file) and walks with
+its ``assembled_blocks``, which returns exactly the tuples
+``oracle._assembled_blocks`` returns.  Without gcc or the headers, or
+when the build fails, the walk uses ``oracle._assembled_blocks`` itself.
+``PREFIX_IMPL`` names the path in use (``"c"`` or ``"python"``).
+``oracle.py`` stays pure Python, so the kernel-vs-oracle tests check the
+compiled prefix too.
+
 Model-load amortization (recognize.py:143,200-203 does one InitFull reused
 across pages) maps to module-level state reused across batches by the
 long-lived Python worker processes Spark keeps per executor.
 """
 
 from __future__ import annotations
+
+import hashlib
+import os
+import subprocess
+import sys
+import sysconfig
+from html import unescape
 
 import numpy as np
 import pyarrow as pa
@@ -45,6 +65,80 @@ from .oracle import (
     resolve_params,
     word_conf,
 )
+
+_CPREFIX_SRC = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_cprefix.c")
+_BUILD_DIR = os.path.join(os.path.dirname(_CPREFIX_SRC), "_build")
+
+
+def load_prefix(src: str = _CPREFIX_SRC, build_dir: str = _BUILD_DIR, cc: str = "gcc"):
+    """(prefix function, ``"c"`` or ``"python"``): the compiled prefix,
+    built from ``src`` into ``build_dir`` unless a build of the same source
+    is there, or ``oracle._assembled_blocks`` when reading, compiling or
+    loading fails."""
+    import importlib.util
+
+    try:
+        with open(src, "rb") as f:
+            code = f.read()
+        so = os.path.join(build_dir, "_cprefix-%s%s" % (
+            hashlib.sha256(code).hexdigest()[:16], sysconfig.get_config_var("EXT_SUFFIX")))
+        if not os.path.exists(so):
+            os.makedirs(build_dir, exist_ok=True)
+            tmp = "%s.%d.tmp" % (so, os.getpid())
+            try:
+                subprocess.run(
+                    [cc, "-O2", "-shared", "-fPIC", "-I", sysconfig.get_paths()["include"],
+                     "-x", "c", "-", "-o", tmp],
+                    input=code, capture_output=True, check=True, timeout=300,
+                )
+                os.replace(tmp, so)
+            finally:
+                if os.path.exists(tmp):
+                    os.remove(tmp)
+        spec = importlib.util.spec_from_file_location(__package__ + "._cprefix", so)
+        mod = importlib.util.module_from_spec(spec)
+        spec.loader.exec_module(mod)
+        mod.setup(unescape, _assembled_blocks)
+        return mod.assembled_blocks, "c"
+    except (OSError, subprocess.SubprocessError, ImportError):
+        return _assembled_blocks, "python"
+
+
+_prefix, PREFIX_IMPL = load_prefix()
+
+
+def _reuse_zip_directories() -> None:
+    """Make ``zipimporter.invalidate_caches`` re-read an archive's directory
+    only when the archive's ``(st_mtime_ns, st_size)`` changed.
+
+    PySpark's worker calls ``importlib.invalidate_caches()`` at the start
+    of every task (``worker_util.setup_spark_files``).  On Python 3.11 each
+    cached zipimporter then re-reads its whole archive directory, once per
+    importer: pyspark.zip's 1,667 entries about 16 times, 0.13-0.18 s of
+    CPU per task.  Python 3.12 refills that cache lazily, so there this
+    changes nothing.  Idempotent; called from the worker-side function."""
+    import zipimport
+
+    orig = zipimport.zipimporter.invalidate_caches
+    if sys.version_info >= (3, 12) or getattr(orig, "stat_keyed", False):
+        return
+    seen: dict = {}  # archive -> (mtime_ns, size) at its last re-read
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+            key = (st.st_mtime_ns, st.st_size)
+        except OSError:
+            key = None
+        files = zipimport._zip_directory_cache.get(self.archive)
+        if key is not None and files is not None and seen.get(self.archive) == key:
+            self._files = files
+            return
+        orig(self)
+        seen[self.archive] = key
+
+    invalidate_caches.stat_keyed = True
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
 
 
 def _partition_id() -> int:
@@ -122,7 +216,7 @@ def _walk(htmls: list, params: ExtractParams) -> _Columns:
 
     for html in htmls:
         try:
-            assembled = _assembled_blocks(html)
+            assembled = _prefix(html)
         except Exception:
             d_text.append(None)
             d_conf.append(0.0)
@@ -380,6 +474,7 @@ def make_extract_arrow_fn(params: ExtractParams):
     feats_t = aschema.field("features").type
 
     def fn(it):
+        _reuse_zip_directories()
         pid = _partition_id()
         for rb in it:
             names = rb.schema.names

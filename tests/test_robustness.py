@@ -3,6 +3,7 @@ flattening check (SURVEY.md section 7.3.5)."""
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -255,30 +256,21 @@ def test_assemble_block_matches_per_char_reference(parts, rtl, btt, join, tags):
     assert _assemble_block(raw) == _assemble_per_char(raw)
 
 
-#: hostile page families as html(n units); each must parse in linear time
-_FAMILIES = {
-    "style_soup": lambda n: "<p>" + " ".join("<b>w%d</b>" % i for i in range(n)) + "</p>",
-    "unclosed_b": lambda n: "<p>" + "".join("<b>w%d word " % i for i in range(n)),
-    "open_comment": lambda n: "<p>" + "".join("<!-- c%d> w%d " % (i, i) for i in range(n)),
-    "open_cdata": lambda n: "<p>" + "".join("<![CDATA[ c%d> w%d " % (i, i) for i in range(n)),
-    "unclosed_p": lambda n: "".join("<p>w%d word " % i for i in range(n)),
-    "stray_closers": lambda n: "<p>" + "".join("</b></i></p></div>w%d " % i for i in range(n)),
-    "nested_divs": lambda n: "".join("<div>w%d " % i for i in range(n)) + "</div>" * n,
-    "link_soup": lambda n: "<p>" + " ".join("<a href=x%d>w%d</a>" % (i, i) for i in range(n)) + "</p>",
-    "open_script": lambda n: "".join("<p>w%d word</p>" % i for i in range(n // 2))
-    + "<script>" + "".join("<p>s%d</p>" % i for i in range(n // 2)),
-}
-
-
-def test_block_walk_cost_grows_linearly():
+def test_block_walk_cost_grows_linearly(monkeypatch):
     """Complexity guard: ``kernel._walk`` at block level spends about the
     same CPU per KB on a page of n units as on one of 4n, for every
-    hostile family (best of 3 process-CPU timings; linear reads ~1x, a
-    quadratic shape ~4x)."""
+    hostile family and for both prefix paths, the compiled one and
+    ``oracle._assembled_blocks`` (best of 3 process-CPU timings; linear
+    reads ~1x, a quadratic shape ~4x)."""
     import time
 
-    from ocrd_tesserocr_spark.kernel import _walk
-    from ocrd_tesserocr_spark.oracle import ExtractParams, resolve_params
+    from ocrd_tesserocr_spark import kernel
+    from ocrd_tesserocr_spark.corpus import HOSTILE_FAMILIES
+    from ocrd_tesserocr_spark.oracle import (
+        ExtractParams,
+        _assembled_blocks,
+        resolve_params,
+    )
 
     params = resolve_params(ExtractParams(textequiv_level="block"))
 
@@ -286,16 +278,58 @@ def test_block_walk_cost_grows_linearly():
         best = float("inf")
         for _ in range(3):
             t = time.process_time()
-            _walk([html], params)
+            kernel._walk([html], params)
             best = min(best, time.process_time() - t)
         return best * 1e6 / (len(html) / 1024)
 
     n = 2000
     growth = {}
-    for name, page in _FAMILIES.items():
-        small = ("<html><body>%s</body></html>" % page(n)).encode()
-        large = ("<html><body>%s</body></html>" % page(4 * n)).encode()
-        assert len(small) >= 20_000, name
-        growth[name] = round(us_per_kb(large) / us_per_kb(small), 2)
-    slow = {name: g for name, g in growth.items() if g > 2.5}
+    prefixes = {kernel.PREFIX_IMPL: kernel._prefix, "python": _assembled_blocks}
+    for impl, prefix in prefixes.items():
+        monkeypatch.setattr(kernel, "_prefix", prefix)
+        for name, page in HOSTILE_FAMILIES.items():
+            small = ("<html><body>%s</body></html>" % page(n)).encode()
+            large = ("<html><body>%s</body></html>" % page(4 * n)).encode()
+            assert len(small) >= 20_000, name
+            growth[impl, name] = round(us_per_kb(large) / us_per_kb(small), 2)
+    slow = {key: g for key, g in growth.items() if g > 2.5}
     assert not slow, "superlinear us/KB growth: %s (all: %s)" % (slow, growth)
+
+
+@settings(max_examples=300, deadline=None)
+@given(_chunks)
+def test_compiled_prefix_equals_oracle_prefix_on_tag_soup(chunks):
+    """The kernel's prefix (compiled where gcc is present) returns the
+    same tuples as ``oracle._assembled_blocks`` for any tag soup, as
+    UTF-8 bytes and as str."""
+    from ocrd_tesserocr_spark.kernel import _prefix
+    from ocrd_tesserocr_spark.oracle import _assembled_blocks
+
+    html = "<html><body>" + "".join(chunks) + "</body></html>"
+    assert _prefix(html) == _assembled_blocks(html)
+    payload = html.encode("utf-8", "surrogatepass")
+    try:
+        want = _assembled_blocks(payload)
+    except UnicodeDecodeError:
+        with pytest.raises(UnicodeDecodeError):
+            _prefix(payload)
+    else:
+        assert _prefix(payload) == want
+
+
+_attr_text = st.text(alphabet=' \t\xa0\u2003="\'/&#;0-_:dirtlbDIRTLa-jonxe', max_size=40)
+
+
+@settings(max_examples=400, deadline=None)
+@given(st.lists(st.sampled_from(
+    [" dir", " DIR", " data-join", " data-line-order", "=", " = ", '"rtl"', "'ltr'",
+     "rtl", "btt", "Bottom-To-Top", "&#114;tl", '"', "'", " x"]) | _attr_text))
+def test_compiled_prefix_reads_tag_attributes_like_the_oracle(parts):
+    """dir=, data-join and data-line-order, read the way
+    ``dict(_ATTR_RE.findall(attrs))`` reads them, for any attribute text."""
+    from ocrd_tesserocr_spark.kernel import _prefix
+    from ocrd_tesserocr_spark.oracle import _assembled_blocks
+
+    attrs = "".join(parts) if isinstance(parts, list) else parts
+    html = "<p%s>a <b>b</b><br>c</p><div%s>d</div>e" % (attrs, attrs)
+    assert _prefix(html) == _assembled_blocks(html)

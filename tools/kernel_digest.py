@@ -10,9 +10,8 @@ Each batch is also compared with the reference batch built from
 ``oracle.extract_document`` dicts (``tests.conftest.dict_path_batch``).
 
 The corpora are the sf directories' pages, the hand-written hostile pages
-and ``soup``: a fixed-seed corpus of tag soups (self-closed tags with and
-without ``dir=``, ``data-join``/``data-line-order``, open and closed
-comments/CDATA, entities) that reaches the tokenizer's rarer paths.
+and ``soup``: ``corpus.soup_pages()``, a fixed-seed corpus of tag soups
+that reaches the tokenizer's rarer paths.
 
     python tools/kernel_digest.py                 # sf0.001, sf0.01, hostile, soup
     python tools/kernel_digest.py SF_DIR [...]    # other sf directories
@@ -32,7 +31,6 @@ import io
 import json
 import os
 import pickle
-import random
 import shutil
 import subprocess
 import sys
@@ -43,58 +41,6 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 BATCH_ROWS = 8192
-SOUP_DOCS = 5000
-SOUP_SEED = 13
-
-#: tag names of the soup: block, style, link, boilerplate, void, skip and
-#: plain tags
-_SOUP_TAGS = (
-    "p", "div", "li", "h1", "h2", "td", "th", "pre", "blockquote", "dd",
-    "b", "i", "code", "a", "nav", "header", "footer", "aside", "span", "br",
-    "hr", "img", "script", "dt", "h3", "table", "tr", "em",
-    "section", "figcaption", "caption",
-)
-_SOUP_ATTRS = (
-    ' dir="rtl"', " dir=ltr", ' data-join="1"', " data-line-order=btt",
-    " data-line-order='bottom-to-top'", ' href="x"', " DIR='RTL'",
-)
-_SOUP_WORDS = (
-    "alpha", "beta", "gamma", "delta", "0o1lI", "x", "אב",
-    "&amp;", "&lt;b&gt;", "&#1488;", "&nbsp;", "a&b", " ", "\n", "  \t ",
-)
-_SOUP_MARKUP = (
-    "<!-- c -->", "<!-- open", "<![CDATA[ d ]]>", "<![CDATA[ open",
-    "<!DOCTYPE html>", "<?bogus?>", "</ p>", "<>",
-)
-
-
-def _soup_token(rng: random.Random) -> str:
-    r = rng.random()
-    if r < 0.45:
-        tag = rng.choice(_SOUP_TAGS)
-        if rng.random() < 0.5:
-            attrs = "".join(
-                rng.choice(_SOUP_ATTRS) for _ in range(rng.randint(0, 2))
-            )
-            return "<%s%s%s>" % (tag, attrs, "/" if rng.random() < 0.25 else "")
-        return "</%s>" % tag
-    if r < 0.9:
-        return " ".join(rng.choice(_SOUP_WORDS) for _ in range(rng.randint(1, 4)))
-    return rng.choice(_SOUP_MARKUP)
-
-
-def soup_pages(n: int = SOUP_DOCS, seed: int = SOUP_SEED) -> list:
-    """``n`` seeded tag-soup pages as (url, html) records, in url order."""
-    rng = random.Random(seed)
-    return [
-        {
-            "url": "soup://%06d" % i,
-            "html": "".join(
-                _soup_token(rng) for _ in range(rng.randint(1, 40))
-            ).encode("utf-8"),
-        }
-        for i in range(n)
-    ]
 
 
 def digest(fn, params, recs: list) -> tuple[str, bool]:
@@ -176,7 +122,7 @@ def main(argv: list) -> int:
             print(json.dumps(digest_lines(pickle.load(f))))
         return 0
 
-    from ocrd_tesserocr_spark.corpus import hostile_pages, pages_records
+    from ocrd_tesserocr_spark.corpus import hostile_pages, pages_records, soup_pages
 
     if args.sf_dirs:
         sf_dirs = args.sf_dirs
