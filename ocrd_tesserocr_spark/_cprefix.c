@@ -913,6 +913,10 @@ static PyObject *zero_float;
 static PyObject *assembled_blocks(PyObject *self, PyObject *html) {
     (void)self;
     PyObject *str;
+    if (py_unescape == NULL || py_fallback == NULL) {
+        PyErr_SetString(PyExc_RuntimeError, "_cprefix.setup() was not called");
+        return NULL;
+    }
     if (html == Py_None) {
         PyErr_SetString(PyExc_ValueError, "null payload");
         return NULL;
